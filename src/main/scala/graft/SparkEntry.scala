@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.fs.{FeatureCatalog, FeatureDef, FeatureGroup, RecordLog, Serving}
 import graft.functions.{TextFns, VectorFns}
-import graft.operators.{Bpe, Dedup, IncrementalAgg, Labels, Packing, Profile, Sampling, Scd2, Sessionize, Similarity, StableIds, ZOrder}
+import graft.operators.{Bpe, Dedup, IncrementalAgg, Labels, Packing, Profile, Quantizer, Sampling, Scd2, Sessionize, Similarity, Sizing, StableIds, ZOrder}
 
 /** Driver contract: named queries + DuckDB oracle SQL (SURVEY.md §2).
   *
@@ -4974,8 +4974,9 @@ $roundCtes"""
   }
 
   /** SemDeDup at CONSTANT occupancy through the two-level quantizer
-    * ([[Similarity.semDedupPairsHier]], r14 — VERDICT r13's one
-    * `weak` closed): same pair semantics as q_semdedup, but occupancy
+    * ([[Similarity.semDedupPairs]] over `Sizing.TwoLevel`, r14 —
+    * VERDICT r13's one `weak` closed): same pair semantics as
+    * q_semdedup, but occupancy
     * is pinned at 32 FOREVER — per-cell pair work and per-task memory
     * stop growing with the corpus (the flat balanced dial's √N
     * occupancy OOMed 32 threads at sf100), at 2√nCells assignment
@@ -4986,9 +4987,8 @@ $roundCtes"""
       val emb = Tables.embeddings(s, d)
       val n = emb.count()
       val occ = 32 // CONSTANT — the hierarchy's whole point
-      val (nc, nf) = Similarity.hierCells(n, occ)
-      Similarity.semDedupPairsHier(emb, "vec_id", "embedding",
-          nCoarse = nc, nFinePerCoarse = nf, trainIters = 2,
+      Similarity.semDedupPairs(emb, "vec_id", "embedding",
+          nCells = Sizing.TwoLevel(occ).quantizer(n), trainIters = 2,
           trainFraction = 0.25, threshold = 0.35, maxCell = 64 * occ)
         .orderBy(col("id_a"), col("id_b"))
     },
@@ -5019,14 +5019,13 @@ $roundCtes"""
       val emb = Tables.embeddings(s, d)
       val n = emb.count()
       val occ = 32
-      val (nc, nf) = Similarity.hierCells(n, occ)
       // the regime dial rides as a PARAMETER (r17, VERDICT r16 #3 —
       // retiring the process-global sys.props mutation that was only
       // safe because Verify/Bench build plans single-threaded): every
       // fine-level walk in the descent sees broadcastMaxRows = 1 and
       // takes the parent-keyed shuffle join
-      val out = Similarity.semDedupPairsHier(emb, "vec_id",
-          "embedding", nCoarse = nc, nFinePerCoarse = nf,
+      val out = Similarity.semDedupPairs(emb, "vec_id",
+          "embedding", nCells = Sizing.TwoLevel(occ).quantizer(n),
           trainIters = 2, trainFraction = 0.25, threshold = 0.35,
           maxCell = 64 * occ, fineBroadcastRows = 1L)
         .orderBy(col("id_a"), col("id_b"))
@@ -5061,16 +5060,16 @@ $roundCtes"""
       WHERE sim >= 0.35 ORDER BY id_a, id_b"""))
 
   /** All-pairs k-NN graph at CONSTANT occupancy
-    * ([[Similarity.knnGraphHier]]) — q_knn_graph's scale mode, same
-    * ranking semantics, same shared hierarchical-Lloyd oracle. */
+    * ([[Similarity.knnGraph]] over `Sizing.TwoLevel`) — q_knn_graph's
+    * scale mode, same ranking semantics, same shared
+    * hierarchical-Lloyd oracle. */
   private val knnGraphHierQ = Q("q_knn_graph_h",
     (s, d) => {
       val emb = Tables.embeddings(s, d)
       val n = emb.count()
       val occ = 32
-      val (nc, nf) = Similarity.hierCells(n, occ)
-      Similarity.knnGraphHier(emb, "vec_id", "embedding", k = 5,
-          nCoarse = nc, nFinePerCoarse = nf, trainIters = 2,
+      Similarity.knnGraph(emb, "vec_id", "embedding", k = 5,
+          nCells = Sizing.TwoLevel(occ).quantizer(n), trainIters = 2,
           trainFraction = 0.25, maxCell = 64 * occ)
         .orderBy(col("query_id"), col("rank"))
     },
@@ -5090,8 +5089,9 @@ $roundCtes"""
       WHERE rank <= 5 ORDER BY query_id, rank"""))
 
   /** SemDeDup under the LOG-DEPTH tree quantizer
-    * ([[Similarity.semDedupPairsTree]], r14) — the asymptotic scale
-    * mode past q_semdedup_h's fixed two levels: constant occupancy
+    * ([[Similarity.semDedupPairs]] over `Sizing.Tree`, r14) — the
+    * asymptotic scale mode past q_semdedup_h's fixed two levels:
+    * constant occupancy
     * (linear pair work, flat per-task memory) with pinned branching
     * 64, so per-row assignment is branch·⌈log₆₄ nCells⌉ cosines —
     * O(N log N) total vs the two-level split's N^1.5 (which measured
@@ -5107,12 +5107,11 @@ $roundCtes"""
   private val semDedupTreeQ = Q("q_semdedup_t",
     (s, d) => {
       val emb = Tables.embeddings(s, d)
-      requireOracleDepth("q_semdedup_t",
-        Similarity.treeLevelSizes(emb.count(), 32, branch = 64), 1)
-      Similarity.semDedupPairsTree(
-          emb, "vec_id", "embedding",
-          targetOccupancy = 32, branch = 64, trainIters = 2,
-          trainFraction = 0.25, threshold = 0.35, maxCell = 64 * 32)
+      val q = Sizing.Tree(32, branch = 64).quantizer(emb.count())
+      requireOracleDepth("q_semdedup_t", q.sizes, 1)
+      Similarity.semDedupPairs(emb, "vec_id", "embedding", nCells = q,
+          trainIters = 2, trainFraction = 0.25, threshold = 0.35,
+          maxCell = 64 * 32)
         .orderBy(col("id_a"), col("id_b"))
     },
     Some(lloydAssignSqlExpr(
@@ -5129,17 +5128,15 @@ $roundCtes"""
       WHERE sim >= 0.35 ORDER BY id_a, id_b"""))
 
   /** All-pairs k-NN graph under the log-depth tree quantizer
-    * ([[Similarity.knnGraphTree]]) — q_semdedup_t's graph twin; same
-    * depth-at-verified-scale oracle contract. */
+    * ([[Similarity.knnGraph]] over `Sizing.Tree`) — q_semdedup_t's
+    * graph twin; same depth-at-verified-scale oracle contract. */
   private val knnGraphTreeQ = Q("q_knn_graph_t",
     (s, d) => {
       val emb = Tables.embeddings(s, d)
-      requireOracleDepth("q_knn_graph_t",
-        Similarity.treeLevelSizes(emb.count(), 32, branch = 64), 1)
-      Similarity.knnGraphTree(
-          emb, "vec_id", "embedding", k = 5,
-          targetOccupancy = 32, branch = 64, trainIters = 2,
-          trainFraction = 0.25, maxCell = 64 * 32)
+      val q = Sizing.Tree(32, branch = 64).quantizer(emb.count())
+      requireOracleDepth("q_knn_graph_t", q.sizes, 1)
+      Similarity.knnGraph(emb, "vec_id", "embedding", k = 5, nCells = q,
+          trainIters = 2, trainFraction = 0.25, maxCell = 64 * 32)
         .orderBy(col("query_id"), col("rank"))
     },
     Some(lloydAssignSqlExpr(
@@ -5177,7 +5174,8 @@ $roundCtes"""
 
   /** Multi-level (log-depth tree) Lloyd replay (r15, VERDICT r14 #4)
     * — [[hierLloydAssignSqlExpr]] generalized to ARBITRARY depth at a
-    * PINNED branch, mirroring [[Similarity.kmeansFitTree]] exactly:
+    * PINNED branch, mirroring [[Similarity.kmeansFit]]'s descent
+    * exactly:
     * nCells = ⌈n/occ⌉ (uncapped), the coarse size = nCells
     * ceil-divided by `branch` (depth−1) times, every deeper level
     * seeds `branch` smallest-(md5, id) FULL-parent-assignment members
@@ -5302,8 +5300,8 @@ $roundCtes"""
       require(sizes.length == 3,
         s"q_semdedup_t2: corpus pin broken — depth ${sizes.length} " +
           "!= 3 (the declared oracle unrolls exactly 2 fine levels)")
-      Similarity.semDedupPairsTree(emb, "vec_id", "embedding",
-          targetOccupancy = 8, branch = 4, trainIters = 2,
+      Similarity.semDedupPairs(emb, "vec_id", "embedding",
+          nCells = Quantizer.Levels(sizes), trainIters = 2,
           trainFraction = 0.25, threshold = 0.35, maxCell = 64 * 8)
         .orderBy(col("id_a"), col("id_b"))
     },
@@ -5320,14 +5318,14 @@ $roundCtes"""
       WHERE sim >= 0.35 ORDER BY id_a, id_b"""))
 
   /** Persisted HIERARCHICAL k-NN graph index lifecycle
-    * ([[Similarity.buildKnnGraphIndexHier]] →
+    * ([[Similarity.buildKnnGraphIndex]] over `Sizing.TwoLevel` →
     * [[Similarity.appendToKnnGraphIndex]] →
     * [[Similarity.knnGraphFromIndex]], r14): the index family's
     * constant-occupancy scale mode under the hash gate — the
     * two-level quantizer trains and FREEZES on the vec_id ≥ 50
     * corpus (coarse literal + persisted fine table), the vec_id < 50
     * batch appends through the SAME family append path (which
-    * detects `centroids_fine` and assigns coarse-then-fine), and the
+    * walks the persisted fine level coarse-then-fine), and the
     * serve fold must equal the full within-cell top-k over the union
     * under the frozen quantizer. Oracle: the hierarchical Lloyd CTEs
     * on the build corpus only, the batch assigned against the frozen
@@ -5339,9 +5337,12 @@ $roundCtes"""
       // by harness contract — the q_knn_index convention
       val indexDir = s"/tmp/graft_knn_hier/$tag"
       val emb = Tables.embeddings(s, d)
-      Similarity.buildKnnGraphIndexHier(emb.filter(col("vec_id") >= 50),
-        "vec_id", "embedding", indexDir, k = 5, targetOccupancy = 32,
-        trainIters = 2, trainFraction = 0.25)
+      val build = emb.filter(col("vec_id") >= 50)
+      val sizing = Sizing.TwoLevel(32)
+      Similarity.buildKnnGraphIndex(build, "vec_id", "embedding",
+        indexDir, k = 5, nCells = sizing.quantizer(build.count()),
+        trainIters = 2, trainFraction = 0.25, maxCell = 64 * 32,
+        sizing = sizing)
       Similarity.appendToKnnGraphIndex(emb.filter(col("vec_id") < 50),
         "vec_id", "embedding", indexDir, batchId = 0L)
       Similarity.knnGraphFromIndex(s, indexDir)
@@ -5381,7 +5382,7 @@ $roundCtes"""
       WHERE rank <= 5 ORDER BY query_id, rank"""))
 
   /** Persisted TREE k-NN graph index lifecycle
-    * ([[Similarity.buildKnnGraphIndexTree]] →
+    * ([[Similarity.buildKnnGraphIndex]] over `Sizing.Tree` →
     * [[Similarity.appendToKnnGraphIndex]] →
     * [[Similarity.knnGraphFromIndex]], r15 — VERDICT r14 #3: the
     * measured-best log-depth quantizer persisted as an index mode):
@@ -5404,11 +5405,12 @@ $roundCtes"""
       val indexDir = s"/tmp/graft_knn_tree/$tag"
       val emb = Tables.embeddings(s, d)
       val build = emb.filter(col("vec_id") >= 50)
-      requireOracleDepth("q_knn_index_t",
-        Similarity.treeLevelSizes(build.count(), 32, branch = 64), 1)
-      Similarity.buildKnnGraphIndexTree(build, "vec_id", "embedding",
-        indexDir, k = 5, targetOccupancy = 32, branch = 64,
-        trainIters = 2, trainFraction = 0.25)
+      val sizing = Sizing.Tree(32, branch = 64)
+      val q = sizing.quantizer(build.count())
+      requireOracleDepth("q_knn_index_t", q.sizes, 1)
+      Similarity.buildKnnGraphIndex(build, "vec_id", "embedding",
+        indexDir, k = 5, nCells = q, trainIters = 2,
+        trainFraction = 0.25, maxCell = 64 * 32, sizing = sizing)
       Similarity.appendToKnnGraphIndex(emb.filter(col("vec_id") < 50),
         "vec_id", "embedding", indexDir, batchId = 0L)
       Similarity.knnGraphFromIndex(s, indexDir)
@@ -5472,9 +5474,10 @@ $roundCtes"""
       require(sizes.length == 3,
         s"q_knn_index_t2: corpus pin broken — depth ${sizes.length} " +
           "!= 3 (the declared oracle unrolls exactly 2 fine levels)")
-      Similarity.buildKnnGraphIndexTree(build, "vec_id", "embedding",
-        indexDir, k = 5, targetOccupancy = 8, branch = 4,
-        trainIters = 2, trainFraction = 0.25)
+      Similarity.buildKnnGraphIndex(build, "vec_id", "embedding",
+        indexDir, k = 5, nCells = Quantizer.Levels(sizes),
+        trainIters = 2, trainFraction = 0.25, maxCell = 64 * 8,
+        sizing = Sizing.Tree(8, branch = 4))
       Similarity.appendToKnnGraphIndex(emb.filter(col("vec_id") < 50),
         "vec_id", "embedding", indexDir, batchId = 0L)
       Similarity.knnGraphFromIndex(s, indexDir)
@@ -6476,8 +6479,9 @@ ${pqPartsPivot(16)}
   /** Incremental SemDeDup against a HIERARCHICAL IVF index (r15,
     * VERDICT r14 #1 — the streaming semantic gate's family at
     * constant occupancy, hash-oracled end to end): the index builds
-    * with [[Similarity.buildIvfIndexHier]] on the vec_id ≥ 50 corpus
-    * (two-level quantizer FROZEN at build: coarse persisted +
+    * with [[Similarity.buildIvfIndex]] over `Sizing.TwoLevel` on the
+    * vec_id ≥ 50 corpus (two-level quantizer FROZEN at build: coarse
+    * persisted +
     * collected, fine persisted + joined), the vec_id < 50 batch is
     * FIRST APPENDED through the family-blind append (which walks the
     * persisted fine layer) and the probe then EXCLUDES that partition
@@ -6495,9 +6499,11 @@ ${pqPartsPivot(16)}
       val indexDir = s"/tmp/graft_semdedup_append_h/$tag"
       val emb = Tables.embeddings(s, d)
       val occ = 32 // CONSTANT — the hierarchy's whole point
-      Similarity.buildIvfIndexHier(emb.filter(col("vec_id") >= 50),
-        "vec_id", "embedding", indexDir, targetOccupancy = occ,
-        trainIters = 2, trainFraction = 0.25)
+      val build = emb.filter(col("vec_id") >= 50)
+      val sizing = Sizing.TwoLevel(occ)
+      Similarity.buildIvfIndex(build, "vec_id", "embedding", indexDir,
+        nCells = sizing.quantizer(build.count()), trainIters = 2,
+        trainFraction = 0.25, maxCell = 64 * occ, sizing = sizing)
       Similarity.appendToIvfIndex(emb.filter(col("vec_id") < 50),
         "vec_id", "embedding", indexDir, batchId = 0L)
       Similarity.semDedupAgainstIndex(emb.filter(col("vec_id") < 50),
@@ -6542,8 +6548,8 @@ ${pqPartsPivot(16)}
   /** Incremental SemDeDup against a TREE IVF index (r16, VERDICT r15
     * #1 — the production semantic gate's ASYMPTOTIC mode, hash-oracled
     * end to end): the index builds with
-    * [[Similarity.buildIvfIndexTree]] on the vec_id ≥ 50 corpus
-    * (log-depth quantizer FROZEN at build: coarse persisted +
+    * [[Similarity.buildIvfIndex]] over `Sizing.Tree` on the vec_id ≥ 50
+    * corpus (log-depth quantizer FROZEN at build: coarse persisted +
     * collected, `centroids_level_<i>` persisted + joined), the
     * vec_id < 50 batch is FIRST APPENDED through the family-blind
     * append (the fineLevelPaths dispatch walks the levels) and the
@@ -6568,11 +6574,12 @@ ${pqPartsPivot(16)}
       val emb = Tables.embeddings(s, d)
       val occ = 32 // CONSTANT — the quantizer family's whole point
       val build = emb.filter(col("vec_id") >= 50)
-      requireOracleDepth("q_semdedup_append_t",
-        Similarity.treeLevelSizes(build.count(), occ, branch = 64), 1)
-      Similarity.buildIvfIndexTree(build, "vec_id", "embedding",
-        indexDir, targetOccupancy = occ, branch = 64,
-        trainIters = 2, trainFraction = 0.25)
+      val sizing = Sizing.Tree(occ, branch = 64)
+      val q = sizing.quantizer(build.count())
+      requireOracleDepth("q_semdedup_append_t", q.sizes, 1)
+      Similarity.buildIvfIndex(build, "vec_id", "embedding", indexDir,
+        nCells = q, trainIters = 2, trainFraction = 0.25,
+        maxCell = 64 * occ, sizing = sizing)
       Similarity.appendToIvfIndex(emb.filter(col("vec_id") < 50),
         "vec_id", "embedding", indexDir, batchId = 0L)
       Similarity.semDedupAgainstIndex(emb.filter(col("vec_id") < 50),

@@ -62,7 +62,7 @@ private[graft] object PathSigCache {
           .append(':').append(f.getModificationTime).append(';')
       }
       Some(sb.toString)
-    } catch { case _: Throwable => None }
+    } catch { case _: java.io.IOException => None }
 
   /** `compute`, memoized on (path listing signature, use). */
   def cached[T](spark: SparkSession, path: String, use: String)(

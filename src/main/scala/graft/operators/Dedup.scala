@@ -701,9 +701,8 @@ object Dedup {
     * so an append racing a compactor destroys the compactor's staged
     * fold. Quiescence between appends and maintenance is therefore
     * part of the append contract too, not only the compact side's;
-    * [[graft.fs.DirLock]] is the opt-in cross-process guard — the
-    * `*Locked` variants take it in BOTH paths
-    * ([[appendToSpanIndexLocked]], [[compactSpanIndexLocked]]). */
+    * [[IndexLayout.locked]] is the opt-in cross-process guard — wrap
+    * BOTH paths in it. */
   def buildSpanIndex(corpus: DataFrame, textCol: String, idCol: String,
       k: Int, indexDir: String): Unit = {
     IndexLayout.clear(corpus.sparkSession, s"$indexDir/spans")
@@ -729,19 +728,6 @@ object Dedup {
     spanIndexDelta(batch, textCol, idCol, k)
       .write.mode("overwrite").parquet(s"$indexDir/spans/batch_id=$batchId")
   }
-
-  /** [[appendToSpanIndex]] under the cross-process [[graft.fs.DirLock]]
-    * — the opt-in serialization for deployments where two ingest jobs
-    * could race the same batchId or overlap a build/compact (VERDICT
-    * r11 #8: the catalog's steal-after-crash lock, proven under real
-    * process death, taken around an index mutation). The lock lives in
-    * the index's SIBLING dir ([[IndexLayout.lockDir]], r13) so a
-    * staged whole-index rebuild swap can't destroy the holder's own
-    * lock; every family's `*Locked` variant shares that path. */
-  def appendToSpanIndexLocked(batch: DataFrame, textCol: String,
-      idCol: String, k: Int, indexDir: String, batchId: Long): Unit =
-    graft.fs.DirLock.withLock(IndexLayout.lockDir(indexDir))(
-      appendToSpanIndex(batch, textCol, idCol, k, indexDir, batchId))
 
   /** Compact a [[buildSpanIndex]] index's delta partitions to one
     * folded `batch_id=-1` base (VERDICT r11 #7): every append leaves
@@ -774,35 +760,6 @@ object Dedup {
       df.select(col("id"), col("band"), col("bucket")).distinct()
         .repartitionByRange(col("band"), col("bucket"))
         .sortWithinPartitions(col("band"), col("bucket")))
-
-  // ---- cross-process Locked variants (r13, VERDICT r12 #6) ---------
-  // Every index family's mutation surface under the SAME proven
-  // DirLock guard (the appendToSpanIndexLocked rationale): appends and
-  // maintenance are mutually destructive when interleaved — an
-  // append's recover-before-write deletes a live compact's unmarked
-  // stage (ADVICE r12) — so the lock must wrap BOTH paths to close
-  // the race, not just one side's.
-
-  /** [[appendToMinhashIndex]] under the cross-process
-    * [[graft.fs.DirLock]]. */
-  def appendToMinhashIndexLocked(batch: DataFrame, textCol: String,
-      idCol: String, indexDir: String, batchId: Long): Unit =
-    graft.fs.DirLock.withLock(IndexLayout.lockDir(indexDir))(
-      appendToMinhashIndex(batch, textCol, idCol, indexDir, batchId))
-
-  /** [[compactSpanIndex]] under the cross-process
-    * [[graft.fs.DirLock]]. */
-  def compactSpanIndexLocked(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, excludeBatchId: Option[Long] = None): Unit =
-    graft.fs.DirLock.withLock(IndexLayout.lockDir(indexDir))(
-      compactSpanIndex(spark, indexDir, excludeBatchId))
-
-  /** [[compactMinhashIndex]] under the cross-process
-    * [[graft.fs.DirLock]]. */
-  def compactMinhashIndexLocked(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, excludeBatchId: Option[Long] = None): Unit =
-    graft.fs.DirLock.withLock(IndexLayout.lockDir(indexDir))(
-      compactMinhashIndex(spark, indexDir, excludeBatchId))
 
   private def spanIndexDelta(df: DataFrame, textCol: String,
       idCol: String, k: Int): DataFrame =

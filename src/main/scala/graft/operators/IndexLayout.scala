@@ -160,10 +160,23 @@ private[graft] object IndexLayout {
     * [[stagedRebuild]] swap deletes the live dir, and a lock stored
     * there would be destroyed BY the guarded operation (the holder
     * would then fail its own release as "stolen"). One path rule for
-    * every family's `*Locked` variant, so appends, compactions, and
-    * rebuilds of the same index all serialize on the same file. */
+    * every family, so appends, compactions, and rebuilds of the same
+    * index all serialize on the same file. */
   def lockDir(indexDir: String): String =
     indexDir.stripSuffix("/") + "__lock"
+
+  /** Run one index mutation under the index's cross-process
+    * [[graft.fs.DirLock]] (at [[lockDir]]) — the opt-in serialization
+    * for deployments where two ingest jobs could race the same batchId
+    * or overlap a compact/rebuild (the catalog's steal-after-crash
+    * lock, proven under real process death). Appends and maintenance
+    * are mutually destructive when interleaved — an append's
+    * recover-before-write deletes a live compact's unmarked stage — so
+    * wrap BOTH sides of every family's mutation surface:
+    * `locked(dir)(Similarity.appendToIvfIndex(…))`,
+    * `locked(dir)(Dedup.compactSpanIndex(…))`, and so on. */
+  def locked[T](indexDir: String)(op: => T): T =
+    graft.fs.DirLock.withLock(lockDir(indexDir))(op)
 
   /** Run independent Spark actions CONCURRENTLY from a small driver
     * thread pool (r18, guide §2.6 / VERDICT r17 #1): a build's tiny

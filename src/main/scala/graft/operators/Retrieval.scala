@@ -414,27 +414,6 @@ object Retrieval {
         .coalesce(1))
   }
 
-  // ---- cross-process Locked variants (r13, VERDICT r12 #6) ---------
-  // Appends and maintenance are mutually destructive when interleaved
-  // (an append's recover-before-write deletes a live compact's
-  // unmarked stage — ADVICE r12), so the proven DirLock guard wraps
-  // BOTH paths; see Dedup.appendToSpanIndexLocked for the rationale.
-
-  /** [[appendToKeywordIndex]] under the cross-process
-    * [[graft.fs.DirLock]]. */
-  def appendToKeywordIndexLocked(batch: DataFrame, idCol: String,
-      textCol: String, indexDir: String, batchId: Long): Unit =
-    graft.fs.DirLock.withLock(IndexLayout.lockDir(indexDir))(
-      appendToKeywordIndex(batch, idCol, textCol, indexDir, batchId))
-
-  /** [[compactKeywordIndex]] under the cross-process
-    * [[graft.fs.DirLock]]. */
-  def compactKeywordIndexLocked(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, idCol: String,
-      excludeBatchId: Option[Long] = None): Unit =
-    graft.fs.DirLock.withLock(IndexLayout.lockDir(indexDir))(
-      compactKeywordIndex(spark, indexDir, idCol, excludeBatchId))
-
   /** [[bm25Search]] against a PERSISTED [[buildKeywordIndex]] index —
     * identical ranking arithmetic (the roundtrip must be invisible,
     * which is what the shared oracle checks); the plan difference is

@@ -422,9 +422,9 @@ object Similarity {
     * scan costs more than a slightly-unconverged quantizer; at that
     * scale `trainFraction` is the other dial (train on 1%, assign
     * 100%). */
-  def kmeansFit(corpus: DataFrame, idCol: String, vecCol: String,
-      nCells: Int, iters: Int = 2, shift: Int = 20,
-      trainFraction: Double = 1.0): Seq[(Long, Seq[Double])] = {
+  private def fitFlat(corpus: DataFrame, idCol: String, vecCol: String,
+      nCells: Int, iters: Int, shift: Int,
+      trainFraction: Double): Seq[(Long, Seq[Double])] = {
     var cent = seedRows(corpus, idCol, vecCol, nCells)
     val train = trainSide(corpus, idCol, trainFraction)
     var it = 0
@@ -443,6 +443,28 @@ object Similarity {
     }
     cent
   }
+
+  /** A trained quantizer: the driver-side coarse centroids plus one
+    * (ccell, cell_id, cv) frame per deeper level — none for a flat
+    * quantizer. Deeper levels are never driver-collected. */
+  final case class Centroids(coarse: Seq[(Long, Seq[Double])],
+      levels: Seq[DataFrame] = Nil)
+
+  /** Train the Lloyd quantizer `nCells` describes. A flat (or
+    * one-level) quantizer is the [[fitFlat]] literal-argmax Lloyd
+    * above; `Levels(sizes)` trains the coarse level the same way and
+    * every deeper level DISTRIBUTED under the frozen levels above it
+    * ([[trainFineLevel]]), keyed by its parent level's cell id —
+    * seeds, sample, update arithmetic and tie rules all match the flat
+    * path, so a one-coarse-cell quantizer reproduces the flat one
+    * exactly (the equivalence spec's anchor). Deterministic and
+    * SQL-replayable end to end (q_semdedup_h and q_semdedup_t2 unroll
+    * every level as Lloyd CTEs). */
+  def kmeansFit(corpus: DataFrame, idCol: String, vecCol: String,
+      nCells: Quantizer, iters: Int = 2, shift: Int = 20,
+      trainFraction: Double = 1.0): Centroids =
+    fitAssigned(corpus, idCol, vecCol, nCells, iters, shift,
+      trainFraction, -1L, col(idCol).cast("long"))._1
 
   /** SemDeDup (Abbas et al. 2023): semantic near-duplicate PAIRS found
     * by clustering the embedding space and comparing only WITHIN each
@@ -474,18 +496,24 @@ object Similarity {
     * `q_semdedup` derives nCells from a corpus count via
     * [[balancedCells]] (√N occupancy — see the assignment-term
     * tradeoff on [[cellsForOccupancy]]) and the oracle replays the
-    * dial as a scalar-subquery LIMIT over the same corpus CTE. */
+    * dial as a scalar-subquery LIMIT over the same corpus CTE.
+    *
+    * CONSTANT occupancy (the scale mode): pass
+    * `Sizing.TwoLevel(occ).quantizer(n)` or
+    * `Sizing.Tree(occ, branch).quantizer(n)` — the cell population no
+    * longer grows with the corpus, so per-cell pair work and per-task
+    * memory are constants while assignment pays Σ level sizes sims per
+    * row; recall narrows accordingly (smaller cells see fewer
+    * candidates). */
   def semDedupPairs(corpus: DataFrame, idCol: String, vecCol: String,
-      nCells: Int, trainIters: Int = 2, trainFraction: Double = 1.0,
-      threshold: Double, maxCell: Int = 2000): DataFrame = {
-    val cent = kmeansFit(corpus, idCol, vecCol, nCells, trainIters,
-      trainFraction = trainFraction)
-    val assigned = corpus.select(
-      col(idCol).cast("long").as("id"),
-      col(vecCol).cast("array<double>").as("v"),
-      cellOf(cent, col(vecCol)).as("cell"))
-    val capped = Guards.capBuckets(assigned, Seq("cell"), maxCell,
-      Some("semdedup_cells"))
+      nCells: Quantizer, trainIters: Int = 2, trainFraction: Double = 1.0,
+      threshold: Double, maxCell: Int = 2000,
+      fineBroadcastRows: Long = -1L): DataFrame = {
+    // the flat frame is a map-side fold, cheaper to recompute per side
+    // than to pin; the descent's is not
+    val capped = cappedCells(corpus, idCol, vecCol, nCells, trainIters,
+      trainFraction, maxCell, "semdedup_cells", fineBroadcastRows,
+      pin = nCells.sizes.length > 1)
     val a = capped.select(col("cell"), col("id").as("id_a"), col("v").as("va"))
     val b = capped.select(col("cell"), col("id").as("id_b"), col("v").as("vb"))
     a.join(b, Seq("cell"))
@@ -493,6 +521,23 @@ object Similarity {
       .withColumn("sim", round(VectorFns.cosineFast(col("va"), col("vb")), 6))
       .filter(col("sim") >= threshold)
       .select(col("cell"), col("id_a"), col("id_b"), col("sim"))
+  }
+
+  /** (id, v, cell) under a freshly trained `nCells` quantizer, cells
+    * over `maxCell` dropped ([[Guards.capBuckets]], observable under
+    * `observeAs`) — the input both self-join sides of
+    * [[semDedupPairs]] / [[knnGraph]] read, pinned once for them when
+    * `pin` (diamond DAGs recompute the assignment). */
+  private def cappedCells(corpus: DataFrame, idCol: String,
+      vecCol: String, nCells: Quantizer, trainIters: Int,
+      trainFraction: Double, maxCell: Int, observeAs: String,
+      fineBroadcastRows: Long, pin: Boolean): DataFrame = {
+    val (_, assigned) = fitAssigned(corpus, idCol, vecCol, nCells,
+      trainIters, 20, trainFraction, fineBroadcastRows,
+      col(idCol).cast("long"))
+    val capped = Guards.capBuckets(assigned, Seq("cell"), maxCell,
+      Some(observeAs))
+    if (pin) capped.localCheckpoint(false) else capped
   }
 
   /** The nCells that holds mean cell occupancy at `targetOccupancy`
@@ -602,53 +647,11 @@ object Similarity {
     require(nCoarse <= (1L << 16),
       s"hierCells: nCoarse=$nCoarse exceeds 2^16 — the coarse layer " +
         "rides a driver-side literal argmax and stops being a " +
-        "sensible plan here; use the log-depth TREE mode " +
-        "(treeLevelSizes/kmeansFitTree), whose per-level literals " +
-        "are branch-bounded at any corpus size")
+        "sensible plan here; size a log-depth Quantizer.Levels with " +
+        "treeLevelSizes (Sizing.Tree) instead, whose per-level " +
+        "literals are branch-bounded at any corpus size")
     val nFine = ((nCells + nCoarse - 1) / nCoarse).toInt
     (nCoarse.toInt, nFine)
-  }
-
-  /** Two-level coarse-then-fine Lloyd quantizer (r14, VERDICT r13 #1
-    * — the production answer the flat dial's scaladoc promised): fit
-    * the frozen COARSE layer with the plain [[kmeansFit]] (its
-    * centroids stay driver-side: nCoarse = √nCells rows, always
-    * bounded), then per coarse cell a FINE layer trained entirely
-    * DISTRIBUTED — seeds are each coarse cell's `nFinePerCoarse`
-    * smallest-(md5(id), id) FULL-corpus members (full corpus, not the
-    * train sample: every nonempty coarse cell must own ≥ 1 fine
-    * centroid or its members would silently drop out of the inner
-    * assignment join), iterations assign the train sample to its
-    * coarse cell's fine centroids through a broadcast join + the same
-    * native [[graft.plans.CentroidArgmax]] fold, and the fixed-point
-    * [[labelCentroids]] update folds per fine cell (fine cell ids are
-    * globally unique — they are seed corpus ids — so one flat keyed
-    * aggregate updates every coarse cell's layer at once). Cells that
-    * win no vectors keep their previous centroid, exactly like the
-    * flat path.
-    *
-    * Scale shape: the fine table is never driver-collected — it lives
-    * as an (nCells)-row DataFrame, reaches executors once per job as
-    * a broadcast of (ccell → cell_id-sorted struct array), and every
-    * assignment stays a zero-shuffle map-side fold of
-    * nCoarse + nFine ≈ 2√nCells cosines per row. With nCoarse = 1
-    * this degenerates to EXACTLY the flat [[kmeansFit]] (same seeds,
-    * same sample, same update arithmetic, same tie rules) — the
-    * equivalence spec's anchor. Deterministic and SQL-replayable end
-    * to end (q_semdedup_h unrolls both levels as Lloyd CTEs). */
-  def kmeansFitHier(corpus: DataFrame, idCol: String, vecCol: String,
-      nCoarse: Int, nFinePerCoarse: Int, iters: Int = 2,
-      shift: Int = 20, trainFraction: Double = 1.0,
-      fineBroadcastRows: Long = -1L)
-      : (Seq[(Long, Seq[Double])], DataFrame) = {
-    val vecs = vecsOf(corpus, idCol, vecCol)
-    val coarse = kmeansFit(vecs, "_id", "_v", nCoarse, iters, shift,
-      trainFraction)
-    val slim = vecs
-      .select(col("_id"), cellOf(coarse, col("_v")).as("ccell"))
-      .localCheckpoint(false) // 16 B/row — see vecsOf
-    (coarse, trainFineLevel(vecs, slim, nFinePerCoarse, iters, shift,
-      trainFraction, fineBroadcastRows))
   }
 
   /** The descent's ONE full-width materialization (r15, VERDICT r14
@@ -672,8 +675,8 @@ object Similarity {
       .localCheckpoint(false)
 
   /** Train ONE distributed fine level under a frozen parent
-    * assignment — the shared inner loop of [[kmeansFitHier]] (one
-    * call) and [[kmeansFitTree]] (one call per level). `vecs` is the
+    * assignment — the inner loop of [[kmeansFit]]'s descent, one
+    * call per level below the coarse one. `vecs` is the
     * pinned (_id, _v) table ([[vecsOf]]), `slim` the pinned
     * (_id, ccell) parent assignment: seeds = each parent cell's
     * `nFinePerCoarse` smallest-(md5, id) members of the FULL parent
@@ -775,10 +778,9 @@ object Similarity {
     * SEQUENTIALLY — concurrent plan construction in one JVM would
     * leak the forced regime into unrelated plans built inside the
     * try window. Callers that force a regime per call should thread
-    * the [[semDedupPairsHier]]/[[assignCellsHier]]/[[kmeansFitHier]]
-    * `fineBroadcastRows` PARAMETER instead (r17, VERDICT r16 #3 —
-    * q_semdedup_h_sj now does); this global stays as the
-    * whole-process default. */
+    * the [[semDedupPairs]] `fineBroadcastRows` PARAMETER instead
+    * (r17, VERDICT r16 #3 — q_semdedup_h_sj now does); this global
+    * stays as the whole-process default. */
   private[graft] def fineBroadcastMaxRows: Long =
     sys.props.get("graft.fineBroadcastMaxRows").map(_.toLong)
       .getOrElse(1L << 20)
@@ -843,71 +845,71 @@ object Similarity {
     sizes.reverse.toSeq
   }
 
-  /** Depth-d coarse-to-fine Lloyd quantizer (r14): level 1 is the
-    * plain driver-side [[kmeansFit]] (levelSizes.head cells — always
-    * ≤ branch, bounded), every deeper level trains fully DISTRIBUTED
-    * under the frozen levels above it via [[trainFineLevel]], each
-    * keyed by its parent level's cell id. Returns the coarse
-    * centroids plus one (ccell, cell_id, cv) frame per deeper level.
-    * [[kmeansFitHier]] is exactly the levelSizes = Seq(nCoarse,
-    * nFine) instance of this recursion (shared code path). */
-  def kmeansFitTree(corpus: DataFrame, idCol: String, vecCol: String,
-      levelSizes: Seq[Int], iters: Int = 2, shift: Int = 20,
-      trainFraction: Double = 1.0)
-      : (Seq[(Long, Seq[Double])], Seq[DataFrame]) = {
-    val (coarse, levels, _) = kmeansFitTreeAssigned(corpus, idCol,
-      vecCol, levelSizes, iters, shift, trainFraction)
-    (coarse, levels)
-  }
-
-  /** [[kmeansFitTree]] + the full-corpus assignment it necessarily
-    * computed while descending (the deepest `parentAssign` IS the
-    * final (id, v, cell) frame): [[semDedupPairsTree]]/[[knnGraphTree]]
-    * consume this instead of re-folding [[assignCellsTree]] over the
-    * corpus — the final Σ level sims per row was the single largest
-    * super-linearly-scaling term, and it was being paid twice. */
-  private def kmeansFitTreeAssigned(corpus: DataFrame, idCol: String,
-      vecCol: String, levelSizes: Seq[Int], iters: Int, shift: Int,
-      trainFraction: Double)
-      : (Seq[(Long, Seq[Double])], Seq[DataFrame], DataFrame) = {
-    require(levelSizes.nonEmpty, "kmeansFitTree: no levels")
-    val vecs = vecsOf(corpus, idCol, vecCol)
-    val coarse = kmeansFit(vecs, "_id", "_v", levelSizes.head,
-      iters, shift, trainFraction)
-    // per-level pin is the 16 B (_id, ccell) frame ONLY (r15, VERDICT
-    // r14 #6) — vectors stay in the one pinned vecs table and re-join
-    // co-partitioned (zero exchange of the wide side) wherever a level
-    // needs them
-    var slim = vecs
-      .select(col("_id"), cellOf(coarse, col("_v")).as("ccell"))
-      .localCheckpoint(false)
-    val levels = levelSizes.tail.map { n =>
-      val fine = trainFineLevel(vecs, slim, n, iters, shift,
+  /** Train `nCells` and assign the corpus under it: (Centroids,
+    * (id, v, cell)). THE VALUE PICKS THE PLAN:
+    *  - a flat (or one-level) quantizer runs the flat plan —
+    *    [[fitFlat]], then one literal argmax over `corpus` keyed by
+    *    `id` (the caller's id expression: each family stores its ids
+    *    as it always has). No pin, no extra job.
+    *  - longer `Levels` run the coarse-to-fine DESCENT: the coarse
+    *    level is [[fitFlat]] over the pinned [[vecsOf]] table, every
+    *    deeper level trains DISTRIBUTED under the frozen levels above
+    *    it ([[trainFineLevel]]), and the deepest parent assignment the
+    *    descent computes IS the returned (id, v, cell) frame — the
+    *    final Σ-level argmax is the largest super-linearly-scaling
+    *    term and is never paid twice (r14). `fineBroadcastRows` > 0
+    *    forces the [[joinFineSide]] regime of every level walk. */
+  private def fitAssigned(corpus: DataFrame, idCol: String,
+      vecCol: String, nCells: Quantizer, iters: Int, shift: Int,
+      trainFraction: Double, fineBroadcastRows: Long, id: Column)
+      : (Centroids, DataFrame) = nCells.sizes match {
+    case Seq(n) =>
+      val cent = fitFlat(corpus, idCol, vecCol, n, iters, shift,
         trainFraction)
-      slim = joinFineSide(slim.join(vecs, Seq("_id")), fine, "ccell")
-        .select(col("_id"),
-          graft.plans.CentroidArgmax.column(col("fines"), col("_v"))
-            .as("ccell"))
+      (Centroids(cent), corpus.select(id.as("id"),
+        col(vecCol).cast("array<double>").as("v"),
+        cellOf(cent, col(vecCol)).as("cell")))
+    case sizes =>
+      val vecs = vecsOf(corpus, idCol, vecCol)
+      val coarse = fitFlat(vecs, "_id", "_v", sizes.head, iters, shift,
+        trainFraction)
+      // per-level pin is the 16 B (_id, ccell) frame ONLY (r15, VERDICT
+      // r14 #6) — vectors stay in the one pinned vecs table and re-join
+      // co-partitioned (zero exchange of the wide side) wherever a level
+      // needs them
+      var slim = vecs
+        .select(col("_id"), cellOf(coarse, col("_v")).as("ccell"))
         .localCheckpoint(false)
-      fine
-    }
-    (coarse, levels, slim.join(vecs, Seq("_id"))
-      .select(col("_id").as("id"), col("_v").as("v"),
-        col("ccell").as("cell")))
+      val levels = sizes.tail.map { n =>
+        val fine = trainFineLevel(vecs, slim, n, iters, shift,
+          trainFraction, fineBroadcastRows)
+        slim = joinFineSide(slim.join(vecs, Seq("_id")), fine, "ccell",
+            fineBroadcastRows)
+          .select(col("_id"),
+            graft.plans.CentroidArgmax.column(col("fines"), col("_v"))
+              .as("ccell"))
+          .localCheckpoint(false)
+        fine
+      }
+      (Centroids(coarse, levels), slim.join(vecs, Seq("_id"))
+        .select(col("_id").as("id"), col("_v").as("v"),
+          col("ccell").as("cell")))
   }
 
-  /** Full-corpus assignment under a [[kmeansFitTree]] quantizer:
-    * coarse literal argmax, then one broadcast join + argmax per
+  /** Full-corpus assignment under a trained quantizer — (id, v, cell):
+    * coarse literal argmax, then one [[joinFineSide]] join + argmax per
     * deeper level — every fold map-side, the final label the deepest
-    * level's cell id. */
-  def assignCellsTree(corpus: DataFrame, idCol: String, vecCol: String,
-      coarse: Seq[(Long, Seq[Double])], levels: Seq[DataFrame])
-      : DataFrame = {
+    * level's cell id. The occupancy monitor composition: feed the
+    * result to [[Guards.oversizedBuckets]] to see which cells exceed
+    * the [[semDedupPairs]] cap (and whether the quantizer has fallen
+    * behind corpus growth). */
+  def assignCells(corpus: DataFrame, idCol: String, vecCol: String,
+      cent: Centroids): DataFrame = {
     var df = corpus.select(
-      idOrFail(col(idCol).cast("long"), "assignCellsTree").as("id"),
+      idOrFail(col(idCol).cast("long"), "assignCells").as("id"),
       col(vecCol).cast("array<double>").as("v"),
-      cellOf(coarse, col(vecCol)).as("cell"))
-    levels.foreach { fine =>
+      cellOf(cent.coarse, col(vecCol)).as("cell"))
+    cent.levels.foreach { fine =>
       df = joinFineSide(df.withColumnRenamed("cell", "ccell"), fine,
           "ccell")
         .select(col("id"), col("v"),
@@ -915,56 +917,6 @@ object Similarity {
             .as("cell"))
     }
     df
-  }
-
-  /** [[semDedupPairsHier]] under the LOG-DEPTH tree quantizer — the
-    * asymptotic scale mode: constant occupancy (linear pair work,
-    * flat per-task memory) AND O(branch·log N) assignment sims per
-    * row. Sized by [[treeLevelSizes]]; nCells ≤ branch degenerates
-    * to exactly [[semDedupPairs]]' flat quantizer (spec-gated), so
-    * the declared oracle replays the depth its verified scale
-    * implies. */
-  def semDedupPairsTree(corpus: DataFrame, idCol: String, vecCol: String,
-      targetOccupancy: Int, branch: Int = 64, trainIters: Int = 2,
-      trainFraction: Double = 1.0, threshold: Double,
-      maxCell: Int = 2048): DataFrame = {
-    val n = corpus.count()
-    val sizes = treeLevelSizes(n, targetOccupancy, branch)
-    val (_, _, assigned) = kmeansFitTreeAssigned(corpus, idCol, vecCol,
-      sizes, trainIters, 20, trainFraction)
-    val capped = Guards.capBuckets(assigned,
-      Seq("cell"), maxCell, Some("semdedup_t_cells"))
-      .localCheckpoint(false) // feeds both self-join sides
-    val a = capped.select(col("cell"), col("id").as("id_a"), col("v").as("va"))
-    val b = capped.select(col("cell"), col("id").as("id_b"), col("v").as("vb"))
-    a.join(b, Seq("cell"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("sim", round(VectorFns.cosineFast(col("va"), col("vb")), 6))
-      .filter(col("sim") >= threshold)
-      .select(col("cell"), col("id_a"), col("id_b"), col("sim"))
-  }
-
-  /** [[knnGraphHier]] under the log-depth tree quantizer. */
-  def knnGraphTree(corpus: DataFrame, idCol: String, vecCol: String,
-      k: Int, targetOccupancy: Int, branch: Int = 64,
-      trainIters: Int = 2, trainFraction: Double = 1.0,
-      maxCell: Int = 2048): DataFrame = {
-    val n = corpus.count()
-    val sizes = treeLevelSizes(n, targetOccupancy, branch)
-    val (_, _, assigned) = kmeansFitTreeAssigned(corpus, idCol, vecCol,
-      sizes, trainIters, 20, trainFraction)
-    val capped = Guards.capBuckets(assigned,
-      Seq("cell"), maxCell, Some("knn_graph_t_cells"))
-      .localCheckpoint(false) // feeds both self-join sides
-    val a = capped.select(col("cell"), col("id").as("query_id"),
-      col("v").as("qv"))
-    val b = capped.select(col("cell"), col("id").as("neighbor_id"),
-      col("v").as("cv"))
-    val scored = a.join(b, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", round(VectorFns.cosineFast(col("qv"), col("cv")), 6))
-    topKPerQuery(scored, k,
-      expectedPairs = n * (targetOccupancy + 1L), expectedQueries = n)
   }
 
   /** (ccell → cell_id-sorted fine struct array) — the broadcast side
@@ -986,80 +938,6 @@ object Similarity {
       .agg(sort_array(collect_list(struct(col("cell_id"), col("cv"))))
         .as("fines"))
 
-  /** Full-corpus assignment under a [[kmeansFitHier]] quantizer:
-    * (id, v, cell) with cell = the fine cell id — coarse argmax over
-    * the driver-side literal, fine argmax over the broadcast-joined
-    * coarse cell's layer. Zero shuffle: both folds are map-side. */
-  def assignCellsHier(corpus: DataFrame, idCol: String, vecCol: String,
-      coarse: Seq[(Long, Seq[Double])], fine: DataFrame,
-      fineBroadcastRows: Long = -1L): DataFrame =
-    joinFineSide(
-        corpus.select(
-          idOrFail(col(idCol).cast("long"), "assignCellsHier").as("id"),
-          col(vecCol).cast("array<double>").as("v"),
-          cellOf(coarse, col(vecCol)).as("ccell")),
-        fine, "ccell", fineBroadcastRows)
-      .select(col("id"), col("v"),
-        graft.plans.CentroidArgmax.column(col("fines"), col("v"))
-          .as("cell"))
-
-  /** [[semDedupPairs]] at CONSTANT occupancy through the two-level
-    * quantizer (r14, VERDICT r13 #1 — the scale mode): same pair
-    * semantics (within-cell, id_a < id_b, round-6 cosine ≥ threshold,
-    * capBuckets skew guard), but the cell population no longer grows
-    * with the corpus — callers pass `hierCells(n, occ)` with a FIXED
-    * occ, so per-cell pair work and per-task memory are constants
-    * while assignment pays 2√nCells sims/row. The r13 flat-dial wall
-    * (√N occupancy → N^1.5 cpu + per-task memory that OOMed 32
-    * threads at sf100) does not exist on this path; recall narrows
-    * accordingly (smaller cells see fewer candidates) — that is
-    * SemDeDup's documented dial, now decoupled from memory. */
-  def semDedupPairsHier(corpus: DataFrame, idCol: String, vecCol: String,
-      nCoarse: Int, nFinePerCoarse: Int, trainIters: Int = 2,
-      trainFraction: Double = 1.0, threshold: Double,
-      maxCell: Int = 2048, fineBroadcastRows: Long = -1L): DataFrame = {
-    val (coarse, fine) = kmeansFitHier(corpus, idCol, vecCol, nCoarse,
-      nFinePerCoarse, trainIters, trainFraction = trainFraction,
-      fineBroadcastRows = fineBroadcastRows)
-    val capped = Guards.capBuckets(
-      assignCellsHier(corpus, idCol, vecCol, coarse, fine,
-        fineBroadcastRows),
-      Seq("cell"), maxCell, Some("semdedup_h_cells"))
-      .localCheckpoint(false) // feeds both self-join sides
-    val a = capped.select(col("cell"), col("id").as("id_a"), col("v").as("va"))
-    val b = capped.select(col("cell"), col("id").as("id_b"), col("v").as("vb"))
-    a.join(b, Seq("cell"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("sim", round(VectorFns.cosineFast(col("va"), col("vb")), 6))
-      .filter(col("sim") >= threshold)
-      .select(col("cell"), col("id_a"), col("id_b"), col("sim"))
-  }
-
-  /** [[knnGraph]] at CONSTANT occupancy through the two-level
-    * quantizer — the graph twin of [[semDedupPairsHier]], same output
-    * shape and ranking semantics as the flat path. */
-  def knnGraphHier(corpus: DataFrame, idCol: String, vecCol: String,
-      k: Int, nCoarse: Int, nFinePerCoarse: Int, trainIters: Int = 2,
-      trainFraction: Double = 1.0, maxCell: Int = 2048): DataFrame = {
-    val (coarse, fine) = kmeansFitHier(corpus, idCol, vecCol, nCoarse,
-      nFinePerCoarse, trainIters, trainFraction = trainFraction)
-    val capped = Guards.capBuckets(
-      assignCellsHier(corpus, idCol, vecCol, coarse, fine),
-      Seq("cell"), maxCell, Some("knn_graph_h_cells"))
-      .localCheckpoint(false) // feeds both self-join sides
-    val n = capped.count() // bounded: a cached-block count, feeds the pair dial
-    val a = capped.select(col("cell"), col("id").as("query_id"),
-      col("v").as("qv"))
-    val b = capped.select(col("cell"), col("id").as("neighbor_id"),
-      col("v").as("cv"))
-    val scored = a.join(b, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", round(VectorFns.cosineFast(col("qv"), col("cv")), 6))
-    topKPerQuery(scored, k, expectedPairs =
-      n * (n / math.max(1L, nCoarse.toLong * nFinePerCoarse) + 1L),
-      expectedQueries = n)
-  }
-
   /** All-pairs k-NN GRAPH over the corpus (r11) — every vector's
     * top-k neighbors among its OWN quantizer cell, the primitive under
     * semantic-dedup clustering, diversity-aware sampling, and
@@ -1079,22 +957,18 @@ object Similarity {
     * is missed; raise occupancy (fewer, larger cells) or run
     * [[ivfTopK]] with nProbe > 1 over a query subset when
     * boundary-recall matters. Ranking semantics (sim desc,
-    * neighbor_id asc ties) match the other top-k family members. */
+    * neighbor_id asc ties) match the other top-k family members.
+    * `nCells` takes any [[Quantizer]] — a constant-occupancy `Levels`
+    * is [[semDedupPairs]]' scale mode, same output shape and ranking
+    * semantics. */
   def knnGraph(corpus: DataFrame, idCol: String, vecCol: String, k: Int,
-      nCells: Int, trainIters: Int = 2, trainFraction: Double = 1.0,
+      nCells: Quantizer, trainIters: Int = 2, trainFraction: Double = 1.0,
       maxCell: Int = 2000): DataFrame = {
-    val cent = kmeansFit(corpus, idCol, vecCol, nCells, trainIters,
-      trainFraction = trainFraction)
-    val assigned = corpus.select(
-      col(idCol).cast("long").as("id"),
-      col(vecCol).cast("array<double>").as("v"),
-      cellOf(cent, col(vecCol)).as("cell"))
     // one materialization for both self-join sides (the minhashNearDups
     // rationale: diamond DAGs recompute, and the argmax assignment over
     // the corpus is the expensive half)
-    val capped = Guards.capBuckets(assigned, Seq("cell"), maxCell,
-      Some("knn_graph_cells"))
-      .localCheckpoint(false)
+    val capped = cappedCells(corpus, idCol, vecCol, nCells, trainIters,
+      trainFraction, maxCell, "knn_graph_cells", -1L, pin = true)
     val n = capped.count() // bounded: a cached-block count, feeds the pair dial
     val a = capped.select(col("cell"), col("id").as("query_id"),
       col("v").as("qv"))
@@ -1104,7 +978,8 @@ object Similarity {
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("sim", round(VectorFns.cosineFast(col("qv"), col("cv")), 6))
     topKPerQuery(scored, k,
-      expectedPairs = n * (n / math.max(1, nCells) + 1L),
+      expectedPairs =
+        n * (n / math.max(1L, nCells.sizes.map(_.toLong).product) + 1L),
       expectedQueries = n)
   }
 
@@ -1141,44 +1016,84 @@ object Similarity {
     *
     * The graph base rides the just-written assigned TABLE (not the
     * in-memory assignment) so stored rows and graph rows can never
-    * diverge, and the argmax pass isn't paid twice. */
+    * diverge, and the argmax pass isn't paid twice.
+    *
+    * The quantizer is any [[Quantizer]]: a `Levels` index persists its
+    * coarse level at `centroids` and every deeper level at
+    * `centroids_level_<i>` (coarse-to-fine, joined through the
+    * [[joinFineSide]] dial at assignment time, never collected), and
+    * the stored assignment is the descent's own. `sizing` is the
+    * policy `meta` pins beside (k, max_cell) for
+    * [[maintainKnnGraphIndex]]: a constant-occupancy policy adds
+    * `occupancy` (and `branch` for a tree); the flat
+    * [[Sizing.Balanced]] pins nothing — maintenance then takes its
+    * floor from the caller. The assigned/graph layout, append, serve,
+    * compact and streaming member are quantizer-blind
+    * ([[fineLevelPaths]]): only the quantizer differs. With constant
+    * occupancy per-cell pair work and per-task memory stop growing
+    * with the corpus — the flat balanced dial's measured sf100 wall
+    * (27×/decade cpu, 32-thread OOM). */
   def buildKnnGraphIndex(corpus0: DataFrame, idCol: String,
-      vecCol: String, indexDir: String, k: Int, nCells: Int,
+      vecCol: String, indexDir: String, k: Int, nCells: Quantizer,
       trainIters: Int = 2, trainFraction: Double = 1.0,
-      maxCell: Int = 2000): Unit = {
+      maxCell: Int = 2000, sizing: Sizing = Sizing.Balanced()): Unit = {
     // NULL-loud id contract at the source (r14, ADVICE r13): the
     // quantizer seeding touches the id before the assigned select's
     // guard could, so the named error must ride the corpus itself
     val corpus = corpus0.withColumn(idCol,
       idOrFail(col(idCol), "buildKnnGraphIndex"))
     val spark = corpus.sparkSession
-    import spark.implicits._
-    val cent = kmeansFit(corpus, idCol, vecCol, nCells, trainIters,
-      trainFraction = trainFraction)
+    val (cent, assigned) = fitAssigned(corpus, idCol, vecCol, nCells,
+      trainIters, 20, trainFraction, -1L,
+      idOrFail(col(idCol).cast("long"), "buildKnnGraphIndex"))
     // independent writes overlap (r18, guide §2.6): distinct paths,
     // the tiny bounded tables backfill the big assigned write's tail
     IndexLayout.runParallel(
-      () => Seq((k, maxCell)).toDF("k", "max_cell")
-        .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/meta"),
-      () => cent.toDF("cell_id", "cv0")
-        .coalesce(1) // bounded: nCells rows — one file beats 32 shards
-        .write.mode("overwrite").parquet(s"$indexDir/centroids"),
+      () => writeMeta(spark, indexDir,
+        Seq("k" -> k, "max_cell" -> maxCell) ++ sizing.pins),
+      () => writeQuantizer(spark, indexDir, cent),
       () => IndexLayout.clear(spark, s"$indexDir/graph"),
-      () => {
-        IndexLayout.clear(spark, s"$indexDir/assigned")
-        corpus.select(
-            idOrFail(col(idCol).cast("long"), "buildKnnGraphIndex")
-              .as("neighbor_id"),
-            col(vecCol).cast("array<double>").as("cv"),
-            cellOf(cent, col(vecCol)).as("cell"))
-          .repartition(col("cell"))
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$indexDir/assigned/batch_id=-1")
-      })
+      () => writeAssigned(spark, indexDir, assigned))
     writeKnnGraphBase(spark, indexDir, k, maxCell)
   }
 
-  /** The base-graph write both index builds share: within-cell top-k
+  /** The one-row pinned-params `meta` table, columns in order. */
+  private def writeMeta(spark: org.apache.spark.sql.SparkSession,
+      indexDir: String, cols: Seq[(String, Int)]): Unit = {
+    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    val schema = StructType(cols.map { case (name, _) =>
+      StructField(name, IntegerType, nullable = false) })
+    spark.createDataFrame(
+        java.util.List.of(org.apache.spark.sql.Row.fromSeq(cols.map(_._2))),
+        schema)
+      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/meta")
+  }
+
+  /** Persist a trained quantizer: the coarse level at `centroids`
+    * (bounded: ≤ nCells flat / ≤ branch tree rows — one file beats 32
+    * shards), then the deeper levels ([[writeLevels]]). */
+  private def writeQuantizer(spark: org.apache.spark.sql.SparkSession,
+      indexDir: String, cent: Centroids): Unit = {
+    import spark.implicits._
+    cent.coarse.toDF("cell_id", "cv0")
+      .coalesce(1)
+      .write.mode("overwrite").parquet(s"$indexDir/centroids")
+    writeLevels(spark, indexDir, cent.levels)
+  }
+
+  /** The stored assignment base, cell-PARTITIONED so probes prune:
+    * `assigned/batch_id=-1/cell=<c>` (neighbor_id, cv). */
+  private def writeAssigned(spark: org.apache.spark.sql.SparkSession,
+      indexDir: String, assigned: DataFrame): Unit = {
+    IndexLayout.clear(spark, s"$indexDir/assigned")
+    assigned
+      .select(col("id").as("neighbor_id"), col("v").as("cv"), col("cell"))
+      .repartition(col("cell"))
+      .write.mode("overwrite").partitionBy("cell")
+      .parquet(s"$indexDir/assigned/batch_id=-1")
+  }
+
+  /** [[buildKnnGraphIndex]]'s base-graph write: within-cell top-k
     * over the JUST-WRITTEN assigned table (stored rows and graph rows
     * can never diverge, and the assignment pass isn't paid twice) into
     * `graph/batch_id=-1`. */
@@ -1201,155 +1116,6 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), col("sim"))
       .write.mode("overwrite").parquet(s"$indexDir/graph/batch_id=-1")
   }
-
-  /** Build and persist the k-NN graph index under the CONSTANT-
-    * occupancy two-level quantizer (r14, VERDICT r13 #1 — the scale
-    * mode of [[buildKnnGraphIndex]]): the coarse layer persists at
-    * `centroids` (nCoarse = ⌈√nCells⌉ rows — same bounded driver
-    * collect the flat index pays) and the FINE layer at
-    * `centroids_fine` (nCells rows, broadcast-joined at assignment
-    * time, never collected); `meta` pins (k, max_cell, occupancy) —
-    * the occupancy column marks the index hierarchical and keeps
-    * maintenance rebuilds at the SAME constant dial forever. The
-    * assigned/graph layout, append path ([[appendToKnnGraphIndex]] —
-    * it detects `centroids_fine` and assigns coarse-then-fine),
-    * serve, compact, and streaming member are all shared with the
-    * flat family: only the quantizer differs. Per-cell pair work and
-    * per-task memory stop growing with the corpus — the flat balanced
-    * dial's measured sf100 wall (27×/decade cpu, 32-thread OOM). */
-  def buildKnnGraphIndexHier(corpus0: DataFrame, idCol: String,
-      vecCol: String, indexDir: String, k: Int,
-      targetOccupancy: Int = 32, trainIters: Int = 2,
-      trainFraction: Double = 1.0, skewFactor: Int = 64): Unit = {
-    val corpus = corpus0.withColumn(idCol,
-      idOrFail(col(idCol), "buildKnnGraphIndexHier"))
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val n = corpus.count()
-    val (nCoarse, nFine) = hierCells(n, targetOccupancy)
-    val maxCell = math.min(Int.MaxValue.toLong,
-      skewFactor.toLong * targetOccupancy).toInt
-    val (coarse, fine) = kmeansFitHier(corpus, idCol, vecCol, nCoarse,
-      nFine, trainIters, trainFraction = trainFraction)
-    // independent writes overlap (r18, guide §2.6): distinct paths,
-    // the tiny bounded tables backfill the big assigned write's tail
-    IndexLayout.runParallel(
-      () => Seq((k, maxCell, targetOccupancy))
-        .toDF("k", "max_cell", "occupancy")
-        .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/meta"),
-      () => coarse.toDF("cell_id", "cv0")
-        .coalesce(1) // bounded: nCoarse = √nCells rows
-        .write.mode("overwrite").parquet(s"$indexDir/centroids"),
-      () => writeLevelWithArr(spark, s"$indexDir/centroids_fine",
-        fine.select(col("ccell"), col("cell_id"), col("cv"))),
-      () => IndexLayout.clear(spark, s"$indexDir/graph"),
-      () => {
-        IndexLayout.clear(spark, s"$indexDir/assigned")
-        assignCellsHier(corpus, idCol, vecCol, coarse, fine)
-          .select(col("id").as("neighbor_id"), col("v").as("cv"),
-            col("cell"))
-          .repartition(col("cell"))
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$indexDir/assigned/batch_id=-1")
-      })
-    writeKnnGraphBase(spark, indexDir, k, maxCell)
-  }
-
-  /** Crash-safe staged retrain of a HIERARCHICAL k-NN graph index —
-    * [[rebuildKnnGraphIndex]]'s constant-occupancy twin. */
-  def rebuildKnnGraphIndexHier(corpus: DataFrame, idCol: String,
-      vecCol: String, indexDir: String, k: Int,
-      targetOccupancy: Int = 32, trainIters: Int = 2,
-      trainFraction: Double = 1.0, skewFactor: Int = 64): Unit =
-    IndexLayout.stagedRebuild(corpus.sparkSession, indexDir)(stage =>
-      buildKnnGraphIndexHier(corpus, idCol, vecCol, stage, k,
-        targetOccupancy, trainIters, trainFraction, skewFactor))
-
-  /** [[rebuildKnnGraphIndexHier]] under the cross-process
-    * [[graft.fs.DirLock]]. */
-  def rebuildKnnGraphIndexHierLocked(corpus: DataFrame, idCol: String,
-      vecCol: String, indexDir: String, k: Int,
-      targetOccupancy: Int = 32, trainIters: Int = 2,
-      trainFraction: Double = 1.0, skewFactor: Int = 64): Unit =
-    graft.fs.DirLock.withLock(IndexLayout.lockDir(indexDir))(
-      rebuildKnnGraphIndexHier(corpus, idCol, vecCol, indexDir, k,
-        targetOccupancy, trainIters, trainFraction, skewFactor))
-
-  /** Build and persist the k-NN graph index under the LOG-DEPTH TREE
-    * quantizer (r15, VERDICT r14 #3 — the measured-best scale mode,
-    * persisted): the coarse level (≤ branch rows) lands at
-    * `centroids`, every deeper level at `centroids_level_<i>`
-    * (coarse-to-fine, each joined through the [[joinFineSide]] dial
-    * at assignment time, never collected); `meta` pins (k, max_cell,
-    * occupancy, branch) — occupancy+branch mark the tree family, so
-    * maintenance retrains re-derive the level sizes from the grown
-    * count while the dials never move. The assigned/graph layout,
-    * append, serve, compact and streaming member are all shared with
-    * the flat/hier family through the [[fineLevelPaths]] dispatch:
-    * only the quantizer differs. This is the asymptotic mode —
-    * constant occupancy (linear pairs, flat per-task memory) AND
-    * O(branch·log N) assignment sims per row, vs the two-level
-    * index's 2√nCells (N^1.5 total). nCells ≤ branch degenerates to
-    * exactly the flat [[buildKnnGraphIndex]] layout (no persisted
-    * fine level — spec-gated). The assigned table reuses the
-    * descent's OWN assignment (the r14 perf rule: the final Σ-level
-    * argmax is the dominant term and must not be paid twice). */
-  def buildKnnGraphIndexTree(corpus0: DataFrame, idCol: String,
-      vecCol: String, indexDir: String, k: Int,
-      targetOccupancy: Int = 32, branch: Int = 64, trainIters: Int = 2,
-      trainFraction: Double = 1.0, skewFactor: Int = 64): Unit = {
-    val corpus = corpus0.withColumn(idCol,
-      idOrFail(col(idCol), "buildKnnGraphIndexTree"))
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val n = corpus.count()
-    val sizes = treeLevelSizes(n, targetOccupancy, branch)
-    val maxCell = math.min(Int.MaxValue.toLong,
-      skewFactor.toLong * targetOccupancy).toInt
-    val (coarse, levels, assigned) = kmeansFitTreeAssigned(corpus,
-      idCol, vecCol, sizes, trainIters, 20, trainFraction)
-    // independent writes overlap (r18, guide §2.6): distinct paths,
-    // the tiny bounded tables backfill the big assigned write's tail
-    IndexLayout.runParallel(
-      () => Seq((k, maxCell, targetOccupancy, branch))
-        .toDF("k", "max_cell", "occupancy", "branch")
-        .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/meta"),
-      () => coarse.toDF("cell_id", "cv0")
-        .coalesce(1) // bounded: coarse level ≤ branch rows
-        .write.mode("overwrite").parquet(s"$indexDir/centroids"),
-      () => writeTreeLevels(spark, indexDir, levels),
-      () => IndexLayout.clear(spark, s"$indexDir/graph"),
-      () => {
-        IndexLayout.clear(spark, s"$indexDir/assigned")
-        assigned
-          .select(col("id").as("neighbor_id"), col("v").as("cv"),
-            col("cell"))
-          .repartition(col("cell"))
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$indexDir/assigned/batch_id=-1")
-      })
-    writeKnnGraphBase(spark, indexDir, k, maxCell)
-  }
-
-  /** Crash-safe staged retrain of a TREE k-NN graph index —
-    * [[rebuildKnnGraphIndex]]'s log-depth twin. */
-  def rebuildKnnGraphIndexTree(corpus: DataFrame, idCol: String,
-      vecCol: String, indexDir: String, k: Int,
-      targetOccupancy: Int = 32, branch: Int = 64, trainIters: Int = 2,
-      trainFraction: Double = 1.0, skewFactor: Int = 64): Unit =
-    IndexLayout.stagedRebuild(corpus.sparkSession, indexDir)(stage =>
-      buildKnnGraphIndexTree(corpus, idCol, vecCol, stage, k,
-        targetOccupancy, branch, trainIters, trainFraction, skewFactor))
-
-  /** [[rebuildKnnGraphIndexTree]] under the cross-process
-    * [[graft.fs.DirLock]]. */
-  def rebuildKnnGraphIndexTreeLocked(corpus: DataFrame, idCol: String,
-      vecCol: String, indexDir: String, k: Int,
-      targetOccupancy: Int = 32, branch: Int = 64, trainIters: Int = 2,
-      trainFraction: Double = 1.0, skewFactor: Int = 64): Unit =
-    graft.fs.DirLock.withLock(IndexLayout.lockDir(indexDir))(
-      rebuildKnnGraphIndexTree(corpus, idCol, vecCol, indexDir, k,
-        targetOccupancy, branch, trainIters, trainFraction, skewFactor))
 
   /** One CACHED bounded read of a persisted index's one-row meta
     * table — (columns, rows) keyed on the meta dir's listing
@@ -1383,20 +1149,21 @@ object Similarity {
     })
   }
 
-  /** The pinned branching factor of a TREE index; None for the
-    * flat/two-level families (no branch column). */
-  private def knnGraphIndexBranch(
-      spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Option[Int] =
-    metaInt(metaTable(spark, indexDir, "knn graph index"), "branch")
-
-  /** The pinned constant-occupancy dial of a hierarchical index; None
-    * for flat indexes (whose meta has no occupancy column — absence
-    * marks the flat family, the keyword-index maxDf convention). */
-  private def knnGraphIndexOccupancy(
-      spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Option[Int] =
-    metaInt(metaTable(spark, indexDir, "knn graph index"), "occupancy")
+  /** The sizing policy a persisted IVF / k-NN graph index pins — the
+    * one reader of its meta's family marker columns: `occupancy` +
+    * `branch` pin a [[Sizing.Tree]], `occupancy` alone a
+    * [[Sizing.TwoLevel]]; their absence marks the flat family (the
+    * keyword-index maxDf convention), balanced with floor
+    * `minOccupancy`. */
+  private def indexSizing(spark: org.apache.spark.sql.SparkSession,
+      indexDir: String, who: String, minOccupancy: Int): Sizing = {
+    val t = metaTable(spark, indexDir, who)
+    (metaInt(t, "occupancy"), metaInt(t, "branch")) match {
+      case (Some(occ), Some(branch)) => Sizing.Tree(occ, branch)
+      case (Some(occ), None) => Sizing.TwoLevel(occ)
+      case _ => Sizing.Balanced(minOccupancy)
+    }
+  }
 
   /** Assign a frame under a persisted index's FROZEN quantizer —
     * (id, v, cell) — through the family-blind [[withCellUnderIndex]]
@@ -1409,20 +1176,22 @@ object Similarity {
         col(vecCol).cast("array<double>").as("v")),
       indexDir, col("v"))
 
-  /** Persist a tree quantizer's deeper levels as
-    * `centroids_level_1..d` (coarse-to-fine) — shared by
-    * [[buildKnnGraphIndexTree]] and [[buildIvfIndexTree]]. Clears any
-    * deeper levels a previous (deeper) build left behind first:
-    * [[fineLevelPaths]] walks while-exists, so a stale level_2 under
-    * a now-depth-2 tree would silently mis-assign every probe. */
-  private def writeTreeLevels(spark: org.apache.spark.sql.SparkSession,
+  /** Persist a quantizer's deeper levels as `centroids_level_1..d`
+    * (coarse-to-fine; a flat quantizer has none). Clears any levels a
+    * previous build left behind first — including a pre-unification
+    * two-level index's `centroids_fine`: [[fineLevelPaths]] walks
+    * while-exists, so a stale level_2 under a now-depth-2 tree (or a
+    * stale fine level under a now-flat index) would silently
+    * mis-assign every probe. */
+  private def writeLevels(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, levels: Seq[DataFrame]): Unit = {
     def exists(p: String): Boolean = {
       val hp = new org.apache.hadoop.fs.Path(p)
       hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
     }
-    Iterator.from(1).map(i => s"$indexDir/centroids_level_$i")
-      .takeWhile(p => exists(p) || exists(s"${p}_arr"))
+    (Iterator.from(1).map(i => s"$indexDir/centroids_level_$i")
+        .takeWhile(p => exists(p) || exists(s"${p}_arr")).toSeq :+
+      s"$indexDir/centroids_fine")
       .foreach { p =>
         IndexLayout.clear(spark, p)
         IndexLayout.clear(spark, s"${p}_arr")
@@ -1457,10 +1226,11 @@ object Similarity {
   }
 
   /** The fine-level layouts a persisted index may carry, coarse-to-
-    * fine: the log-depth TREE family persists `centroids_level_1..d`
-    * (r15), the two-level family `centroids_fine` (r14), the flat
-    * family neither. Layout presence IS the family marker — every
-    * append/probe/serve path stays quantizer-blind. */
+    * fine: every `Levels` build persists `centroids_level_1..d`, a
+    * flat one none; two-level indexes written before that layout
+    * carry their one fine level at `centroids_fine` and still serve.
+    * Layout presence IS the family marker — every append/probe/serve
+    * path stays quantizer-blind. */
   private def fineLevelPaths(
       spark: org.apache.spark.sql.SparkSession,
       indexDir: String): Seq[String] = {
@@ -1554,7 +1324,7 @@ object Similarity {
     val ok = try {
       val hp = new org.apache.hadoop.fs.Path(arrPath, "_SUCCESS")
       hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
-    } catch { case _: Throwable => false }
+    } catch { case _: java.io.IOException => false }
     if (ok) spark.read.parquet(arrPath).select(col("ccell"), col("fines"))
     else fineArrOf(lvl)
   }
@@ -1595,7 +1365,7 @@ object Similarity {
     * MUST be replayed before further appends fold its cells. Distinct batchIds remain the caller's exactly-once
     * sequencing; quiesce appends against compaction/rebuild (the
     * recover-before-write discards an in-flight stage — see
-    * [[appendToKnnGraphIndexLocked]] for the cross-process guard).
+    * [[IndexLayout.locked]] for the cross-process guard).
     * Quantizer drift is the IVF append's documented trade: monitor
     * occupancy, retrain offline ([[rebuildKnnGraphIndex]]). */
   def appendToKnnGraphIndex(batch: DataFrame, idCol: String,
@@ -1760,12 +1530,12 @@ object Similarity {
     * racing the swap see old-or-new, never a new quantizer over old
     * cells. */
   def rebuildKnnGraphIndex(corpus: DataFrame, idCol: String,
-      vecCol: String, indexDir: String, k: Int, nCells: Int,
+      vecCol: String, indexDir: String, k: Int, nCells: Quantizer,
       trainIters: Int = 2, trainFraction: Double = 1.0,
-      maxCell: Int = 2000): Unit =
+      maxCell: Int = 2000, sizing: Sizing = Sizing.Balanced()): Unit =
     IndexLayout.stagedRebuild(corpus.sparkSession, indexDir)(stage =>
       buildKnnGraphIndex(corpus, idCol, vecCol, stage, k, nCells,
-        trainIters, trainFraction, maxCell))
+        trainIters, trainFraction, maxCell, sizing))
 
   /** Occupancy-driven k-NN graph index maintenance — the graph twin
     * of [[maintainIvfIndex]] (family symmetry for the monitor→retrain
@@ -1773,14 +1543,16 @@ object Similarity {
     * the index's own PINNED maxCell; when more than
     * `maxOversizedCells` cells exceed it, a [[rebuildKnnGraphIndex]]
     * staged swap under the cross-process lock, over the index's own
-    * stored vectors: k re-pinned from meta, nCells re-derived from
-    * the CURRENT count via the balanced dial, and maxCell RE-PINNED
-    * at `skewFactor × balancedOccupancy` — the same tolerance the
-    * declared dials encode ([[balancedOccupancy]]'s scaling note: a
-    * cap frozen at the old corpus size would drop perfectly normal
-    * cells of the rescaled quantizer). Returns true iff a rebuild
-    * ran; quiesce appends (use the Locked append variants — same
-    * lock dir). */
+    * stored vectors: k re-pinned from meta, the quantizer re-derived
+    * from the CURRENT count under the index's pinned [[Sizing]] (a
+    * flat index is balanced with floor `minOccupancy`; a
+    * constant-occupancy index keeps its dials, only the level sizes
+    * grow), and maxCell RE-PINNED at `skewFactor × occupancy` — the
+    * same tolerance the declared dials encode ([[balancedOccupancy]]'s
+    * scaling note: a cap frozen at the old corpus size would drop
+    * perfectly normal cells of the rescaled quantizer). Returns true
+    * iff a rebuild ran; quiesce appends (run them under
+    * [[IndexLayout.locked]] — same lock dir). */
   def maintainKnnGraphIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, maxOversizedCells: Int = 0,
       trainIters: Int = 2, trainFraction: Double = 1.0,
@@ -1800,119 +1572,18 @@ object Similarity {
       .limit(maxOversizedCells + 1).count() // bounded monitor job
     if (oversized <= maxOversizedCells) false
     else {
-      graft.fs.DirLock.withLock(IndexLayout.lockDir(indexDir)) {
+      IndexLayout.locked(indexDir) {
         val corpus = stored().select(col("neighbor_id"), col("cv"))
-        (knnGraphIndexOccupancy(spark, indexDir),
-            knnGraphIndexBranch(spark, indexDir)) match {
-          // tree index (r15): retrain at the PINNED (occupancy,
-          // branch) — level sizes re-derive from the grown count,
-          // the dials themselves never move
-          case (Some(occ), Some(br)) =>
-            rebuildKnnGraphIndexTree(corpus, "neighbor_id", "cv",
-              indexDir, k = k, targetOccupancy = occ, branch = br,
-              trainIters = trainIters, trainFraction = trainFraction,
-              skewFactor = skewFactor)
-          // hierarchical index (r14): the retrain stays at the PINNED
-          // constant occupancy — nCoarse/nFine re-derive from the
-          // grown count, the dial itself never moves
-          case (Some(occ), None) =>
-            rebuildKnnGraphIndexHier(corpus, "neighbor_id", "cv",
-              indexDir, k = k, targetOccupancy = occ, trainIters,
-              trainFraction, skewFactor = skewFactor)
-          case _ =>
-            val n = corpus.count()
-            val occ = balancedOccupancy(n, minOccupancy)
-            rebuildKnnGraphIndex(corpus, "neighbor_id", "cv", indexDir,
-              k = k, nCells = cellsForOccupancy(n, occ), trainIters,
-              trainFraction,
-              maxCell = math.min(Int.MaxValue.toLong,
-                skewFactor.toLong * occ).toInt)
-        }
+        val sizing = indexSizing(spark, indexDir, "knn graph index",
+          minOccupancy)
+        val n = corpus.count()
+        rebuildKnnGraphIndex(corpus, "neighbor_id", "cv", indexDir, k,
+          sizing.quantizer(n), trainIters, trainFraction,
+          sizing.maxCell(n, skewFactor), sizing)
       }
       true
     }
   }
-
-  // ---- cross-process Locked variants (r13, VERDICT r12 #6) ---------
-  // Appends and maintenance are mutually destructive when interleaved
-  // (an append's recover-before-write deletes a live compact/rebuild's
-  // unmarked stage — ADVICE r12), so the proven DirLock guard wraps
-  // BOTH paths; see Dedup.appendToSpanIndexLocked for the rationale.
-
-  /** [[appendToIvfIndex]] under the cross-process [[graft.fs.DirLock]]. */
-  def appendToIvfIndexLocked(batch: DataFrame, idCol: String,
-      vecCol: String, indexDir: String, batchId: Long): Unit =
-    graft.fs.DirLock.withLock(IndexLayout.lockDir(indexDir))(
-      appendToIvfIndex(batch, idCol, vecCol, indexDir, batchId))
-
-  /** [[appendToPqIndex]] under the cross-process [[graft.fs.DirLock]]. */
-  def appendToPqIndexLocked(batch: DataFrame, idCol: String,
-      vecCol: String, indexDir: String, batchId: Long): Unit =
-    graft.fs.DirLock.withLock(IndexLayout.lockDir(indexDir))(
-      appendToPqIndex(batch, idCol, vecCol, indexDir, batchId))
-
-  /** [[appendToKnnGraphIndex]] under the cross-process
-    * [[graft.fs.DirLock]]. */
-  def appendToKnnGraphIndexLocked(batch: DataFrame, idCol: String,
-      vecCol: String, indexDir: String, batchId: Long): Unit =
-    graft.fs.DirLock.withLock(IndexLayout.lockDir(indexDir))(
-      appendToKnnGraphIndex(batch, idCol, vecCol, indexDir, batchId))
-
-  /** [[compactIvfIndex]] under the cross-process [[graft.fs.DirLock]]. */
-  def compactIvfIndexLocked(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, excludeBatchId: Option[Long] = None): Unit =
-    graft.fs.DirLock.withLock(IndexLayout.lockDir(indexDir))(
-      compactIvfIndex(spark, indexDir, excludeBatchId))
-
-  /** [[compactPqIndex]] under the cross-process [[graft.fs.DirLock]]. */
-  def compactPqIndexLocked(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, excludeBatchId: Option[Long] = None): Unit =
-    graft.fs.DirLock.withLock(IndexLayout.lockDir(indexDir))(
-      compactPqIndex(spark, indexDir, excludeBatchId))
-
-  /** [[compactKnnGraphIndex]] under the cross-process
-    * [[graft.fs.DirLock]]. */
-  def compactKnnGraphIndexLocked(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, excludeBatchId: Option[Long] = None): Unit =
-    graft.fs.DirLock.withLock(IndexLayout.lockDir(indexDir))(
-      compactKnnGraphIndex(spark, indexDir, excludeBatchId))
-
-  /** [[rebuildIvfIndex]] under the cross-process [[graft.fs.DirLock]]. */
-  def rebuildIvfIndexLocked(corpus: DataFrame, idCol: String,
-      vecCol: String, indexDir: String, nCells: Int = 16,
-      trainIters: Int = 2, trainFraction: Double = 1.0): Unit =
-    graft.fs.DirLock.withLock(IndexLayout.lockDir(indexDir))(
-      rebuildIvfIndex(corpus, idCol, vecCol, indexDir, nCells,
-        trainIters, trainFraction))
-
-  /** [[rebuildPqIndex]] under the cross-process [[graft.fs.DirLock]]. */
-  def rebuildPqIndexLocked(corpus: DataFrame, idCol: String,
-      vecCol: String, indexDir: String, m: Int = 4, nCents: Int = 16,
-      trainIters: Int = 2, trainFraction: Double = 1.0): Unit =
-    graft.fs.DirLock.withLock(IndexLayout.lockDir(indexDir))(
-      rebuildPqIndex(corpus, idCol, vecCol, indexDir, m, nCents,
-        trainIters, trainFraction))
-
-  /** [[rebuildKnnGraphIndex]] under the cross-process
-    * [[graft.fs.DirLock]]. */
-  def rebuildKnnGraphIndexLocked(corpus: DataFrame, idCol: String,
-      vecCol: String, indexDir: String, k: Int, nCells: Int,
-      trainIters: Int = 2, trainFraction: Double = 1.0,
-      maxCell: Int = 2000): Unit =
-    graft.fs.DirLock.withLock(IndexLayout.lockDir(indexDir))(
-      rebuildKnnGraphIndex(corpus, idCol, vecCol, indexDir, k, nCells,
-        trainIters, trainFraction, maxCell))
-
-  /** Cell assignment of the full corpus under a [[kmeansFit]]
-    * quantizer — (id, cell) rows, zero-shuffle map-side argmax. The
-    * occupancy monitor composition: feed the result to
-    * [[Guards.oversizedBuckets]] to see which cells exceed the
-    * [[semDedupPairs]] cap (and whether nCells has fallen behind
-    * corpus growth). */
-  def assignCells(corpus: DataFrame, idCol: String, vecCol: String,
-      cent: Seq[(Long, Seq[Double])]): DataFrame =
-    corpus.select(col(idCol).cast("long").as("id"),
-      cellOf(cent, col(vecCol)).as("cell"))
 
   /** Top-nProbe cells per query against the centroid frame. */
   private def ivfProbes(queries: DataFrame, centDf: DataFrame,
@@ -1935,8 +1606,8 @@ object Similarity {
       trainFraction: Double = 1.0): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val cent = kmeansFit(corpus, idCol, vecCol, nCells, trainIters,
-      trainFraction = trainFraction)
+    val cent = fitFlat(corpus, idCol, vecCol, nCells, trainIters, 20,
+      trainFraction)
     val centDf = cent.toDF("cell_id", "cv0")
     val assigned = corpus.select(
       col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
@@ -1955,11 +1626,23 @@ object Similarity {
     * `indexDir/centroids` (nCells rows) and `indexDir/assigned`
     * PARTITIONED BY cell — so a probe's cell restriction becomes
     * partition PRUNING on the scan: nProbe/nCells of the corpus is
-    * read, the rest never leaves storage. */
+    * read, the rest never leaves storage.
+    *
+    * The quantizer is any [[Quantizer]] — the [[buildKnnGraphIndex]]
+    * level layout (`centroids` coarse, `centroids_level_<i>` deeper)
+    * for the family the streaming semantic gate rides: append
+    * ([[appendToIvfIndex]]), probe ([[ivfTopKFromIndex]] — the
+    * level-walking [[ivfProbesHier]]), incremental dedup
+    * ([[semDedupAgainstIndex]]) and compaction are quantizer-blind, so
+    * [[graft.streaming.StreamingFeatures.semanticGateBatch]] rides
+    * constant occupancy with no caller change. `sizing` is the policy
+    * `meta` pins beside `max_cell` for [[maintainIvfIndex]]:
+    * `min_occupancy` always, plus `occupancy` (and `branch` for a
+    * tree) for a constant-occupancy policy. */
   def buildIvfIndex(corpus0: DataFrame, idCol: String, vecCol: String,
-      indexDir: String, nCells: Int = 16, trainIters: Int = 2,
+      indexDir: String, nCells: Quantizer = 16, trainIters: Int = 2,
       trainFraction: Double = 1.0, maxCell: Int = 2000,
-      minOccupancy: Int = 32): Unit = {
+      sizing: Sizing = Sizing.Balanced()): Unit = {
     // build enforces the same NULL-loud id contract as the appends
     // (r14, ADVICE r13): guarded AT THE SOURCE so the named error
     // fires on the first job that touches the id (the quantizer
@@ -1969,36 +1652,23 @@ object Similarity {
     val corpus = corpus0.withColumn(idCol,
       idOrFail(col(idCol), "buildIvfIndex"))
     val spark = corpus.sparkSession
-    import spark.implicits._
     // deterministic training: the probe side replaying kmeansFit with
     // the same params reproduces these centroids exactly — but the
     // index persists them anyway, because probe-time retraining would
     // rescan the corpus `iters` times per probe
-    val cent = kmeansFit(corpus, idCol, vecCol, nCells, trainIters,
-      trainFraction = trainFraction)
-    val centDf = cent.toDF("cell_id", "cv0")
+    val (cent, assigned) = fitAssigned(corpus, idCol, vecCol, nCells,
+      trainIters, 20, trainFraction, -1L, col(idCol))
     // pin the MAINTENANCE contract (r14, VERDICT r13 #2 — the
-    // knnGraphIndexMeta pattern): (max_cell, min_occupancy) travel
-    // with the index, so two maintenance schedulers can never monitor
-    // one index against different thresholds or rebuild it under
-    // different dials
+    // knnGraphIndexMeta pattern): (max_cell, min_occupancy) and the
+    // sizing policy travel with the index, so two maintenance
+    // schedulers can never monitor one index against different
+    // thresholds or rebuild it under different dials
     // independent writes overlap (r18, guide §2.6): distinct paths
     IndexLayout.runParallel(
-      () => Seq((maxCell, minOccupancy)).toDF("max_cell", "min_occupancy")
-        .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/meta"),
-      () => centDf
-        .coalesce(1) // bounded: nCells rows — one file beats 32 shards
-        .write.mode("overwrite").parquet(s"$indexDir/centroids"),
-      () => {
-        IndexLayout.clear(spark, s"$indexDir/assigned")
-        corpus.select(
-            col(idCol).as("neighbor_id"),
-            col(vecCol).cast("array<double>").as("cv"),
-            cellOf(cent, col(vecCol)).as("cell"))
-          .repartition(col("cell"))
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$indexDir/assigned/batch_id=-1")
-      })
+      () => writeMeta(spark, indexDir, Seq("max_cell" -> maxCell,
+        "min_occupancy" -> sizing.minOccupancy) ++ sizing.pins),
+      () => writeQuantizer(spark, indexDir, cent),
+      () => writeAssigned(spark, indexDir, assigned))
   }
 
   /** Append a NEW vector batch to a persisted [[buildIvfIndex]] index
@@ -2036,8 +1706,8 @@ object Similarity {
     IndexLayout.recoverCompact(spark, s"$indexDir/assigned")
     // family-blind assignment (r15, VERDICT r14 #1): the batch's cell
     // comes from the index's OWN frozen quantizer — flat literal
-    // argmax, or the persisted coarse+fine walk for a
-    // buildIvfIndexHier index — via the shared dispatch, so the
+    // argmax, or the persisted level walk for a `Levels` index — via
+    // the shared dispatch, so the
     // constant-occupancy mode rides the SAME append the flat family
     // uses
     withCellUnderIndex(
@@ -2080,193 +1750,12 @@ object Similarity {
     * index is durable. Appends resume against the NEW frozen
     * quantizer. */
   def rebuildIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      indexDir: String, nCells: Int = 16, trainIters: Int = 2,
+      indexDir: String, nCells: Quantizer = 16, trainIters: Int = 2,
       trainFraction: Double = 1.0, maxCell: Int = 2000,
-      minOccupancy: Int = 32): Unit =
+      sizing: Sizing = Sizing.Balanced()): Unit =
     IndexLayout.stagedRebuild(corpus.sparkSession, indexDir)(stage =>
       buildIvfIndex(corpus, idCol, vecCol, stage, nCells, trainIters,
-        trainFraction, maxCell, minOccupancy))
-
-  /** Build and PERSIST the IVF index under the CONSTANT-occupancy
-    * two-level quantizer (r15, VERDICT r14 #1 — the
-    * [[buildKnnGraphIndexHier]] layout for the family the streaming
-    * semantic gate rides): the coarse layer persists at `centroids`
-    * (⌈√nCells⌉ rows — the same bounded collect the flat index pays),
-    * the FINE layer at `centroids_fine` (nCells rows, joined at
-    * assignment time through the [[joinFineSide]] dial, never
-    * collected); `meta` pins (max_cell, min_occupancy, occupancy) —
-    * the occupancy column marks the index hierarchical and keeps
-    * maintenance retrains at the SAME constant dial forever. The
-    * assigned layout, append ([[appendToIvfIndex]]), probe
-    * ([[ivfTopKFromIndex]] — coarse-then-fine), incremental dedup
-    * ([[semDedupAgainstIndex]]) and compaction are all shared with
-    * the flat family: only the quantizer differs, so
-    * [[graft.streaming.StreamingFeatures.semanticGateBatch]] rides
-    * constant occupancy with no caller change. Per-cell pair work and
-    * per-task memory stop growing with the corpus — the flat balanced
-    * dial's measured sf100 wall (N^1.5 cpu + a 32-thread OOM from
-    * √N-sized cells). */
-  def buildIvfIndexHier(corpus0: DataFrame, idCol: String,
-      vecCol: String, indexDir: String, targetOccupancy: Int = 32,
-      trainIters: Int = 2, trainFraction: Double = 1.0,
-      skewFactor: Int = 64): Unit = {
-    // same build-side NULL-loud id contract as buildIvfIndex
-    val corpus = corpus0.withColumn(idCol,
-      idOrFail(col(idCol), "buildIvfIndexHier"))
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val n = corpus.count()
-    val (nCoarse, nFine) = hierCells(n, targetOccupancy)
-    val maxCell = math.min(Int.MaxValue.toLong,
-      skewFactor.toLong * targetOccupancy).toInt
-    val (coarse, fine) = kmeansFitHier(corpus, idCol, vecCol, nCoarse,
-      nFine, trainIters, trainFraction = trainFraction)
-    // min_occupancy = the pinned constant dial itself: a maintenance
-    // rebuild re-derives nCoarse/nFine from the grown count, the
-    // occupancy never moves (the buildKnnGraphIndexHier contract)
-    // independent writes overlap (r18, guide §2.6): distinct paths
-    IndexLayout.runParallel(
-      () => Seq((maxCell, targetOccupancy, targetOccupancy))
-        .toDF("max_cell", "min_occupancy", "occupancy")
-        .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/meta"),
-      () => coarse.toDF("cell_id", "cv0")
-        .coalesce(1) // bounded: nCoarse = √nCells rows
-        .write.mode("overwrite").parquet(s"$indexDir/centroids"),
-      () => writeLevelWithArr(spark, s"$indexDir/centroids_fine",
-        fine.select(col("ccell"), col("cell_id"), col("cv"))),
-      () => {
-        IndexLayout.clear(spark, s"$indexDir/assigned")
-        assignCellsHier(corpus, idCol, vecCol, coarse, fine)
-          .select(col("id").as("neighbor_id"), col("v").as("cv"),
-            col("cell"))
-          .repartition(col("cell"))
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$indexDir/assigned/batch_id=-1")
-      })
-  }
-
-  /** Crash-safe staged retrain of a HIERARCHICAL IVF index —
-    * [[rebuildIvfIndex]]'s constant-occupancy twin. */
-  def rebuildIvfIndexHier(corpus: DataFrame, idCol: String,
-      vecCol: String, indexDir: String, targetOccupancy: Int = 32,
-      trainIters: Int = 2, trainFraction: Double = 1.0,
-      skewFactor: Int = 64): Unit =
-    IndexLayout.stagedRebuild(corpus.sparkSession, indexDir)(stage =>
-      buildIvfIndexHier(corpus, idCol, vecCol, stage, targetOccupancy,
-        trainIters, trainFraction, skewFactor))
-
-  /** [[rebuildIvfIndexHier]] under the cross-process
-    * [[graft.fs.DirLock]]. */
-  def rebuildIvfIndexHierLocked(corpus: DataFrame, idCol: String,
-      vecCol: String, indexDir: String, targetOccupancy: Int = 32,
-      trainIters: Int = 2, trainFraction: Double = 1.0,
-      skewFactor: Int = 64): Unit =
-    graft.fs.DirLock.withLock(IndexLayout.lockDir(indexDir))(
-      rebuildIvfIndexHier(corpus, idCol, vecCol, indexDir,
-        targetOccupancy, trainIters, trainFraction, skewFactor))
-
-  /** Build and PERSIST the IVF index under the LOG-DEPTH TREE
-    * quantizer (r16, VERDICT r15 #1 — the production semantic gate's
-    * asymptotic mode): the [[buildKnnGraphIndexTree]] layout under
-    * the [[buildIvfIndexHier]] meta contract. The coarse level
-    * (≤ branch rows) persists at `centroids`, every deeper level at
-    * `centroids_level_<i>` (coarse-to-fine, each joined through the
-    * [[joinFineSide]] dial at assignment time, never collected);
-    * `meta` pins (max_cell, min_occupancy, occupancy, branch) —
-    * occupancy marks the constant-occupancy family, branch marks the
-    * tree member, so maintenance retrains re-derive the level sizes
-    * from the grown count while the dials never move. The assigned
-    * layout, append ([[appendToIvfIndex]]), probe
-    * ([[ivfTopKFromIndex]] — the level-walking [[ivfProbesHier]]),
-    * incremental dedup ([[semDedupAgainstIndex]]) and compaction are
-    * all shared with the flat/hier family through the family-blind
-    * [[withCellUnderIndex]]/[[fineLevelPaths]] dispatch: only the
-    * quantizer differs, so
-    * [[graft.streaming.StreamingFeatures.semanticGateBatch]] rides
-    * the tree with no caller change. This retires the two-level
-    * mode's [[hierCells]] 2¹⁶-coarse wall for the family: every
-    * level's per-parent size is branch-bounded, per-row assignment is
-    * O(branch·log N) sims (vs the two-level split's 2√nCells = the
-    * N^1.5 total the r15 verdict flagged one decade short of the
-    * 100 TB bar), and constant occupancy holds at any corpus size.
-    * nCells ≤ branch degenerates to exactly the flat [[buildIvfIndex]]
-    * layout (no persisted fine level — spec-gated). */
-  def buildIvfIndexTree(corpus0: DataFrame, idCol: String,
-      vecCol: String, indexDir: String, targetOccupancy: Int = 32,
-      branch: Int = 64, trainIters: Int = 2,
-      trainFraction: Double = 1.0, skewFactor: Int = 64): Unit = {
-    // same build-side NULL-loud id contract as buildIvfIndex
-    val corpus = corpus0.withColumn(idCol,
-      idOrFail(col(idCol), "buildIvfIndexTree"))
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val n = corpus.count()
-    val sizes = treeLevelSizes(n, targetOccupancy, branch)
-    val maxCell = math.min(Int.MaxValue.toLong,
-      skewFactor.toLong * targetOccupancy).toInt
-    // the descent's own assignment is reused as the stored table (the
-    // r14 perf rule: the final Σ-level argmax is the dominant term
-    // and must not be paid twice)
-    val (coarse, levels, assigned) = kmeansFitTreeAssigned(corpus,
-      idCol, vecCol, sizes, trainIters, 20, trainFraction)
-    // min_occupancy = the pinned constant dial itself (the
-    // buildIvfIndexHier convention); branch pins the tree member
-    // independent writes overlap (r18, guide §2.6): distinct paths
-    IndexLayout.runParallel(
-      () => Seq((maxCell, targetOccupancy, targetOccupancy, branch))
-        .toDF("max_cell", "min_occupancy", "occupancy", "branch")
-        .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/meta"),
-      () => coarse.toDF("cell_id", "cv0")
-        .coalesce(1) // bounded: coarse level ≤ branch rows
-        .write.mode("overwrite").parquet(s"$indexDir/centroids"),
-      () => writeTreeLevels(spark, indexDir, levels),
-      () => {
-        IndexLayout.clear(spark, s"$indexDir/assigned")
-        assigned
-          .select(col("id").as("neighbor_id"), col("v").as("cv"),
-            col("cell"))
-          .repartition(col("cell"))
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$indexDir/assigned/batch_id=-1")
-      })
-  }
-
-  /** Crash-safe staged retrain of a TREE IVF index —
-    * [[rebuildIvfIndex]]'s log-depth twin. */
-  def rebuildIvfIndexTree(corpus: DataFrame, idCol: String,
-      vecCol: String, indexDir: String, targetOccupancy: Int = 32,
-      branch: Int = 64, trainIters: Int = 2,
-      trainFraction: Double = 1.0, skewFactor: Int = 64): Unit =
-    IndexLayout.stagedRebuild(corpus.sparkSession, indexDir)(stage =>
-      buildIvfIndexTree(corpus, idCol, vecCol, stage, targetOccupancy,
-        branch, trainIters, trainFraction, skewFactor))
-
-  /** [[rebuildIvfIndexTree]] under the cross-process
-    * [[graft.fs.DirLock]]. */
-  def rebuildIvfIndexTreeLocked(corpus: DataFrame, idCol: String,
-      vecCol: String, indexDir: String, targetOccupancy: Int = 32,
-      branch: Int = 64, trainIters: Int = 2,
-      trainFraction: Double = 1.0, skewFactor: Int = 64): Unit =
-    graft.fs.DirLock.withLock(IndexLayout.lockDir(indexDir))(
-      rebuildIvfIndexTree(corpus, idCol, vecCol, indexDir,
-        targetOccupancy, branch, trainIters, trainFraction, skewFactor))
-
-  /** The pinned branching factor of a TREE IVF index; None for the
-    * flat/two-level families (no branch column — the
-    * [[knnGraphIndexBranch]] convention). */
-  private def ivfIndexBranch(
-      spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Option[Int] =
-    metaInt(metaTable(spark, indexDir, "ivf index"), "branch")
-
-  /** The pinned constant-occupancy dial of a hierarchical IVF index;
-    * None for flat indexes (whose meta has no occupancy column —
-    * absence marks the family, the [[knnGraphIndexOccupancy]]
-    * convention). */
-  private def ivfIndexOccupancy(
-      spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Option[Int] =
-    metaInt(metaTable(spark, indexDir, "ivf index"), "occupancy")
+        trainFraction, maxCell, sizing))
 
   /** Occupancy-driven IVF index maintenance (r13, VERDICT r12 #7) —
     * the composition the monitor and the retrain each promised half
@@ -2277,14 +1766,16 @@ object Similarity {
     * ([[ivfIndexMeta]] — r14, never a caller arg), retrain under the
     * cross-process lock — a [[rebuildIvfIndex]] staged swap over the
     * index's OWN stored vectors (the assigned table carries them, so
-    * maintenance needs no external corpus handle), with nCells
-    * re-derived from the CURRENT corpus count via the balanced dial
-    * (drift usually means the corpus outgrew the old nCells). Probes
-    * racing the swap see old-or-new, never a new quantizer over old
-    * cells ([[IndexLayout.stagedRebuild]]'s guarantee). Returns true
-    * iff a rebuild ran. Quiesce appends while maintenance runs (the
-    * family contract — use the Locked append variants so the DirLock
-    * serializes them against this). */
+    * maintenance needs no external corpus handle), with the quantizer
+    * re-derived from the CURRENT corpus count under the index's pinned
+    * [[Sizing]] (drift usually means the corpus outgrew the old
+    * nCells; a constant-occupancy index keeps its dials and only its
+    * level sizes grow). Probes racing the swap see old-or-new, never a
+    * new quantizer over old cells ([[IndexLayout.stagedRebuild]]'s
+    * guarantee). Returns true iff a rebuild ran. Quiesce appends while
+    * maintenance runs (the family contract — run them under
+    * [[IndexLayout.locked]] so the DirLock serializes them against
+    * this). */
   def maintainIvfIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, maxOversizedCells: Int = 0,
       trainIters: Int = 2, trainFraction: Double = 1.0,
@@ -2310,40 +1801,18 @@ object Similarity {
       .limit(maxOversizedCells + 1).count() // bounded monitor job
     if (oversized <= maxOversizedCells) false
     else {
-      graft.fs.DirLock.withLock(IndexLayout.lockDir(indexDir)) {
+      IndexLayout.locked(indexDir) {
         val corpus = stored().select(col("neighbor_id"), col("cv"))
-        (ivfIndexOccupancy(spark, indexDir),
-            ivfIndexBranch(spark, indexDir)) match {
-          // tree index (r16): retrain at the PINNED (occupancy,
-          // branch) — level sizes re-derive from the grown count,
-          // the dials themselves never move (the
-          // maintainKnnGraphIndex dispatch pattern)
-          case (Some(occ), Some(br)) =>
-            rebuildIvfIndexTree(corpus, "neighbor_id", "cv", indexDir,
-              targetOccupancy = occ, branch = br,
-              trainIters = trainIters, trainFraction = trainFraction,
-              skewFactor = skewFactor)
-          // hierarchical index (r15): the retrain stays at the PINNED
-          // constant occupancy — nCoarse/nFine re-derive from the
-          // grown count, the dial itself never moves
-          case (Some(occ), None) =>
-            rebuildIvfIndexHier(corpus, "neighbor_id", "cv", indexDir,
-              targetOccupancy = occ, trainIters, trainFraction,
-              skewFactor = skewFactor)
-          case _ =>
-            val n = corpus.count()
-            val occ = balancedOccupancy(n, minOccupancy)
-            // re-pin max_cell at skewFactor × the rescaled occupancy
-            // (the maintainKnnGraphIndex convention): a cap frozen at
-            // the old corpus size would flag perfectly normal cells
-            // of the rescaled quantizer and thrash the rebuild
-            rebuildIvfIndex(corpus, "neighbor_id", "cv", indexDir,
-              nCells = cellsForOccupancy(n, occ), trainIters,
-              trainFraction,
-              maxCell = math.min(Int.MaxValue.toLong,
-                skewFactor.toLong * occ).toInt,
-              minOccupancy = minOccupancy)
-        }
+        val sizing = indexSizing(spark, indexDir, "ivf index",
+          minOccupancy)
+        val n = corpus.count()
+        // re-pin max_cell at skewFactor × the rescaled occupancy (the
+        // maintainKnnGraphIndex convention): a cap frozen at the old
+        // corpus size would flag perfectly normal cells of the
+        // rescaled quantizer and thrash the rebuild
+        rebuildIvfIndex(corpus, "neighbor_id", "cv", indexDir,
+          sizing.quantizer(n), trainIters, trainFraction,
+          sizing.maxCell(n, skewFactor), sizing)
       }
       true
     }
@@ -2357,7 +1826,7 @@ object Similarity {
     // NAMED error for a pre-r14 index (r15, ADVICE r14): an index
     // persisted before meta existed would otherwise die in a raw
     // path-not-found from the parquet reader — name the cause and the
-    // remedy instead (the knnGraphIndexOccupancy tolerant-read spirit)
+    // remedy instead
     val metaPath = new org.apache.hadoop.fs.Path(s"$indexDir/meta")
     val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(metaPath),
@@ -2499,7 +1968,7 @@ object Similarity {
     * assigned scan carries a partition filter over the probed cells
     * (≤ queries·nProbe distinct values, bounded by nCells, so the
     * driver-side cell list is broadcast-sized by definition). A
-    * [[buildIvfIndexHier]] index probes coarse-then-fine
+    * `Levels` index probes coarse-then-fine
     * ([[ivfProbesHier]]); `nProbeCoarse` (default = nProbe) is that
     * family's recall dial and is ignored for flat indexes. */
   def ivfTopKFromIndex(queries: DataFrame, indexDir: String,

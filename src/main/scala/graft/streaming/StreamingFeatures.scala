@@ -478,7 +478,8 @@ object StreamingFeatures {
     * BACKING INDEX at scale (r18, VERDICT r17 #9 — posture only,
     * semantics identical through the family-blind dispatch): build
     * the gate's index with
-    * [[graft.operators.Similarity.buildIvfIndexTree]] — the measured
+    * [[graft.operators.Similarity.buildIvfIndex]] over a
+    * [[graft.operators.Sizing.Tree]] quantizer — the measured
     * scale mode (constant occupancy AND O(branch·log N) assignment;
     * BASELINE.md tree-vs-hier rows: ~1.7× cheaper index cpu, ~2.5×
     * cheaper gate cpu than the two-level build at sf100). The flat

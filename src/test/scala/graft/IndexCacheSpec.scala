@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Similarity
+import graft.operators.{Similarity, Sizing}
 import graft.plans.BoundedTopK
 
 /** r18 lifecycle-cost specs (VERDICT r17 #1/#2/#5/#6/#7): the
@@ -31,14 +31,14 @@ class IndexCacheSpec extends SparkSpec {
     val dir = tmpDir("ivf_meta_cache") + "/idx"
     val all = annFixture
     Similarity.buildIvfIndex(all, "id", "v", dir, nCells = 2,
-      trainIters = 1, maxCell = 7, minOccupancy = 3)
+      trainIters = 1, maxCell = 7, sizing = Sizing.Balanced(3))
     assert(Similarity.ivfIndexMeta(spark, dir) == ((7, 3)))
     // repeated read rides the memo — same values, no staleness
     assert(Similarity.ivfIndexMeta(spark, dir) == ((7, 3)))
     // overwrite the index with different pinned dials: the meta files'
     // listing signature changes, so the memo MUST miss and re-read
     Similarity.buildIvfIndex(all, "id", "v", dir, nCells = 2,
-      trainIters = 1, maxCell = 9, minOccupancy = 4)
+      trainIters = 1, maxCell = 9, sizing = Sizing.Balanced(4))
     assert(Similarity.ivfIndexMeta(spark, dir) == ((9, 4)),
       "rebuild at the same path served a stale cached meta row")
   }
@@ -72,9 +72,10 @@ class IndexCacheSpec extends SparkSpec {
     val dir = tmpDir("arr_sibling") + "/idx"
     val all = annFixture
     // forced-deep tree: 60 rows, occ 2, branch 2 → 4 persisted levels
-    Similarity.buildIvfIndexTree(all, "id", "v", dir,
-      targetOccupancy = 2, branch = 2, trainIters = 1,
-      trainFraction = 0.5, skewFactor = 64)
+    val tree = Sizing.Tree(2, branch = 2)
+    Similarity.buildIvfIndex(all, "id", "v", dir,
+      nCells = tree.quantizer(all.count()), trainIters = 1,
+      trainFraction = 0.5, maxCell = 64 * 2, sizing = tree)
     val levelDirs = Iterator.from(1)
       .map(i => s"$dir/centroids_level_$i")
       .takeWhile(p => new java.io.File(p).exists).toSeq

@@ -914,7 +914,7 @@ class OperatorsSpec extends SparkSpec {
         (id, vec(base, if (id % 2 == 0) 1 else -1, (id % 5 - 2).toInt))
       }
     val emb = rows.toDF("vec_id", "embedding")
-    val cent = Similarity.kmeansFit(emb, "vec_id", "embedding", nCells = 3, iters = 3)
+    val cent = Similarity.kmeansFit(emb, "vec_id", "embedding", nCells = 3, iters = 3).coarse
     // trained centroids cover at least two clusters beyond the seed's
     val dirs = cent.map(_._2.zipWithIndex.maxBy(_._1)._2).toSet
     assert(dirs.size >= 2, s"centroids still degenerate: $cent")
@@ -941,7 +941,7 @@ class OperatorsSpec extends SparkSpec {
     val emb = (0 until 40).map(i =>
         (100000L + i * 37L, Seq.tabulate(5)(d => math.sin(i * 5 + d))))
       .toDF("vec_id", "embedding")
-    val cent = Similarity.kmeansFit(emb, "vec_id", "embedding", nCells = 4, iters = 1)
+    val cent = Similarity.kmeansFit(emb, "vec_id", "embedding", nCells = 4, iters = 1).coarse
     assert(cent.length == 4)
     assert(cent.forall(_._1 >= 100000L), "cell ids are the seeds' corpus ids")
     val out = Similarity.ivfTopK(emb.filter($"vec_id" < 100200L), emb,
@@ -951,11 +951,11 @@ class OperatorsSpec extends SparkSpec {
 
   test("quantizer training on the hash sample is deterministic and keeps the seed cells") {
     val emb = Tables.embeddings(spark, sf)
-    val full = Similarity.kmeansFit(emb, "vec_id", "embedding", 8, 2)
+    val full = Similarity.kmeansFit(emb, "vec_id", "embedding", 8, 2).coarse
     val samp = Similarity.kmeansFit(emb, "vec_id", "embedding", 8, 2,
-      trainFraction = 0.25)
+      trainFraction = 0.25).coarse
     val samp2 = Similarity.kmeansFit(emb, "vec_id", "embedding", 8, 2,
-      trainFraction = 0.25)
+      trainFraction = 0.25).coarse
     assert(samp == samp2, "sample training must be deterministic")
     assert(samp.map(_._1) == full.map(_._1),
       "cell ids (seeds) are independent of the training fraction")

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{CorpusStats, Profile, Scd2}
+import graft.operators.{CorpusStats, Profile, Quantizer, Scd2, Sizing}
 
 /** Specs for the r5 pipeline additions: SCD2 history build, table
   * profiling, bigram collocations. */
@@ -1467,9 +1467,9 @@ class PipelineOpsSpec extends SparkSpec {
     java.nio.file.Files.setLastModifiedTime(lock,
       java.nio.file.attribute.FileTime.fromMillis(
         System.currentTimeMillis() - graft.fs.DirLock.StealAfterMs - 1000))
-    Dedup.appendToSpanIndexLocked(
+    graft.operators.IndexLayout.locked(dir)(Dedup.appendToSpanIndex(
       Seq((200L, s"$shared tail words")).toDF("doc_id", "text"),
-      "text", "doc_id", k = 4, dir, batchId = 0L)
+      "text", "doc_id", k = 4, dir, batchId = 0L))
     assert(!java.nio.file.Files.exists(lock), "lock released after steal")
     // the append landed: the shared span's folded doc count is now 2
     val maxDocs = spark.read.parquet(s"$dir/spans")
@@ -1491,7 +1491,8 @@ class PipelineOpsSpec extends SparkSpec {
       mk(10, 0.0, 1.0), mk(11, 0.1, 0.9)).toDF("id", "v")
     // the thresholds are pinned AT BUILD — maintain takes none
     Similarity.buildIvfIndex(corpus, "id", "v", dir, nCells = 2,
-      trainIters = 2, maxCell = 4, minOccupancy = 2)
+      trainIters = 2, maxCell = 4,
+      sizing = graft.operators.Sizing.Balanced(2))
     // healthy (2 per cell ≤ pinned 4): the monitor must NOT rebuild
     assert(!Similarity.maintainIvfIndex(spark, dir),
       "healthy index was rebuilt")
@@ -1554,8 +1555,8 @@ class PipelineOpsSpec extends SparkSpec {
         threshold = 0.8, maxCell = 100)
       .orderBy("id_a", "id_b")
       .as[(Long, Long, Long, Double)].collect().toSeq
-    val hierPairs = Similarity.semDedupPairsHier(corpus, "id", "v",
-        nCoarse = 1, nFinePerCoarse = 6, trainIters = 2,
+    val hierPairs = Similarity.semDedupPairs(corpus, "id", "v",
+        nCells = Quantizer.Levels(Seq(1, 6)), trainIters = 2,
         trainFraction = 0.5, threshold = 0.8, maxCell = 100)
       .orderBy("id_a", "id_b")
       .as[(Long, Long, Long, Double)].collect().toSeq
@@ -1566,8 +1567,8 @@ class PipelineOpsSpec extends SparkSpec {
         nCells = 6, trainIters = 2, trainFraction = 0.5, maxCell = 100)
       .orderBy("query_id", "rank")
       .as[(Long, Long, Double, Int)].collect().toSeq
-    val hierGraph = Similarity.knnGraphHier(corpus, "id", "v", k = 3,
-        nCoarse = 1, nFinePerCoarse = 6, trainIters = 2,
+    val hierGraph = Similarity.knnGraph(corpus, "id", "v", k = 3,
+        nCells = Quantizer.Levels(Seq(1, 6)), trainIters = 2,
         trainFraction = 0.5, maxCell = 100)
       .orderBy("query_id", "rank")
       .as[(Long, Long, Double, Int)].collect().toSeq
@@ -1578,17 +1579,16 @@ class PipelineOpsSpec extends SparkSpec {
     // pair contract
     val (nc, nf) = Similarity.hierCells(60L, targetOccupancy = 8)
     assert(nc == 3 && nf == 3, s"hierCells(60, 8) = ($nc, $nf)") // 8 cells
-    val (coarse, fine) = Similarity.kmeansFitHier(corpus, "id", "v",
-      nCoarse = nc, nFinePerCoarse = nf, iters = 2, trainFraction = 0.5)
-    val assigned = Similarity.assignCellsHier(corpus, "id", "v",
-      coarse, fine)
+    val cent = Similarity.kmeansFit(corpus, "id", "v",
+      Quantizer.Levels(Seq(nc, nf)), iters = 2, trainFraction = 0.5)
+    val assigned = Similarity.assignCells(corpus, "id", "v", cent)
     assert(assigned.count() == 60, "hier assignment dropped rows")
     assert(assigned.filter(col("cell").isNull || col("cell") < 0)
       .count() == 0, "unassigned rows")
     // fine cells nest inside coarse cells: distinct fine cells ≤ nCells
     assert(assigned.select("cell").distinct().count() <= nc.toLong * nf)
-    val pairsH = Similarity.semDedupPairsHier(corpus, "id", "v",
-      nCoarse = nc, nFinePerCoarse = nf, trainIters = 2,
+    val pairsH = Similarity.semDedupPairs(corpus, "id", "v",
+      nCells = Quantizer.Levels(Seq(nc, nf)), trainIters = 2,
       trainFraction = 0.5, threshold = 0.8, maxCell = 100)
     assert(pairsH.filter(col("sim") < 0.8).count() == 0)
     assert(pairsH.filter(col("id_a") >= col("id_b")).count() == 0)
@@ -1653,9 +1653,10 @@ class PipelineOpsSpec extends SparkSpec {
         threshold = 0.8, maxCell = 100)
       .orderBy("id_a", "id_b")
       .as[(Long, Long, Long, Double)].collect().toSeq
-    val tree1 = Similarity.semDedupPairsTree(corpus, "id", "v",
-        targetOccupancy = 8, branch = 64, trainIters = 2,
-        trainFraction = 0.5, threshold = 0.8, maxCell = 100)
+    val tree1 = Similarity.semDedupPairs(corpus, "id", "v",
+        nCells = Sizing.Tree(8, branch = 64).quantizer(corpus.count()),
+        trainIters = 2, trainFraction = 0.5, threshold = 0.8,
+        maxCell = 100)
       .orderBy("id_a", "id_b")
       .as[(Long, Long, Long, Double)].collect().toSeq
     assert(flat.nonEmpty && tree1 == flat,
@@ -1664,9 +1665,9 @@ class PipelineOpsSpec extends SparkSpec {
         nCells = 8, trainIters = 2, trainFraction = 0.5, maxCell = 100)
       .orderBy("query_id", "rank")
       .as[(Long, Long, Double, Int)].collect().toSeq
-    val tree1G = Similarity.knnGraphTree(corpus, "id", "v", k = 3,
-        targetOccupancy = 8, branch = 64, trainIters = 2,
-        trainFraction = 0.5, maxCell = 100)
+    val tree1G = Similarity.knnGraph(corpus, "id", "v", k = 3,
+        nCells = Sizing.Tree(8, branch = 64).quantizer(corpus.count()),
+        trainIters = 2, trainFraction = 0.5, maxCell = 100)
       .orderBy("query_id", "rank")
       .as[(Long, Long, Double, Int)].collect().toSeq
     assert(tree1G == flatG, "depth-1 tree knnGraph != flat")
@@ -1675,15 +1676,14 @@ class PipelineOpsSpec extends SparkSpec {
     // contract held
     val sizes = Similarity.treeLevelSizes(60, 2, branch = 2)
     assert(sizes.length >= 3 && sizes.product >= 30, s"sizes=$sizes")
-    val (coarse, levels) = Similarity.kmeansFitTree(corpus, "id", "v",
-      sizes, iters = 2, trainFraction = 0.5)
-    assert(levels.length == sizes.length - 1)
-    val assigned = Similarity.assignCellsTree(corpus, "id", "v",
-      coarse, levels)
+    val cent = Similarity.kmeansFit(corpus, "id", "v",
+      Quantizer.Levels(sizes), iters = 2, trainFraction = 0.5)
+    assert(cent.levels.length == sizes.length - 1)
+    val assigned = Similarity.assignCells(corpus, "id", "v", cent)
     assert(assigned.count() == 60, "tree assignment dropped rows")
     assert(assigned.filter(col("cell").isNull).count() == 0)
-    val pairsT = Similarity.semDedupPairsTree(corpus, "id", "v",
-      targetOccupancy = 2, branch = 2, trainIters = 2,
+    val pairsT = Similarity.semDedupPairs(corpus, "id", "v",
+      nCells = Quantizer.Levels(sizes), trainIters = 2,
       trainFraction = 0.5, threshold = 0.8, maxCell = 100)
     assert(pairsT.filter(col("sim") < 0.8 ||
       col("id_a") >= col("id_b")).count() == 0)
@@ -1709,12 +1709,12 @@ class PipelineOpsSpec extends SparkSpec {
     }.toDF("id", "v")
     val corpusA = all.filter(col("id") < 40)
     val batchB = all.filter(col("id") >= 40)
-    Similarity.buildKnnGraphIndexHier(corpusA, "id", "v", dir, k = 3,
-      targetOccupancy = 8, trainIters = 2, trainFraction = 0.5)
+    buildKnnUnder(corpusA, dir, k = 3, Sizing.TwoLevel(8),
+      trainFraction = 0.5)
     // the constant dial is pinned in meta; the fine table persists
     val meta = spark.read.parquet(s"$dir/meta").collect()(0)
     assert(meta.getAs[Int]("occupancy") == 8 && meta.getAs[Int]("k") == 3)
-    assert(spark.read.parquet(s"$dir/centroids_fine").count() > 0)
+    assert(spark.read.parquet(s"$dir/centroids_level_1").count() > 0)
     // the shared append path detects the hier quantizer
     Similarity.appendToKnnGraphIndex(batchB, "id", "v", dir, batchId = 0L)
     def served() = Similarity.knnGraphFromIndex(spark, dir)
@@ -1724,11 +1724,8 @@ class PipelineOpsSpec extends SparkSpec {
     // reference: assign the UNION under the PERSISTED frozen quantizer
     // (read back from the index), within-cell top-k via window rank —
     // build + append must equal the full recompute exactly
-    val coarse = spark.read.parquet(s"$dir/centroids")
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toSeq))
-      .sortBy(_._1).toSeq
-    val fine = spark.read.parquet(s"$dir/centroids_fine")
-    val assigned = Similarity.assignCellsHier(all, "id", "v", coarse, fine)
+    val assigned = Similarity.assignCells(all, "id", "v",
+        persistedCentroids(dir, Seq(s"$dir/centroids_level_1")))
       .localCheckpoint(false)
     val ref = assigned.as("a")
       .join(assigned.as("b"),
@@ -1755,10 +1752,10 @@ class PipelineOpsSpec extends SparkSpec {
       .createTempDirectory("knn_hier_m").toString + "/idx"
     val mk = (id: Long, x: Double, y: Double) =>
       (id, Seq(x.toFloat, y.toFloat))
-    Similarity.buildKnnGraphIndexHier(
+    buildKnnUnder(
       Seq(mk(1, 1.0, 0.0), mk(2, 0.9, 0.1), mk(10, 0.0, 1.0),
         mk(11, 0.1, 0.9)).toDF("id", "v"),
-      "id", "v", dir2, k = 2, targetOccupancy = 4, trainIters = 2,
+      dir2, k = 2, Sizing.TwoLevel(4),
       skewFactor = 2) // pinned max_cell = 8; 4-row corpus → 1 cell
     assert(!Similarity.maintainKnnGraphIndex(spark, dir2),
       "healthy hier index was rebuilt")
@@ -1773,7 +1770,7 @@ class PipelineOpsSpec extends SparkSpec {
     val meta2 = spark.read.parquet(s"$dir2/meta").collect()(0)
     assert(meta2.getAs[Int]("occupancy") == 4,
       "maintain moved the pinned constant-occupancy dial")
-    assert(spark.read.parquet(s"$dir2/centroids_fine").count() > 1,
+    assert(spark.read.parquet(s"$dir2/centroids_level_1").count() > 1,
       "retrain did not rescale the fine layer")
     // every node in a cell with >= 2 members is served (a singleton
     // cell has no within-cell neighbors — the documented recall
@@ -1802,7 +1799,7 @@ class PipelineOpsSpec extends SparkSpec {
     // DirLock and halts inside the critical section; the family's
     // Locked append must steal the aged orphan, land its batch, and
     // release. One scenario per family over the same proven protocol.
-    import graft.operators.{Dedup, Retrieval, Similarity}
+    import graft.operators.{Dedup, IndexLayout, Retrieval, Similarity}
     val mkv = (id: Long, x: Double, y: Double) =>
       (id, Seq(x.toFloat, y.toFloat))
     val vecs = Seq(mkv(1, 1.0, 0.0), mkv(2, 0.9, 0.1),
@@ -1814,27 +1811,27 @@ class PipelineOpsSpec extends SparkSpec {
     val families: Seq[(String, String => Unit, String => Unit)] = Seq(
       ("keyword",
         dir => Retrieval.buildKeywordIndex(docs, "doc_id", "text", dir),
-        dir => Retrieval.appendToKeywordIndexLocked(dbatch, "doc_id",
-          "text", dir, batchId = 0L)),
+        dir => IndexLayout.locked(dir)(Retrieval.appendToKeywordIndex(
+          dbatch, "doc_id", "text", dir, batchId = 0L))),
       ("minhash",
         dir => Dedup.buildMinhashIndex(docs, "text", "doc_id", dir),
-        dir => Dedup.appendToMinhashIndexLocked(dbatch, "text",
-          "doc_id", dir, batchId = 0L)),
+        dir => IndexLayout.locked(dir)(Dedup.appendToMinhashIndex(
+          dbatch, "text", "doc_id", dir, batchId = 0L))),
       ("ivf",
         dir => Similarity.buildIvfIndex(vecs, "id", "v", dir,
           nCells = 2, trainIters = 1),
-        dir => Similarity.appendToIvfIndexLocked(vbatch, "id", "v",
-          dir, batchId = 0L)),
+        dir => IndexLayout.locked(dir)(Similarity.appendToIvfIndex(
+          vbatch, "id", "v", dir, batchId = 0L))),
       ("pq",
         dir => Similarity.buildPqIndex(vecs, "id", "v", dir, m = 2,
           nCents = 2, trainIters = 1),
-        dir => Similarity.appendToPqIndexLocked(vbatch, "id", "v",
-          dir, batchId = 0L)),
+        dir => IndexLayout.locked(dir)(Similarity.appendToPqIndex(
+          vbatch, "id", "v", dir, batchId = 0L))),
       ("knngraph",
         dir => Similarity.buildKnnGraphIndex(vecs, "id", "v", dir,
           k = 2, nCells = 2, trainIters = 1),
-        dir => Similarity.appendToKnnGraphIndexLocked(vbatch, "id",
-          "v", dir, batchId = 0L)))
+        dir => IndexLayout.locked(dir)(Similarity.appendToKnnGraphIndex(
+          vbatch, "id", "v", dir, batchId = 0L))))
     val javaBin = java.nio.file.Paths
       .get(System.getProperty("java.home"), "bin", "java").toString
     for ((family, build, lockedAppend) <- families) {
@@ -1874,6 +1871,38 @@ class PipelineOpsSpec extends SparkSpec {
       assert(new java.io.File(s"$dir/$sub/batch_id=0").exists(),
         s"$family: appended batch partition missing")
     }
+  }
+
+  test("staged rebuild under IndexLayout.locked: probe-identical to a " +
+      "plain rebuild of the same corpus, lock released, no stage left") {
+    import graft.operators.{IndexLayout, Similarity}
+    val all = annFixture
+    def mkDir(tag: String) =
+      java.nio.file.Files.createTempDirectory(tag).toString + "/idx"
+    val lockedDir = mkDir("ivf_locked_rebuild")
+    val plainDir = mkDir("ivf_plain_rebuild")
+    Seq(lockedDir, plainDir).foreach(d => Similarity.buildIvfIndex(
+      all.filter(col("id") < 40), "id", "v", d, nCells = 2,
+      trainIters = 1))
+    IndexLayout.locked(lockedDir)(Similarity.rebuildIvfIndex(all, "id",
+      "v", lockedDir, nCells = 4, trainIters = 2))
+    Similarity.rebuildIvfIndex(all, "id", "v", plainDir, nCells = 4,
+      trainIters = 2)
+    val queries = all.filter(col("id").isin(0L, 1L, 50L))
+    def probe(dir: String) = Similarity.ivfTopKFromIndex(queries, dir,
+        "id", "v", k = 5, nProbe = 2)
+      .orderBy("query_id", "rank")
+      .as[(Long, Long, Double, Int)].collect().toSeq
+    val got = probe(lockedDir)
+    assert(got.nonEmpty && got == probe(plainDir),
+      "locked rebuild probe != plain rebuild probe")
+    assert(spark.read.parquet(s"$lockedDir/centroids").count() == 4,
+      "the locked rebuild did not swap in the retrained quantizer")
+    assert(!new java.io.File(
+      s"${IndexLayout.lockDir(lockedDir)}/_LOCK").exists,
+      "locked rebuild left its _LOCK behind")
+    assert(!new java.io.File(s"${lockedDir}__staged").exists,
+      "locked rebuild left its stage behind")
   }
 
   test("pq append: probes find appended vectors under the frozen " +
@@ -2114,6 +2143,37 @@ class PipelineOpsSpec extends SparkSpec {
 
   /** Shared 60-row, 3-cluster, 4-d embedding fixture for the persisted
     * ANN index family specs. */
+  /** The constant-occupancy index builds the declared queries make:
+    * quantizer and skew cap derived from the corpus count under
+    * `sizing`, which meta pins. */
+  private def buildIvfUnder(corpus: org.apache.spark.sql.DataFrame,
+      dir: String, sizing: Sizing, skewFactor: Int = 64,
+      trainFraction: Double = 1.0): Unit = {
+    val n = corpus.count()
+    graft.operators.Similarity.buildIvfIndex(corpus, "id", "v", dir,
+      sizing.quantizer(n), trainIters = 2, trainFraction,
+      sizing.maxCell(n, skewFactor), sizing)
+  }
+
+  private def buildKnnUnder(corpus: org.apache.spark.sql.DataFrame,
+      dir: String, k: Int, sizing: Sizing, skewFactor: Int = 64,
+      trainFraction: Double = 1.0): Unit = {
+    val n = corpus.count()
+    graft.operators.Similarity.buildKnnGraphIndex(corpus, "id", "v", dir,
+      k, sizing.quantizer(n), trainIters = 2, trainFraction,
+      sizing.maxCell(n, skewFactor), sizing)
+  }
+
+  /** A persisted index's quantizer read back from disk. */
+  private def persistedCentroids(dir: String,
+      levelDirs: Seq[String]): graft.operators.Similarity.Centroids =
+    graft.operators.Similarity.Centroids(
+      spark.read.parquet(s"$dir/centroids")
+        .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toSeq))
+        .sortBy(_._1).toSeq,
+      levelDirs.map(p => spark.read.parquet(p)
+        .select(col("ccell"), col("cell_id"), col("cv"))))
+
   private def annFixture = {
     val bases = Vector(
       Vector(1.0, 0.1, 0.0, 0.0), Vector(0.0, 1.0, 0.1, 0.0),
@@ -2138,21 +2198,16 @@ class PipelineOpsSpec extends SparkSpec {
       .select(col("id"), col("v").cast("array<double>").as("v"))
     val corpusA = all.filter(col("id") < 40)
     val batchB = all.filter(col("id") >= 40)
-    Similarity.buildIvfIndexHier(corpusA, "id", "v", dir,
-      targetOccupancy = 8, trainIters = 2, trainFraction = 0.5)
+    buildIvfUnder(corpusA, dir, Sizing.TwoLevel(8), trainFraction = 0.5)
     // the constant dial is pinned in meta; the fine table persists
     val meta = spark.read.parquet(s"$dir/meta").collect()(0)
     assert(meta.getAs[Int]("occupancy") == 8, "occupancy not pinned")
-    assert(spark.read.parquet(s"$dir/centroids_fine").count() > 0)
+    assert(spark.read.parquet(s"$dir/centroids_level_1").count() > 0)
     // the SHARED append path detects the hier quantizer: the batch's
     // cells equal the persisted coarse+fine walk's assignment
     Similarity.appendToIvfIndex(batchB, "id", "v", dir, batchId = 0L)
-    val coarse = spark.read.parquet(s"$dir/centroids")
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toSeq))
-      .sortBy(_._1).toSeq
-    val fine = spark.read.parquet(s"$dir/centroids_fine")
-    val refCells = Similarity.assignCellsHier(batchB, "id", "v",
-        coarse, fine)
+    val cent = persistedCentroids(dir, Seq(s"$dir/centroids_level_1"))
+    val refCells = Similarity.assignCells(batchB, "id", "v", cent)
       .select(col("id"), col("cell")).as[(Long, Long)].collect().toSet
     def appended() = spark.read.parquet(s"$dir/assigned")
       .filter(col("batch_id") === 0L)
@@ -2165,9 +2220,9 @@ class PipelineOpsSpec extends SparkSpec {
     assert(appended() == refCells, "replay changed the appended cells")
     // full-coarse, full-fine probe == brute force over the whole corpus
     val queries = all.filter(col("id").isin(0L, 1L, 50L))
-    val nFineTotal = fine.count().toInt
+    val nFineTotal = cent.levels.head.count().toInt
     def serve() = Similarity.ivfTopKFromIndex(queries, dir, "id", "v",
-        k = 5, nProbe = nFineTotal, nProbeCoarse = coarse.size)
+        k = 5, nProbe = nFineTotal, nProbeCoarse = cent.coarse.size)
       .orderBy("query_id", "rank")
       .as[(Long, Long, Double, Int)].collect().toSeq
     val bf = Similarity.bruteForceTopK(queries, all, "id", "v", k = 5)
@@ -2187,8 +2242,8 @@ class PipelineOpsSpec extends SparkSpec {
     val gotPairs = Similarity.semDedupAgainstIndex(batchC, dir, "id",
         "v", threshold = 0.99, maxCell = 100)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val unionAssign = Similarity.assignCellsHier(all.unionByName(batchC),
-        "id", "v", coarse, fine).localCheckpoint(false)
+    val unionAssign = Similarity.assignCells(all.unionByName(batchC),
+        "id", "v", cent).localCheckpoint(false)
     val refPairs = unionAssign.as("a").join(unionAssign.as("b"),
         col("a.cell") === col("b.cell") &&
           col("a.id") =!= col("b.id") && col("b.id") >= 100L &&
@@ -2207,11 +2262,10 @@ class PipelineOpsSpec extends SparkSpec {
       .createTempDirectory("ivf_hier_m").toString + "/idx"
     val mk = (id: Long, x: Double, y: Double) =>
       (id, Seq(x.toFloat, y.toFloat))
-    Similarity.buildIvfIndexHier(
+    buildIvfUnder(
       Seq(mk(1, 1.0, 0.0), mk(2, 0.9, 0.1), mk(10, 0.0, 1.0),
         mk(11, 0.1, 0.9)).toDF("id", "v"),
-      "id", "v", dir2, targetOccupancy = 4, trainIters = 2,
-      skewFactor = 2) // pinned max_cell = 8
+      dir2, Sizing.TwoLevel(4), skewFactor = 2) // pinned max_cell = 8
     assert(!Similarity.maintainIvfIndex(spark, dir2),
       "healthy hier IVF index was rebuilt")
     val flood = (0 until 12).map { i =>
@@ -2224,7 +2278,7 @@ class PipelineOpsSpec extends SparkSpec {
     val meta2 = spark.read.parquet(s"$dir2/meta").collect()(0)
     assert(meta2.getAs[Int]("occupancy") == 4,
       "maintain moved the pinned constant-occupancy dial")
-    assert(spark.read.parquet(s"$dir2/centroids_fine").count() > 1,
+    assert(spark.read.parquet(s"$dir2/centroids_level_1").count() > 1,
       "retrain did not rescale the fine layer")
     // nothing lost: every vector (build + flood) is still assigned
     assert(spark.read.parquet(s"$dir2/assigned")
@@ -2246,9 +2300,8 @@ class PipelineOpsSpec extends SparkSpec {
     val batchB = all.filter(col("id") >= 40)
     // occ 2, branch 2 on 40 rows → 20 cells → level sizes force REAL
     // depth (≥ 3 levels), not the depth-1 flat degeneration
-    Similarity.buildKnnGraphIndexTree(corpusA, "id", "v", dir, k = 3,
-      targetOccupancy = 2, branch = 2, trainIters = 2,
-      trainFraction = 0.5, skewFactor = 64)
+    buildKnnUnder(corpusA, dir, k = 3, Sizing.Tree(2, branch = 2),
+      trainFraction = 0.5)
     val meta = spark.read.parquet(s"$dir/meta").collect()(0)
     assert(meta.getAs[Int]("occupancy") == 2 &&
       meta.getAs[Int]("branch") == 2 && meta.getAs[Int]("k") == 3,
@@ -2266,13 +2319,8 @@ class PipelineOpsSpec extends SparkSpec {
     val s1 = served()
     // reference: assign the UNION under the PERSISTED frozen tree,
     // within-cell top-k — build + append must equal the recompute
-    val coarse = spark.read.parquet(s"$dir/centroids")
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toSeq))
-      .sortBy(_._1).toSeq
-    val levels = levelDirs.map(p => spark.read.parquet(p)
-      .select(col("ccell"), col("cell_id"), col("cv")))
-    val assigned = Similarity.assignCellsTree(all, "id", "v", coarse,
-      levels).localCheckpoint(false)
+    val assigned = Similarity.assignCells(all, "id", "v",
+      persistedCentroids(dir, levelDirs)).localCheckpoint(false)
     val ref = assigned.as("a")
       .join(assigned.as("b"),
         col("a.cell") === col("b.cell") && col("a.id") =!= col("b.id"))
@@ -2296,11 +2344,11 @@ class PipelineOpsSpec extends SparkSpec {
       .createTempDirectory("knn_tree_m").toString + "/idx"
     val mk = (id: Long, x: Double, y: Double) =>
       (id, Seq(x.toFloat, y.toFloat))
-    Similarity.buildKnnGraphIndexTree(
+    buildKnnUnder(
       Seq(mk(1, 1.0, 0.0), mk(2, 0.9, 0.1), mk(10, 0.0, 1.0),
         mk(11, 0.1, 0.9)).toDF("id", "v"),
-      "id", "v", dir2, k = 2, targetOccupancy = 4, branch = 2,
-      trainIters = 2, skewFactor = 2) // pinned max_cell = 8
+      dir2, k = 2, Sizing.Tree(4, branch = 2),
+      skewFactor = 2) // pinned max_cell = 8
     assert(!Similarity.maintainKnnGraphIndex(spark, dir2),
       "healthy tree index was rebuilt")
     val flood = (0 until 12).map { i =>
@@ -2333,14 +2381,14 @@ class PipelineOpsSpec extends SparkSpec {
           trainIters = 2, trainFraction = 0.5, maxCell = 100)
         .orderBy("query_id", "rank")
         .as[(Long, Long, Double, Int)].collect().toSeq,
-      Similarity.knnGraphHier(corpus, "id", "v", k = 3, nCoarse = 3,
-          nFinePerCoarse = 3, trainIters = 2, trainFraction = 0.5,
-          maxCell = 100)
+      Similarity.knnGraph(corpus, "id", "v", k = 3,
+          nCells = Quantizer.Levels(Seq(3, 3)), trainIters = 2,
+          trainFraction = 0.5, maxCell = 100)
         .orderBy("query_id", "rank")
         .as[(Long, Long, Double, Int)].collect().toSeq,
-      Similarity.knnGraphTree(corpus, "id", "v", k = 3,
-          targetOccupancy = 8, branch = 4, trainIters = 2,
-          trainFraction = 0.5, maxCell = 100)
+      Similarity.knnGraph(corpus, "id", "v", k = 3,
+          nCells = Sizing.Tree(8, branch = 4).quantizer(corpus.count()),
+          trainIters = 2, trainFraction = 0.5, maxCell = 100)
         .orderBy("query_id", "rank")
         .as[(Long, Long, Double, Int)].collect().toSeq)
     val (flat0, hier0, tree0) = graphs()
@@ -2397,18 +2445,19 @@ class PipelineOpsSpec extends SparkSpec {
       .select(col("id"), col("v").cast("array<double>").as("v"))
     val dir = java.nio.file.Files
       .createTempDirectory("ivf_hier_shuffle").toString + "/idx"
-    Similarity.buildIvfIndexHier(all.filter(col("id") < 40), "id", "v",
-      dir, targetOccupancy = 8, trainIters = 2, trainFraction = 0.5)
+    buildIvfUnder(all.filter(col("id") < 40), dir, Sizing.TwoLevel(8),
+      trainFraction = 0.5)
     val queries = all.filter(col("id").isin(0L, 1L, 50L))
-    val nFineTotal = spark.read.parquet(s"$dir/centroids_fine")
+    val nFineTotal = spark.read.parquet(s"$dir/centroids_level_1")
       .count().toInt
     def serve() = Similarity.ivfTopKFromIndex(queries, dir, "id", "v",
         k = 5, nProbe = nFineTotal, nProbeCoarse = 64)
       .orderBy("query_id", "rank")
       .as[(Long, Long, Double, Int)].collect().toSeq
-    def treePairs() = Similarity.semDedupPairsTree(all, "id", "v",
-        targetOccupancy = 2, branch = 2, trainIters = 2,
-        trainFraction = 0.5, threshold = 0.8, maxCell = 100)
+    def treePairs() = Similarity.semDedupPairs(all, "id", "v",
+        nCells = Sizing.Tree(2, branch = 2).quantizer(all.count()),
+        trainIters = 2, trainFraction = 0.5, threshold = 0.8,
+        maxCell = 100)
       .orderBy("id_a", "id_b")
       .as[(Long, Long, Long, Double)].collect().toSeq
     val broadcastServe = serve()
@@ -2450,9 +2499,8 @@ class PipelineOpsSpec extends SparkSpec {
     val batchB = all.filter(col("id") >= 40)
     // occ 2, branch 2 on 40 rows → 20 cells → REAL depth (≥ 2 fine
     // levels), not the depth-1 flat degeneration
-    Similarity.buildIvfIndexTree(corpusA, "id", "v", dir,
-      targetOccupancy = 2, branch = 2, trainIters = 2,
-      trainFraction = 0.5, skewFactor = 64)
+    buildIvfUnder(corpusA, dir, Sizing.Tree(2, branch = 2),
+      trainFraction = 0.5)
     val meta = spark.read.parquet(s"$dir/meta").collect()(0)
     assert(meta.getAs[Int]("occupancy") == 2 &&
       meta.getAs[Int]("branch") == 2,
@@ -2465,13 +2513,8 @@ class PipelineOpsSpec extends SparkSpec {
     // the SHARED append path walks the persisted levels: the batch's
     // cells equal the frozen-tree walk's assignment
     Similarity.appendToIvfIndex(batchB, "id", "v", dir, batchId = 0L)
-    val coarse = spark.read.parquet(s"$dir/centroids")
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toSeq))
-      .sortBy(_._1).toSeq
-    val levels = levelDirs.map(p => spark.read.parquet(p)
-      .select(col("ccell"), col("cell_id"), col("cv")))
-    val refCells = Similarity.assignCellsTree(batchB, "id", "v",
-        coarse, levels)
+    val cent = persistedCentroids(dir, levelDirs)
+    val refCells = Similarity.assignCells(batchB, "id", "v", cent)
       .select(col("id"), col("cell")).as[(Long, Long)].collect().toSet
     def appended() = spark.read.parquet(s"$dir/assigned")
       .filter(col("batch_id") === 0L)
@@ -2484,7 +2527,7 @@ class PipelineOpsSpec extends SparkSpec {
     assert(appended() == refCells, "replay changed the appended cells")
     // full-probe serve (every level fully probed) == brute force
     val queries = all.filter(col("id").isin(0L, 1L, 50L))
-    val nDeepest = levels.last.count().toInt
+    val nDeepest = cent.levels.last.count().toInt
     def serve() = Similarity.ivfTopKFromIndex(queries, dir, "id", "v",
         k = 5, nProbe = nDeepest, nProbeCoarse = corpusA.count().toInt)
       .orderBy("query_id", "rank")
@@ -2506,8 +2549,8 @@ class PipelineOpsSpec extends SparkSpec {
     val gotPairs = Similarity.semDedupAgainstIndex(batchC, dir, "id",
         "v", threshold = 0.99, maxCell = 100)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val unionAssign = Similarity.assignCellsTree(all.unionByName(batchC),
-        "id", "v", coarse, levels).localCheckpoint(false)
+    val unionAssign = Similarity.assignCells(all.unionByName(batchC),
+        "id", "v", cent).localCheckpoint(false)
     val refPairs = unionAssign.as("a").join(unionAssign.as("b"),
         col("a.cell") === col("b.cell") &&
           col("a.id") =!= col("b.id") && col("b.id") >= 100L &&
@@ -2526,11 +2569,10 @@ class PipelineOpsSpec extends SparkSpec {
       .createTempDirectory("ivf_tree_m").toString + "/idx"
     val mk = (id: Long, x: Double, y: Double) =>
       (id, Seq(x.toFloat, y.toFloat))
-    Similarity.buildIvfIndexTree(
+    buildIvfUnder(
       Seq(mk(1, 1.0, 0.0), mk(2, 0.9, 0.1), mk(10, 0.0, 1.0),
         mk(11, 0.1, 0.9)).toDF("id", "v"),
-      "id", "v", dir2, targetOccupancy = 4, branch = 2,
-      trainIters = 2, skewFactor = 2) // pinned max_cell = 8
+      dir2, Sizing.Tree(4, branch = 2), skewFactor = 2) // pinned max_cell = 8
     assert(!Similarity.maintainIvfIndex(spark, dir2),
       "healthy tree IVF index was rebuilt")
     val flood = (0 until 12).map { i =>
@@ -2556,9 +2598,8 @@ class PipelineOpsSpec extends SparkSpec {
     // exactly the flat buildIvfIndex layout (family marker absent)
     val dir3 = java.nio.file.Files
       .createTempDirectory("ivf_tree_d1").toString + "/idx"
-    Similarity.buildIvfIndexTree(
-      Seq(mk(1, 1.0, 0.0), mk(2, 0.0, 1.0)).toDF("id", "v"),
-      "id", "v", dir3, targetOccupancy = 4, branch = 64, trainIters = 2)
+    buildIvfUnder(Seq(mk(1, 1.0, 0.0), mk(2, 0.0, 1.0)).toDF("id", "v"),
+      dir3, Sizing.Tree(4, branch = 64))
     assert(!new java.io.File(s"$dir3/centroids_level_1").exists,
       "depth-1 tree build persisted a level table")
   }
@@ -2569,9 +2610,9 @@ class PipelineOpsSpec extends SparkSpec {
       "re-key, result-identical (r17, VERDICT r16 #1)") {
     import graft.operators.Similarity
     val corpus = annFixture
-    def graph() = Similarity.knnGraphTree(corpus, "id", "v", k = 3,
-      targetOccupancy = 8, branch = 4, trainIters = 2,
-      trainFraction = 0.5, maxCell = 100)
+    def graph() = Similarity.knnGraph(corpus, "id", "v", k = 3,
+      nCells = Sizing.Tree(8, branch = 4).quantizer(corpus.count()),
+      trainIters = 2, trainFraction = 0.5, maxCell = 100)
     def collected(df: org.apache.spark.sql.DataFrame) = df
       .orderBy("query_id", "rank")
       .as[(Long, Long, Double, Int)].collect().toSeq
@@ -2710,9 +2751,8 @@ class PipelineOpsSpec extends SparkSpec {
       .createTempDirectory("ivf_tree_deep").toString + "/idx"
     val all = annFixture
       .select(col("id"), col("v").cast("array<double>").as("v"))
-    Similarity.buildIvfIndexTree(all, "id", "v", dir,
-      targetOccupancy = 2, branch = 2, trainIters = 2,
-      trainFraction = 0.5, skewFactor = 64)
+    buildIvfUnder(all, dir, Sizing.Tree(2, branch = 2),
+      trainFraction = 0.5)
     val levelDirs = Iterator.from(1)
       .map(i => s"$dir/centroids_level_$i")
       .takeWhile(p => new java.io.File(p).exists).toSeq

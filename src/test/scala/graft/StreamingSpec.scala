@@ -445,7 +445,8 @@ class StreamingSpec extends SparkSpec {
     // the maintenance thresholds are PINNED at build (r14 meta):
     // max_cell=4, min_occupancy=2 — the cadence hook takes none
     Similarity.buildIvfIndex(corpus, "vec_id", "embedding", dir,
-      nCells = 2, trainIters = 2, maxCell = 4, minOccupancy = 2)
+      nCells = 2, trainIters = 2, maxCell = 4,
+      sizing = graft.operators.Sizing.Balanced(2))
     def flood(base: Long, offsetDeg: Double) = (0 until 6).map { i =>
       val a = (offsetDeg + i * 15.0).toRadians
       mk(base + i, math.cos(a), math.sin(a))
@@ -492,9 +493,11 @@ class StreamingSpec extends SparkSpec {
     val mk = (id: Long, x: Double, y: Double) => (id, Seq(x.toFloat, y.toFloat))
     val corpus = Seq(mk(100, 1.0, 0.0), mk(101, 0.9, 0.1),
       mk(110, 0.0, 1.0), mk(111, 0.1, 0.9)).toDF("vec_id", "embedding")
-    Similarity.buildIvfIndexHier(corpus, "vec_id", "embedding", dir,
-      targetOccupancy = 2, trainIters = 2)
-    assert(spark.read.parquet(s"$dir/centroids_fine").count() > 0,
+    val hier = graft.operators.Sizing.TwoLevel(2)
+    Similarity.buildIvfIndex(corpus, "vec_id", "embedding", dir,
+      nCells = hier.quantizer(corpus.count()), trainIters = 2,
+      maxCell = 64 * 2, sizing = hier)
+    assert(spark.read.parquet(s"$dir/centroids_level_1").count() > 0,
       "fixture must exercise the hier layout")
     // 1 near-copies the corpus; 2 is novel; 3 near-copies 2
     val allVecs = Seq(mk(1, 0.99, 0.01), mk(2, 0.6, 0.8),
@@ -512,7 +515,7 @@ class StreamingSpec extends SparkSpec {
     // hier append actually landed in the cell the probe walks to
     assert(gate(Seq(3L), 1L).isEmpty, "batch-1 survivor's copy leaked")
     // the index stayed hierarchical throughout
-    assert(spark.read.parquet(s"$dir/centroids_fine").count() > 0)
+    assert(spark.read.parquet(s"$dir/centroids_level_1").count() > 0)
   }
 
   test("semantic gate rides a TREE IVF index: log-depth probes gate " +
@@ -528,8 +531,10 @@ class StreamingSpec extends SparkSpec {
       mk(110, 0.0, 1.0), mk(111, 0.1, 0.9),
       mk(112, 0.05, 0.95), mk(113, 0.15, 0.85))
       .toDF("vec_id", "embedding")
-    Similarity.buildIvfIndexTree(corpus, "vec_id", "embedding", dir,
-      targetOccupancy = 2, branch = 2, trainIters = 2)
+    val tree = graft.operators.Sizing.Tree(2, branch = 2)
+    Similarity.buildIvfIndex(corpus, "vec_id", "embedding", dir,
+      nCells = tree.quantizer(corpus.count()), trainIters = 2,
+      maxCell = 64 * 2, sizing = tree)
     assert(new java.io.File(s"$dir/centroids_level_1").exists,
       "fixture must exercise the tree layout")
     // 1 near-copies the corpus; 2 is novel; 3 near-copies 2
