@@ -1,5 +1,6 @@
 package graft.fs
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Bounded listing-signature memo for BOUNDED driver-side reads of
@@ -15,8 +16,8 @@ import org.apache.spark.sql.SparkSession
   * a build/rebuild/compact rewrites the path's files.
   *
   * The memo keys each (path, use) on the path's LISTING SIGNATURE —
-  * every file's name, length and mtime from one driver-side FS
-  * listing, no job. Any rewrite changes the signature (parquet part
+  * every file's name, length and mtime from one driver-side [[walk]],
+  * no job. Any rewrite changes the signature (parquet part
   * file names are unique per write), forcing one fresh read; a
   * missing path or listing failure bypasses the cache entirely (the
   * caller's own read raises its own named error). The `use` tag keys
@@ -48,43 +49,75 @@ private[graft] object PathSigCache {
           : Boolean = this.size() > MaxEntries
     }
 
-  /** The path's listing signature, or None when the path is missing
-    * or unlistable (callers then compute uncached). */
+  /** Every file under `path` (the path itself when it is a file),
+    * recursing into directories — one `listStatus` per directory, all
+    * from the driver. A file or directory whose name fails `keep` is
+    * skipped, with everything below it. Plain `listStatus`, not
+    * `listFiles`: the `LocatedFileStatus` that `listFiles` wraps each
+    * file in loads its permissions, and on the local filesystem that
+    * forks a process per file. A missing path throws
+    * `java.io.FileNotFoundException`. */
+  def walk(fs: FileSystem, path: Path,
+      keep: String => Boolean = _ => true): Array[FileStatus] = {
+    val out = Array.newBuilder[FileStatus]
+    def visit(dir: Path): Unit =
+      fs.listStatus(dir).foreach { st =>
+        if (keep(st.getPath.getName)) {
+          if (st.isDirectory) visit(st.getPath) else out += st
+        }
+      }
+    visit(path)
+    out.result()
+  }
+
+  /** The listing signature of `files`: each file's name, length and
+    * mtime. */
+  def signature(files: Array[FileStatus]): String = {
+    val sb = new StringBuilder
+    files.foreach { f =>
+      sb.append(f.getPath.getName).append(':').append(f.getLen)
+        .append(':').append(f.getModificationTime).append(';')
+    }
+    sb.toString
+  }
+
+  /** The path's listing signature over every file below it, hidden
+    * ones included, or None when the path is missing or unlistable
+    * (callers then compute uncached). */
   def signature(spark: SparkSession, path: String): Option[String] =
     try {
-      val hp = new org.apache.hadoop.fs.Path(path)
+      val hp = new Path(path)
       val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val it = fs.listFiles(hp, true)
-      val sb = new StringBuilder
-      while (it.hasNext) {
-        val f = it.next()
-        sb.append(f.getPath.getName).append(':').append(f.getLen)
-          .append(':').append(f.getModificationTime).append(';')
-      }
-      Some(sb.toString)
+      Some(signature(walk(fs, hp)))
     } catch { case _: java.io.IOException => None }
 
   /** `compute`, memoized on (path listing signature, use). */
   def cached[T](spark: SparkSession, path: String, use: String)(
       compute: => T): T =
     signature(spark, path) match {
-      case None => compute
-      case Some(sig) =>
-        val key = (path, use)
-        val hit = cache.synchronized {
-          Option(cache.get(key)) match {
-            case Some((`sig`, v)) => Some(v)
-            case _                => None
-          }
-        }
-        hit match {
-          case Some(v) => v.asInstanceOf[T]
-          case None =>
-            val v = compute // outside the lock: may run a Spark job
-            cache.synchronized { cache.put(key, (sig, v)) }
-            v
-        }
+      case None      => compute
+      case Some(sig) => cachedAt(path, use, sig)(compute)
     }
+
+  /** `compute`, memoized on (`sig`, use) for a caller that has already
+    * listed `path` and taken the listing's [[signature]]. */
+  def cachedAt[T](path: String, use: String, sig: String)(
+      compute: => T): T = {
+    val key = (path, use)
+    val hit = cache.synchronized {
+      Option(cache.get(key)) match {
+        case Some((`sig`, v)) => Some(v)
+        case _                => None
+      }
+    }
+    hit match {
+      case Some(v) => v.asInstanceOf[T]
+      case None =>
+        val v = compute // outside the lock: may run a Spark job
+        cache.synchronized { cache.put(key, (sig, v)) }
+        v
+    }
+  }
 
   /** Test hook: drop everything (a spec must not see a prior spec's
     * entries for a reused path). */

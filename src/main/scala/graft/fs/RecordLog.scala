@@ -1,6 +1,9 @@
 package graft.fs
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 
 /** Append-only entity-snapshot log — R7 `write_features`
@@ -9,9 +12,11 @@ import org.apache.spark.sql.functions._
   * Physical layout (designed for the 100 TB case, SURVEY.md §1.3-1.4):
   * one directory per (group, version) — `root/group=<name>/v=<n>/` —
   * partitioned by snapshot date (`p_date`). Group/version pruning is a
-  * directory lookup; date pruning is handled by Catalyst's
-  * PruneFileSourcePartitions; the `ts` min/max parquet stats skip files
-  * inside a day. Values are real typed columns (not the reference's
+  * directory lookup. A caller's filter on `p_date` prunes whole dates
+  * (Catalyst's PruneFileSourcePartitions); the point-in-time serves
+  * filter on `ts`, not `p_date`, so they prune no date and scan every
+  * file of the group, and only the `ts` min/max parquet stats skip row
+  * groups inside a file. Values are real typed columns (not the reference's
   * JSON-in-TEXT blob, feature_store.py:366) so scans are columnar and
   * filters/projections push down to the footer.
   *
@@ -70,7 +75,14 @@ final class RecordLog(val spark: SparkSession, val root: String) {
     * a log whose batches evolved — a feature added later — holds
     * heterogeneous file schemas, and this read can silently miss the
     * late-added column depending on which footer wins. Use
-    * [[readMerged]] for that case. */
+    * [[readMerged]] for that case.
+    *
+    * Listing: the group dir is walked once on the driver (see
+    * [[load]]) — one `listStatus` per directory, so O(date dirs)
+    * metadata calls per read. They are the same calls `spark.read`'s
+    * parallel listing job made from executors once a log passed 32
+    * date dirs, minus that job's scheduling; a read of an unchanged log
+    * schedules no Spark job. */
   def read(group: FeatureGroup): DataFrame = {
     // a crash mid-swap leaves some dates deleted and their replacement
     // still in the stage — reading that state silently serves partial
@@ -79,18 +91,59 @@ final class RecordLog(val spark: SparkSession, val root: String) {
     // contract — a concurrent reader during a crashed writer's window
     // was never safe)
     recoverCompact(group); recoverForget(group)
-    spark.read.parquet(dir(group))
+    load(group, Map.empty)
   }
 
   /** Schema-evolution-safe read: unions every file's parquet schema
     * (`mergeSchema`), so a feature column added by a later append
     * surfaces for the whole log, null-filled for rows written before
     * it existed — the standard append-only-log evolution contract.
-    * Costs a distributed footer-merge pass over the log's files; take
-    * [[read]] when the schema is known stable. */
+    * Costs a distributed footer-merge pass over the log's files the
+    * first time a listing is seen; take [[read]] when the schema is
+    * known stable. Lists like [[read]]. */
   def readMerged(group: FeatureGroup): DataFrame = {
     recoverCompact(group); recoverForget(group) // see read()
-    spark.read.option("mergeSchema", "true").parquet(dir(group))
+    load(group, Map("mergeSchema" -> "true"))
+  }
+
+  /** The log as `spark.read.options(options).parquet(dir)` reads it,
+    * from one driver-side [[PathSigCache.walk]] that skips what a
+    * file-source listing skips (`_SUCCESS`, `.crc`, `_temporary`, the
+    * stages). The walk seeds the [[InMemoryFileIndex]] in place of its
+    * own listing, so partition inference stays Spark's. The data schema
+    * is memoized on the walk's signature: any append, compaction,
+    * forget or expiry changes it and re-infers once. A missing or empty
+    * log raises the `AnalysisException` `spark.read` raises.
+    *
+    * Scale posture: every call lists from the driver, one metadata call
+    * per directory. The leaf statuses carry no block locations, so the
+    * scan asks for no locality (object stores have none to give). */
+  private def load(group: FeatureGroup, options: Map[String, String]): DataFrame = {
+    val base = new Path(dir(group))
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = fs.makeQualified(base)
+    val files =
+      try PathSigCache.walk(fs, root, n => !GraftBridge.hiddenPathName(n))
+      catch {
+        case _: java.io.FileNotFoundException =>
+          throw GraftBridge.pathNotFound(root.toString)
+      }
+    val listing: FileStatusCache = new FileStatusCache {
+      @volatile private var seed = Option(files)
+      override def getLeafFiles(p: Path): Option[Array[FileStatus]] =
+        if (p == root) seed else None
+      override def putLeafFiles(p: Path, leaves: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = seed = None
+    }
+    val index = new InMemoryFileIndex(spark, Seq(root), options, None, listing)
+    val format = new ParquetFileFormat
+    val dataSchema = PathSigCache.cachedAt(root.toString,
+        s"schema:${options.mkString(",")}", PathSigCache.signature(files)) {
+      format.inferSchema(spark, options, index.allFiles())
+        .getOrElse(throw GraftBridge.schemaNotInferred(format.toString))
+    }
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      GraftBridge.asNullable(dataSchema), None, format, options)(spark))
   }
 
   /** Compact the log's files: every append leaves one file per date it

@@ -767,4 +767,181 @@ class FeatureStoreSpec extends SparkSpec {
     assert(f.exists(_.isActive), "missing isActive defaults to true")
     assert(c.listFeatures().map(_.name) == Seq("age"), "active filter still works")
   }
+
+  // ---- serves without metadata jobs: catalog memo + driver-listed log ----
+
+  /** The Spark jobs `body` schedules, counted by a listener between two
+    * marker jobs: events reach a listener in posting order, so once the
+    * closing marker is seen every job `body` started has been counted. */
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val tag = s"jobs-during-${java.util.UUID.randomUUID()}"
+    val markers = new java.util.concurrent.atomic.AtomicInteger
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.job.description") == tag))
+          markers.incrementAndGet()
+        else if (markers.get() == 1) jobs.incrementAndGet()
+    }
+    def marker(seen: Int): Unit = {
+      sc.setJobDescription(tag)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      val deadline = System.currentTimeMillis() + 30000
+      while (markers.get() < seen && System.currentTimeMillis() < deadline)
+        Thread.sleep(5)
+      assert(markers.get() == seen, "listener bus did not drain")
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker(1)
+      val out = body
+      marker(2)
+      (out, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def dailyRows(days: Int, users: Int) = {
+    val t0 = java.sql.Timestamp.valueOf("2024-01-01 06:00:00").getTime
+    (0 until days).flatMap(d => (0 until users).map(u =>
+      (u.toLong, new java.sql.Timestamp(t0 + d * 86400000L + u * 1000L), d * 10 + u)))
+      .toDF("user", "ts", "age")
+  }
+
+  test("a warm catalog lookup and a read of an unchanged log schedule no Spark job") {
+    val c = registered()
+    val g = c.createGroup(FeatureGroup("warm", 1, Seq("age"), "user"))
+    val log = new RecordLog(spark, tmpDir("warmlog"))
+    // 40 date dirs: past the 32 at which spark.read lists in a job
+    log.write(g, dailyRows(40, 3))
+    // cold: the first lookup reads the catalog version, the first read
+    // infers the schema — each once
+    assert(c.getGroup("warm").contains(g))
+    val cold = log.read(g)
+    val coldMerged = log.readMerged(g)
+    val ((warmG, warm, warmMerged), jobs) = jobsDuring {
+      (c.getGroup("warm"), log.read(g), log.readMerged(g))
+    }
+    assert(jobs == 0, s"warm lookup + reads scheduled $jobs job(s)")
+    assert(warmG.contains(g))
+    val (others, otherJobs) = jobsDuring {
+      (c.getGroupById(g.id), c.listGroups(), c.getFeature("age"), c.listFeatures())
+    }
+    assert(otherJobs == 0, s"warm lookups scheduled $otherJobs job(s)")
+    assert(others._1.contains(g) && others._2 == Seq(g))
+    assert(others._3.exists(_.dtype == "int"))
+    assert(others._4.map(_.name) == Seq("age", "city", "income"))
+    assert(warm.schema == cold.schema && warmMerged.schema == coldMerged.schema)
+    assert(warm.schema("p_date").dataType == org.apache.spark.sql.types.DateType)
+    assert(warm.count() == 120 && warm.select("p_date").distinct().count() == 40)
+  }
+
+  test("a write through a second RecordLog and a createGroup through a " +
+      "second FeatureCatalog are seen by the next read and lookup") {
+    val root = tmpDir("twocat")
+    val c1 = new FeatureCatalog(spark, root)
+    c1.registerFeature(FeatureDef("age", "user", "int"))
+    val g = c1.createGroup(FeatureGroup("shared", 1, Seq("age"), "user"))
+    assert(c1.getGroup("shared", 2).isEmpty) // memoizes the current version
+    val c2 = new FeatureCatalog(spark, root)
+    val g2 = c2.createGroup(FeatureGroup("shared", 2, Seq("age"), "user"))
+    assert(c1.getGroup("shared", 2).contains(g2))
+    assert(c1.listGroups() == Seq(g, g2))
+    intercept[IllegalArgumentException](
+      c1.createGroup(FeatureGroup("shared", 2, Seq("age"), "user")))
+
+    val logRoot = tmpDir("twolog")
+    val l1 = new RecordLog(spark, logRoot)
+    val l2 = new RecordLog(spark, logRoot)
+    l1.write(g, dailyRows(2, 2))
+    assert(l1.read(g).count() == 4)
+    // same dates: the new files land in existing date dirs
+    l2.write(g, dailyRows(2, 3).filter($"user" === 2L))
+    assert(l1.read(g).count() == 6)
+    // a late column: a new file schema, seen by the merged read
+    l2.write(g, Seq((9L, java.sql.Timestamp.valueOf("2024-01-03 00:00:00"),
+      1, 0.5)).toDF("user", "ts", "age", "score"))
+    assert(l1.readMerged(g).columns.contains("score"))
+    assert(l1.read(g).count() == 7)
+  }
+
+  test("the driver listing skips _SUCCESS, .crc, _temporary and an " +
+      "unmarked _compact_staged, as spark.read does") {
+    val c = registered()
+    val g = c.createGroup(FeatureGroup("hidden", 1, Seq("age"), "user"))
+    val log = new RecordLog(spark, tmpDir("hiddenlog"))
+    log.write(g, dailyRows(3, 2))
+    val base = new java.io.File(log.dir(g))
+    val dayDir = new java.io.File(base, "p_date=2024-01-01")
+    val part = dayDir.listFiles().find(_.getName.endsWith(".parquet")).get
+    assert(new java.io.File(base, "_SUCCESS").exists())
+    assert(dayDir.listFiles().exists(_.getName.endsWith(".crc")))
+    // leftovers holding a real parquet file each: counted if listed
+    val tmp = new java.io.File(base, "_temporary/0/p_date=2024-01-01")
+    tmp.mkdirs()
+    java.nio.file.Files.copy(part.toPath, new java.io.File(tmp, part.getName).toPath)
+    val stage = new java.io.File(base, "_compact_staged/p_date=2024-01-01")
+    stage.mkdirs()
+    java.nio.file.Files.copy(part.toPath, new java.io.File(stage, part.getName).toPath)
+    val got = log.read(g)
+    assert(got.inputFiles.length == 3 &&
+      got.inputFiles.forall(f => !f.contains("/_") && f.endsWith(".parquet")),
+      got.inputFiles.mkString(", "))
+    assert(got.count() == 6)
+    assert(!new java.io.File(base, "_compact_staged").exists(),
+      "the read's recovery discards the unmarked stage")
+    val ref = spark.read.parquet(log.dir(g))
+    assert(got.schema == ref.schema)
+    assert(got.collect().toSet == ref.collect().toSet)
+  }
+
+  test("a p_date/p_epoch streaming log reads as spark.read.parquet does, " +
+      "column order included") {
+    val log = new RecordLog(spark, tmpDir("epochlog"))
+    val g = FeatureGroup("stream", 1, Seq("value"), "user_id")
+    def t(s: String) = java.sql.Timestamp.valueOf(s)
+    graft.streaming.StreamingFeatures.writeEpoch(Seq(
+      (1L, t("2024-01-01 10:00:00"), 1.0), (2L, t("2024-01-02 10:00:00"), 2.0))
+      .toDF("user_id", "ts", "value"), 0L, log.dir(g))
+    graft.streaming.StreamingFeatures.writeEpoch(Seq(
+      (3L, t("2024-01-01 11:00:00"), 3.0, "x")).toDF("user_id", "ts", "value", "tag"),
+      1L, log.dir(g))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.map(String.valueOf)).sortBy(_.mkString("|")).toSeq
+    val ref = spark.read.parquet(log.dir(g))
+    val got = log.read(g)
+    assert(got.schema == ref.schema, s"${got.schema} vs ${ref.schema}")
+    assert(got.columns.takeRight(2).toSeq == Seq("p_date", "p_epoch"))
+    assert(rows(got) == rows(ref))
+    val refMerged = spark.read.option("mergeSchema", "true").parquet(log.dir(g))
+    val merged = log.readMerged(g)
+    assert(merged.schema == refMerged.schema && merged.columns.contains("tag"))
+    assert(rows(merged) == rows(refMerged))
+  }
+
+  test("a missing or empty log raises the AnalysisException spark.read raises") {
+    val log = new RecordLog(spark, tmpDir("nolog"))
+    val g = FeatureGroup("none", 1, Seq("age"), "user")
+    def condition(f: => Any) =
+      intercept[org.apache.spark.sql.AnalysisException](f).getCondition
+    assert(condition(log.read(g)) == condition(spark.read.parquet(log.dir(g))))
+    assert(condition(log.readMerged(g)) == "PATH_NOT_FOUND")
+    new java.io.File(log.dir(g)).mkdirs()
+    new java.io.File(log.dir(g), "_SUCCESS").createNewFile()
+    assert(condition(log.read(g)) == condition(spark.read.parquet(log.dir(g))))
+    assert(condition(log.readMerged(g)) == "UNABLE_TO_INFER_SCHEMA")
+  }
+
+  test("a catalog version past MemoRows is queried per lookup, not pinned") {
+    val c = new FeatureCatalog(spark, tmpDir("bigcatalog"))
+    val n = FeatureCatalog.MemoRows + 1
+    c.registerFeatures((0 until n).map(i => FeatureDef(s"f$i", "user", "int")))
+    assert(c.getFeature(s"f${n - 1}").exists(_.name == s"f${n - 1}"))
+    val (hit, jobs) = jobsDuring(c.getFeature("f7"))
+    assert(hit.exists(_.name == "f7"))
+    assert(jobs > 0, "an oversized version must not be served from the memo")
+  }
 }
