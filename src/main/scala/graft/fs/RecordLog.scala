@@ -24,6 +24,12 @@ import org.apache.spark.sql.functions._
   * Like the reference, extra columns not declared in the group are
   * stored anyway with a warning (feature_store.py:347-349) — lax on
   * write, schema-on-read.
+  *
+  * Compacted form: each date dir holds ONE data file, its rows sorted by
+  * (`p_date`, entityKey, `ts`). Every writer ([[write]], [[forget]],
+  * [[compact]]) lays the dates it writes down in that form, so a date
+  * leaves it only when a later append adds a second file to it, and
+  * [[compact]] rewrites only such dates.
   */
 final class RecordLog(val spark: SparkSession, val root: String) {
 
@@ -34,7 +40,9 @@ final class RecordLog(val spark: SparkSession, val root: String) {
     * call; a DataFrame append is the batch generalization). Every
     * record carries a `version` column — the reference's EntityRecord
     * version (feature_store.py:107,357), defaulting to 1 when the
-    * batch doesn't declare one. */
+    * batch doesn't declare one. Each date of the batch is laid down in
+    * compacted form (one sorted file); a date the log already held now
+    * holds one more file, and the next [[compact]] rewrites it. */
   def write(group: FeatureGroup, snapshots: DataFrame): Unit = {
     // finish any crashed staged swap BEFORE appending (review r7): a
     // marked stage recovered only at the NEXT compact/forget would
@@ -54,17 +62,25 @@ final class RecordLog(val spark: SparkSession, val root: String) {
     val versioned =
       if (snapshots.columns.contains("version")) snapshots
       else snapshots.withColumn("version", lit(1))
-    // Shuffle on the partition column before the dynamic-partition
-    // write: without it every task writes one file per date it happens
-    // to hold — tasks × dates small files (the classic dynamic-insert
-    // small-file explosion; at 100 TB that's millions of KB-sized
-    // files and a metastore meltdown). Hashing dates across the
-    // session's partitions bounds output to one file per date.
-    versioned
-      .withColumn("p_date", to_date(col("ts")))
-      .repartition(col("p_date"))
-      .write.mode("append").partitionBy("p_date").parquet(dir(group))
+    layDown(group, versioned.withColumn("p_date", to_date(col("ts"))),
+      dir(group), "append")
   }
+
+  /** Write `rows` (carrying `p_date`) under `dest` in compacted form.
+    * The shuffle on the partition column comes first: without it every
+    * task writes one file per date it happens to hold — tasks × dates
+    * small files (the classic dynamic-insert small-file explosion; at
+    * 100 TB that's millions of KB-sized files and a metastore
+    * meltdown). Hashing dates across the session's partitions bounds
+    * output to one file per date. The sort leads with `p_date`: the
+    * planned write sorts each task by its partition column, and a
+    * local sort that does not start with it is dropped under that one,
+    * leaving the file unordered by key. */
+  private def layDown(group: FeatureGroup, rows: DataFrame, dest: String,
+      mode: String): Unit =
+    rows.repartition(col("p_date"))
+      .sortWithinPartitions(col("p_date"), col(group.entityKey), col("ts"))
+      .write.mode(mode).partitionBy("p_date").parquet(dest)
 
   /** Full log for a group (schema-on-read; partition column `p_date`
     * retained for pruning by callers).
@@ -78,7 +94,7 @@ final class RecordLog(val spark: SparkSession, val root: String) {
     * [[readMerged]] for that case.
     *
     * Listing: the group dir is walked once on the driver (see
-    * [[load]]) — one `listStatus` per directory, so O(date dirs)
+    * [[listing]]) — one `listStatus` per directory, so O(date dirs)
     * metadata calls per read. They are the same calls `spark.read`'s
     * parallel listing job made from executors once a log passed 32
     * date dirs, minus that job's scheduling; a read of an unchanged log
@@ -91,7 +107,7 @@ final class RecordLog(val spark: SparkSession, val root: String) {
     // contract — a concurrent reader during a crashed writer's window
     // was never safe)
     recoverCompact(group); recoverForget(group)
-    load(group, Map.empty)
+    load(listing(group), Map.empty)
   }
 
   /** Schema-evolution-safe read: unions every file's parquet schema
@@ -103,31 +119,39 @@ final class RecordLog(val spark: SparkSession, val root: String) {
     * known stable. Lists like [[read]]. */
   def readMerged(group: FeatureGroup): DataFrame = {
     recoverCompact(group); recoverForget(group) // see read()
-    load(group, Map("mergeSchema" -> "true"))
+    load(listing(group), MergeSchema)
+  }
+
+  private val MergeSchema = Map("mergeSchema" -> "true")
+
+  /** The log's qualified dir and its data files, from one driver-side
+    * [[PathSigCache.walk]] that skips what a file-source listing skips
+    * (`_SUCCESS`, `.crc`, `_temporary`, the stages). A missing log
+    * raises the `AnalysisException` `spark.read` raises. */
+  private def listing(group: FeatureGroup): (Path, Array[FileStatus]) = {
+    val base = new Path(dir(group))
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = fs.makeQualified(base)
+    try (root, PathSigCache.walk(fs, root, n => !GraftBridge.hiddenPathName(n)))
+    catch {
+      case _: java.io.FileNotFoundException =>
+        throw GraftBridge.pathNotFound(root.toString)
+    }
   }
 
   /** The log as `spark.read.options(options).parquet(dir)` reads it,
-    * from one driver-side [[PathSigCache.walk]] that skips what a
-    * file-source listing skips (`_SUCCESS`, `.crc`, `_temporary`, the
-    * stages). The walk seeds the [[InMemoryFileIndex]] in place of its
-    * own listing, so partition inference stays Spark's. The data schema
-    * is memoized on the walk's signature: any append, compaction,
-    * forget or expiry changes it and re-infers once. A missing or empty
-    * log raises the `AnalysisException` `spark.read` raises.
+    * from its [[listing]]. The listing seeds the [[InMemoryFileIndex]]
+    * in place of its own, so partition inference stays Spark's. The
+    * data schema is memoized on the listing's signature: any append,
+    * compaction, forget or expiry changes it and re-infers once. An
+    * empty log raises the `AnalysisException` `spark.read` raises.
     *
     * Scale posture: every call lists from the driver, one metadata call
     * per directory. The leaf statuses carry no block locations, so the
     * scan asks for no locality (object stores have none to give). */
-  private def load(group: FeatureGroup, options: Map[String, String]): DataFrame = {
-    val base = new Path(dir(group))
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = fs.makeQualified(base)
-    val files =
-      try PathSigCache.walk(fs, root, n => !GraftBridge.hiddenPathName(n))
-      catch {
-        case _: java.io.FileNotFoundException =>
-          throw GraftBridge.pathNotFound(root.toString)
-      }
+  private def load(listed: (Path, Array[FileStatus]),
+      options: Map[String, String]): DataFrame = {
+    val (root, files) = listed
     val listing: FileStatusCache = new FileStatusCache {
       @volatile private var seed = Option(files)
       override def getLeafFiles(p: Path): Option[Array[FileStatus]] =
@@ -146,42 +170,76 @@ final class RecordLog(val spark: SparkSession, val root: String) {
       GraftBridge.asNullable(dataSchema), None, format, options)(spark))
   }
 
-  /** Compact the log's files: every append leaves one file per date it
-    * touched, so a daily-written group accumulates O(writes) small
-    * files per partition — the classic streaming-append pathology that
-    * turns a 100 TB scan into a metadata storm. Compaction rewrites
-    * each date as ONE file, rows sorted by (entityKey, ts) inside it,
-    * which also tightens the parquet min/max stats the PIT reads skip
-    * on. Uses the evolution-safe read, so mixed-schema files merge
-    * into the union schema.
+  /** Compact the log's files: every append to a date the log already
+    * holds leaves one more file in it, so a daily-written group would
+    * accumulate O(writes) small files per partition — the classic
+    * streaming-append pathology that turns a 100 TB scan into a
+    * metadata storm. Compaction rewrites each DIRTY date in compacted
+    * form (one file, rows sorted by (`p_date`, entityKey, `ts`), which
+    * also tightens the parquet min/max stats the PIT reads skip on). A
+    * date is dirty when its dir holds more than one data file, or its
+    * one file below a nested level (a `p_epoch` streaming log, which
+    * compaction flattens). Clean dates are neither read nor rewritten,
+    * so a compaction costs what was appended since the last one, and
+    * one with nothing dirty schedules no write job. Uses the
+    * evolution-safe read, so mixed-schema files merge into the union
+    * schema. When [[read]]'s one-footer schema differs from that union
+    * — a column added by a later append — every date is dirty, so that
+    * every file carries the union and [[read]] sees the column after
+    * the compaction. The dates found dirty come from the same driver
+    * listing [[read]] takes; the stage reads them through a `p_date`
+    * filter, so partition pruning skips the clean dates' files.
     *
     * CRASH SAFETY (ADVICE r6): an in-place overwrite would hold the
     * source rows only as non-fault-tolerant localCheckpoint blocks
     * while the commit deletes existing date dirs — a crash in that
     * window loses partitions with no durable copy. So compaction is
-    * STAGED: (1) write the full compacted snapshot to a hidden
+    * STAGED: (1) write the compacted dirty dates to a hidden
     * `_compact_staged` dir under the log (hidden from parquet readers
     * by the leading underscore), (2) drop a `_STAGED` marker — from
-    * this point the compacted data is durable, (3) swap each date dir
-    * into place (delete old, rename staged), (4) remove the stage. A
-    * crash before (2) discards the stage on the next compact; a crash
-    * after (2) is finished by the next compact's recovery pass — the
-    * swap is idempotent per date. Same single-writer contract as every
-    * log mutation. */
-  def compact(group: FeatureGroup): Unit = {
-    val base = new org.apache.hadoop.fs.Path(dir(group))
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverCompact(group)
-    val stage = new org.apache.hadoop.fs.Path(base, CompactStage)
-    readMerged(group)
-      .repartition(col("p_date"))
-      .sortWithinPartitions(col(group.entityKey), col("ts"))
-      .write.mode("overwrite").partitionBy("p_date")
-      .parquet(stage.toString)
-    val marker = new org.apache.hadoop.fs.Path(stage, "_STAGED")
-    fs.create(marker, true).close()
+    * this point the compacted data is durable, (3) swap each staged
+    * date dir into place (delete old, rename staged), (4) remove the
+    * stage. A crash before (2) discards the stage on the next compact;
+    * a crash after (2) is finished by the next compact's recovery pass
+    * — the swap is idempotent per date. Same single-writer contract as
+    * every log mutation. */
+  def compact(group: FeatureGroup): Unit =
+    // a pass that rewrote lists once more: the second pass infers the
+    // new listing's schemas (memoized for the next read and compaction)
+    // and, when that listing leads with a clean date's file lacking a
+    // column of the union, rewrites every date; otherwise it is a no-op
+    if (compactDirty(group)) compactDirty(group)
+
+  /** One [[compact]] pass: stage and swap the dirty dates. Whether it
+    * rewrote any. */
+  private def compactDirty(group: FeatureGroup): Boolean = {
+    recoverCompact(group); recoverForget(group) // see read()
+    val listed = listing(group)
+    val (root, files) = listed
+    val merged = load(listed, MergeSchema)
+    // each file's path below the log dir: (p_date=<d>, …, part-…)
+    val byDate = files.map(f => root.toUri.relativize(f.getPath.toUri).getPath.split('/'))
+      .filter(_.head.startsWith("p_date=")).groupBy(_.head)
+    val evolved = load(listed, Map.empty).schema != merged.schema
+    val dirty =
+      if (evolved) byDate.keySet
+      else byDate.collect { case (d, fs) if fs.length > 1 || fs.head.length > 2 => d }.toSet
+    if (dirty.isEmpty) return false
+    val values = dirty.map(_.stripPrefix("p_date="))
+    val rows =
+      if (dirty.size == byDate.size) merged
+      else merged.filter(col("p_date").cast("string").isin(values.toSeq: _*) ||
+        (col("p_date").isNull && lit(values.contains(NullDate))))
+    val stage = new Path(root, CompactStage)
+    layDown(group, rows, stage.toString, "overwrite")
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.create(new Path(stage, "_STAGED"), true).close()
     swapStaged(group, CompactStage)
+    true
   }
+
+  /** The dir value of the null date (rows with a null `ts`). */
+  private val NullDate = "__HIVE_DEFAULT_PARTITION__"
 
   /** Right-to-be-forgotten: remove every record whose entity key is in
     * `ids`, rewriting ONLY the date partitions that actually contain
@@ -190,9 +248,9 @@ final class RecordLog(val spark: SparkSession, val root: String) {
     * not read, rewritten, or even listed. Two phases: (1) a pruned scan
     * (the `isin` pushes to parquet row-group stats) finds the affected
     * dates and doomed row count; (2) survivors of just those dates are
-    * staged and swapped under the same crash-safe `_STAGED` protocol as
-    * [[compact]]. A date whose every row is forgotten stages an
-    * `_EMPTY` tombstone dir (a dynamic-partition write emits nothing
+    * staged in compacted form and swapped under the same crash-safe
+    * `_STAGED` protocol as [[compact]]. A date whose every row is
+    * forgotten stages an `_EMPTY` tombstone dir (a dynamic-partition write emits nothing
     * for an empty partition), so the swap stays idempotent: a staged
     * date missing after a crash means "already swapped", never "delete
     * the destination again". Single-writer, like every log mutation.
@@ -265,13 +323,10 @@ final class RecordLog(val spark: SparkSession, val root: String) {
     val dateHit =
       if (realDates.length == dates.length) col("p_date").isin(realDates: _*)
       else col("p_date").isNull || col("p_date").isin(realDates: _*)
-    survivors(log.filter(dateHit))
-      .repartition(col("p_date"))
-      .write.mode("overwrite").partitionBy("p_date")
-      .parquet(stage.toString)
+    layDown(group, survivors(log.filter(dateHit)), stage.toString, "overwrite")
     dates.foreach { d =>
       val dirName =
-        if (d == null) "p_date=__HIVE_DEFAULT_PARTITION__" else s"p_date=$d"
+        if (d == null) s"p_date=$NullDate" else s"p_date=$d"
       val staged = new org.apache.hadoop.fs.Path(stage, dirName)
       if (!fs.exists(staged)) {
         fs.mkdirs(staged)

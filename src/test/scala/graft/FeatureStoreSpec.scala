@@ -370,11 +370,15 @@ class FeatureStoreSpec extends SparkSpec {
     log.write(g, Seq((1L, t("2024-01-01 01:00:00"), 30)).toDF("user", "ts", "age"))
     log.write(g, Seq((2L, t("2024-01-01 02:00:00"), 40)).toDF("user", "ts", "age"))
     log.write(g, Seq((3L, t("2024-01-02 01:00:00"), 50)).toDF("user", "ts", "age"))
+    // a later append on the shared date whose keys and times run against
+    // the file order: the compacted file must still come out sorted
+    log.write(g, Seq((9L, t("2024-01-01 00:30:00"), 60), (1L, t("2024-01-01 00:10:00"), 70),
+      (2L, t("2024-01-01 00:20:00"), 80)).toDF("user", "ts", "age"))
     def files(date: String) = {
       val d = new java.io.File(s"${log.dir(g)}/p_date=$date")
       d.listFiles().count(f => f.getName.endsWith(".parquet"))
     }
-    assert(files("2024-01-01") == 2, "precondition: one file per append")
+    assert(files("2024-01-01") == 3, "precondition: one file per append")
     val before = log.read(g).select("user", "age")
       .as[(Long, Int)].collect().toSet
     log.compact(g)
@@ -382,7 +386,20 @@ class FeatureStoreSpec extends SparkSpec {
     val after = log.read(g).select("user", "age")
       .as[(Long, Int)].collect().toSet
     assert(after == before, "compaction must not change rows")
+    assertDatesSorted(log.dir(g), "user")
   }
+
+  /** Every date of the log at `dir` is one data file whose rows, read
+    * alone in file order, are ordered by (`key`, ts). */
+  private def assertDatesSorted(dir: String, key: String): Unit =
+    new java.io.File(dir).listFiles().filter(_.getName.startsWith("p_date=")).foreach { d =>
+      val parts = d.listFiles().filter(_.getName.endsWith(".parquet"))
+      assert(parts.length == 1, s"$d holds ${parts.length} files")
+      val rows = spark.read.parquet(parts.head.toString).select(col(key), col("ts"))
+        .collect().map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]),
+          Option(r.getTimestamp(1)).map(_.getTime))).toSeq
+      assert(rows == rows.sorted, s"${parts.head} is not ordered by ($key, ts): $rows")
+    }
 
   test("compact recovery: a marked stage is swapped in, an unmarked one discarded") {
     val c = registered()
@@ -943,5 +960,124 @@ class FeatureStoreSpec extends SparkSpec {
     val (hit, jobs) = jobsDuring(c.getFeature("f7"))
     assert(hit.exists(_.name == "f7"))
     assert(jobs > 0, "an oversized version must not be served from the memo")
+  }
+
+  // ---- incremental compaction: only dates holding more than one file ----
+
+  /** Each date dir's data files under the log at `dir`: name → mtime. */
+  private def dateFiles(dir: String): Map[String, Map[String, Long]] =
+    new java.io.File(dir).listFiles().filter(_.getName.startsWith("p_date="))
+      .map(d => d.getName -> d.listFiles().filter(_.getName.endsWith(".parquet"))
+        .map(f => f.getName -> f.lastModified()).toMap).toMap
+
+  /** The log's (user, ts, age) rows as a sorted multiset. */
+  private def userAges(log: RecordLog, g: FeatureGroup): Seq[String] =
+    log.read(g).select("user", "ts", "age").collect().map(_.mkString("|")).toSeq.sorted
+
+  test("a write lays each date down as one sorted file; a second compact of " +
+      "an unchanged compacted log schedules no job and touches no file") {
+    val c = registered()
+    val g = c.createGroup(FeatureGroup("inc", 1, Seq("age"), "user"))
+    val log = new RecordLog(spark, tmpDir("inclog"))
+    // rows in reverse: users descending inside each day, which the
+    // write must sort
+    val rows = dailyRows(5, 4)
+    log.write(g, spark.createDataFrame(
+      java.util.Arrays.asList(rows.collect().reverse: _*), rows.schema))
+    assertDatesSorted(log.dir(g), "user")
+    val written = dateFiles(log.dir(g))
+    log.compact(g)
+    assert(dateFiles(log.dir(g)) == written, "a log in compacted form is left alone")
+    log.write(g, dailyRows(5, 4).filter($"user" === 1L)) // every date: a second file
+    log.compact(g)
+    val compacted = dateFiles(log.dir(g))
+    assert(compacted.size == 5 && compacted.values.forall(_.size == 1))
+    val kept = userAges(log, g)
+    val (_, jobs) = jobsDuring(log.compact(g))
+    assert(jobs == 0, s"a compaction with nothing to do scheduled $jobs job(s)")
+    assert(dateFiles(log.dir(g)) == compacted, "no file may be renamed or rewritten")
+    assert(userAges(log, g) == kept)
+  }
+
+  test("after an append to one old date, compact replaces only that date's file") {
+    val c = registered()
+    val g = c.createGroup(FeatureGroup("incold", 1, Seq("age"), "user"))
+    val log = new RecordLog(spark, tmpDir("incoldlog"))
+    log.write(g, dailyRows(6, 5))
+    def t(s: String) = java.sql.Timestamp.valueOf(s)
+    log.write(g, Seq((9L, t("2024-01-03 10:00:01"), 1), (0L, t("2024-01-03 11:00:00"), 2),
+      (4L, t("2024-01-03 10:00:00"), 3)).toDF("user", "ts", "age"))
+    val before = dateFiles(log.dir(g))
+    assert(before("p_date=2024-01-03").size == 2)
+    val rows = userAges(log, g)
+    log.compact(g)
+    val after = dateFiles(log.dir(g))
+    assert(after.keySet == before.keySet)
+    after.foreach { case (d, fs) =>
+      if (d == "p_date=2024-01-03") assert(fs.size == 1 && fs.keySet != before(d).keySet)
+      else assert(fs == before(d), s"clean date $d was rewritten")
+    }
+    assertDatesSorted(log.dir(g), "user")
+    assert(userAges(log, g) == rows, "compaction must not change rows")
+    assert(log.read(g).count() == 33)
+  }
+
+  test("compact of an evolved log rewrites every date, so read sees the late column") {
+    val c = registered()
+    val g = c.createGroup(FeatureGroup("incevo", 1, Seq("age"), "user"))
+    val log = new RecordLog(spark, tmpDir("incevolog"))
+    log.write(g, dailyRows(4, 3))
+    // a new single-file date carrying a new column: no date holds two files
+    log.write(g, Seq((7L, java.sql.Timestamp.valueOf("2024-01-09 00:00:00"), 5, 0.5))
+      .toDF("user", "ts", "age", "score"))
+    assert(dateFiles(log.dir(g)).values.forall(_.size == 1))
+    log.compact(g)
+    val read = log.read(g)
+    assert(read.columns.contains("score"), s"late column missing from ${read.columns.toSeq}")
+    val scores = read.select("user", "score").as[(Long, Option[Double])].collect().toMap
+    assert(scores(7L) == Some(0.5) && scores(0L).isEmpty)
+    assert(read.count() == 13)
+  }
+
+  test("a null-ts date holding two files is rewritten and keeps its rows") {
+    val c = registered()
+    val g = c.createGroup(FeatureGroup("incnull", 1, Seq("age"), "user"))
+    val log = new RecordLog(spark, tmpDir("incnulllog"))
+    val t0 = java.sql.Timestamp.valueOf("2024-01-01 01:00:00")
+    log.write(g, Seq((1L, Option(t0), 10), (2L, None, 20)).toDF("user", "ts", "age"))
+    log.write(g, Seq((3L, Option.empty[java.sql.Timestamp], 30)).toDF("user", "ts", "age"))
+    val nullDate = "p_date=__HIVE_DEFAULT_PARTITION__"
+    val before = dateFiles(log.dir(g))
+    assert(before(nullDate).size == 2)
+    val rows = userAges(log, g)
+    log.compact(g)
+    val after = dateFiles(log.dir(g))
+    assert(after(nullDate).size == 1)
+    assert(after("p_date=2024-01-01") == before("p_date=2024-01-01"))
+    assert(userAges(log, g) == rows && rows.length == 3)
+  }
+
+  test("a crash after _STAGED with only the dirty dates staged recovers every row") {
+    val c = registered()
+    val g = c.createGroup(FeatureGroup("inccrash", 1, Seq("age"), "user"))
+    val log = new RecordLog(spark, tmpDir("inccrashlog"))
+    log.write(g, dailyRows(3, 3))
+    log.write(g, dailyRows(3, 3).filter($"ts" < "2024-01-02")) // 2024-01-01: two files
+    val rows = userAges(log, g)
+    val clean = dateFiles(log.dir(g)) - "p_date=2024-01-01"
+    // what compact stages: the dirty date alone, then the marker; the
+    // crash hits mid-swap, after the live dirty date was deleted
+    val base = new java.io.File(log.dir(g))
+    val stage = new java.io.File(base, "_compact_staged")
+    log.readMerged(g).filter($"p_date" === "2024-01-01").repartition(col("p_date"))
+      .write.mode("overwrite").partitionBy("p_date").parquet(stage.toString)
+    new java.io.File(stage, "_STAGED").createNewFile()
+    val live = new java.io.File(base, "p_date=2024-01-01")
+    live.listFiles().foreach(_.delete()); live.delete()
+    assert(userAges(log, g) == rows, "the read's recovery must restore the dirty date")
+    assert(!stage.exists())
+    val after = dateFiles(log.dir(g))
+    assert(after("p_date=2024-01-01").size == 1)
+    assert(after - "p_date=2024-01-01" == clean, "recovery must not touch clean dates")
   }
 }
