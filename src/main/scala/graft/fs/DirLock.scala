@@ -16,8 +16,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * Protocol: lock = exclusive `_LOCK` file creation carrying a unique
   * owner token; a lock older than [[DirLock.StealAfterMs]] is presumed
   * orphaned (owner died between create and the finally) and is
-  * stolen via an atomic rename — of N contenders exactly one wins, and
-  * only the winner removes the moved-aside file. Release deletes the
+  * stolen via an atomic rename, under an exclusive per-orphan claim so
+  * that of N contenders exactly one acts on it, and a contender whose
+  * look at the orphan went stale never moves the winner's fresh lock
+  * ([[stealOrphan]]). Release deletes the
   * lock only after verifying it still carries THIS acquisition's
   * token (mirrored through a move-aside), so stealing a live lock
   * can't cascade into the victim deleting the thief's lock. The wait
@@ -152,27 +154,15 @@ object DirLock {
     while (!acquired) {
       if (tryCreateExclusive(fs, lock, token)) acquired = true
       else {
-        val ageMs =
-          try System.currentTimeMillis() -
-            fs.getFileStatus(lock).getModificationTime
-          catch { case _: java.io.IOException => 0L } // raced: re-loop
-        if (ageMs > StealAfterMs) {
-          val grave = new Path(dirPath, s"_LOCK.stolen.${UUID.randomUUID()}")
-          try {
-            // rename is atomic per scheme (POSIX rename locally, the
-            // namenode elsewhere); of N stealers exactly one moves the
-            // orphan — false = lost the steal race, re-loop
-            if (fs.rename(lock, grave)) {
-              org.apache.log4j.Logger.getLogger(getClass).warn(
-                s"stole dir lock $lock (age ${ageMs}ms > " +
-                  s"${StealAfterMs}ms; owner presumed dead)")
-              fs.delete(grave, false)
-            }
-          } catch { case _: java.io.IOException => () } // lost the steal race: re-loop
-        } else if (System.nanoTime() > deadline)
-          throw new IllegalStateException(
-            s"dir lock $lock contended for >${StealAfterMs + TimeoutMs}ms")
-        else Thread.sleep(10)
+        observeLock(fs, lock) match { // None: raced, re-loop
+          case Some((owner, mtime)) if System.currentTimeMillis() - mtime > StealAfterMs =>
+            if (!stealOrphan(fs, dirPath, lock, owner, mtime)) Thread.sleep(10)
+          case _ =>
+            if (System.nanoTime() > deadline)
+              throw new IllegalStateException(
+                s"dir lock $lock contended for >${StealAfterMs + TimeoutMs}ms")
+            Thread.sleep(10)
+        }
       }
     }
     // heartbeat: keep the lock's mtime fresh while the body runs so
@@ -210,6 +200,58 @@ object DirLock {
       release(fs, dirPath, lock, token, bodyOk)
     }
   }
+
+  /** The lock at `p` as seen now: its token and mtime, or None when it
+    * is absent or unreadable. */
+  private def observeLock(fs: FileSystem, p: Path): Option[(String, Long)] =
+    try {
+      val mtime = fs.getFileStatus(p).getModificationTime
+      readToken(fs, p).map(_ -> mtime)
+    } catch { case _: java.io.IOException => None }
+
+  /** Steal the orphaned lock seen carrying `owner` with mtime `mtime`.
+    * Stealers of one orphan first take an exclusive claim named after
+    * it, so only one acts on it at a time. Under the claim the lock is
+    * looked at again: a contender acting on a stale observation finds
+    * the orphan already gone (a faster stealer removed it and may hold
+    * a fresh lock) and touches nothing. Moving a live lock aside and
+    * back would leave a gap in which a third contender creates its own,
+    * and two holders follow. Only the orphan's own owner, alive after
+    * all, can change the lock between that look and the move (a double
+    * fault: seven missed heartbeats); the moved file is checked and
+    * renamed back if it is not the orphan, the same two-rename blip as
+    * [[moveAsideAndDecide]]'s restore. A claim whose stealer died
+    * mid-steal ages out like a lock. Whether the orphan was removed.
+    * Package-private so DirLockReleaseSpec can drive stealers at
+    * exactly the racing points. */
+  private[fs] def stealOrphan(fs: FileSystem, dirPath: Path, lock: Path,
+      owner: String, mtime: Long): Boolean = {
+    val claim = stealClaim(dirPath, owner, mtime)
+    if (!tryCreateExclusive(fs, claim, UUID.randomUUID().toString)) {
+      observeLock(fs, claim).foreach { case (_, t) =>
+        if (System.currentTimeMillis() - t > StealAfterMs) fs.delete(claim, false)
+      }
+      return false
+    }
+    try {
+      if (!observeLock(fs, lock).contains((owner, mtime))) return false
+      val grave = new Path(dirPath, s"_LOCK.stolen.${UUID.randomUUID()}")
+      if (!fs.rename(lock, grave)) return false
+      val orphan = observeLock(fs, grave).contains((owner, mtime))
+      if (orphan) {
+        org.apache.log4j.Logger.getLogger(getClass).warn(
+          s"stole dir lock $lock (age ${System.currentTimeMillis() - mtime}ms > " +
+            s"${StealAfterMs}ms; owner presumed dead)")
+        fs.delete(grave, false)
+      } else fs.rename(grave, lock)
+      orphan
+    } catch { case _: java.io.IOException => false } // raced: re-loop
+    finally fs.delete(claim, false)
+  }
+
+  /** The claim a stealer of the orphan (`owner`, `mtime`) holds. */
+  private[fs] def stealClaim(dirPath: Path, owner: String, mtime: Long): Path =
+    new Path(dirPath, s"_LOCK.steal.${UUID.nameUUIDFromBytes(s"$owner@$mtime".getBytes)}")
 
   /** Release only our own lock: if someone stole it mid-section (we
     * held it past the steal TTL), the thief's lock must survive.

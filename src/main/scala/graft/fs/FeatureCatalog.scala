@@ -123,7 +123,7 @@ final class FeatureCatalog(val spark: SparkSession, val root: String,
       dir: String, defaultRow: T, version: Option[Int]): Dataset[T] =
     version match {
       case Some(v) =>
-        val raw = spark.read.parquet(s"$dir/v_$v")
+        val raw = ParquetDir.read(spark, s"$dir/v_$v")
         val have = raw.columns.toSet
         val schema = implicitly[org.apache.spark.sql.Encoder[T]].schema
         val missing = schema.fields.filterNot(f => have.contains(f.name))

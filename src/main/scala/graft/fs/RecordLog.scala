@@ -1,9 +1,7 @@
 package graft.fs
 
-import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
-import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Append-only entity-snapshot log — R7 `write_features`
@@ -93,12 +91,10 @@ final class RecordLog(val spark: SparkSession, val root: String) {
     * late-added column depending on which footer wins. Use
     * [[readMerged]] for that case.
     *
-    * Listing: the group dir is walked once on the driver (see
-    * [[listing]]) — one `listStatus` per directory, so O(date dirs)
-    * metadata calls per read. They are the same calls `spark.read`'s
-    * parallel listing job made from executors once a log passed 32
-    * date dirs, minus that job's scheduling; a read of an unchanged log
-    * schedules no Spark job. */
+    * Read through [[ParquetDir]]: the group dir is walked once on the
+    * driver — one `listStatus` per directory, so O(date dirs) metadata
+    * calls per read — and the one footer is read on the driver, once
+    * per new listing. A read schedules no Spark job. */
   def read(group: FeatureGroup): DataFrame = {
     // a crash mid-swap leaves some dates deleted and their replacement
     // still in the stage — reading that state silently serves partial
@@ -107,68 +103,25 @@ final class RecordLog(val spark: SparkSession, val root: String) {
     // contract — a concurrent reader during a crashed writer's window
     // was never safe)
     recoverCompact(group); recoverForget(group)
-    load(listing(group), Map.empty)
+    ParquetDir.read(spark, dir(group))
   }
 
   /** Schema-evolution-safe read: unions every file's parquet schema
     * (`mergeSchema`), so a feature column added by a later append
     * surfaces for the whole log, null-filled for rows written before
     * it existed — the standard append-only-log evolution contract.
-    * Costs a distributed footer-merge pass over the log's files the
-    * first time a listing is seen; take [[read]] when the schema is
-    * known stable. Lists like [[read]]. */
+    * Reads every file's footer the first time a listing is seen: on
+    * the driver while the log holds at most
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` files, in
+    * one distributed footer-merge job above that ([[ParquetDir]]'s scale
+    * posture); take [[read]] when the schema is known stable. Lists
+    * like [[read]]. */
   def readMerged(group: FeatureGroup): DataFrame = {
     recoverCompact(group); recoverForget(group) // see read()
-    load(listing(group), MergeSchema)
+    ParquetDir.read(spark, dir(group), MergeSchema)
   }
 
   private val MergeSchema = Map("mergeSchema" -> "true")
-
-  /** The log's qualified dir and its data files, from one driver-side
-    * [[PathSigCache.walk]] that skips what a file-source listing skips
-    * (`_SUCCESS`, `.crc`, `_temporary`, the stages). A missing log
-    * raises the `AnalysisException` `spark.read` raises. */
-  private def listing(group: FeatureGroup): (Path, Array[FileStatus]) = {
-    val base = new Path(dir(group))
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = fs.makeQualified(base)
-    try (root, PathSigCache.walk(fs, root, n => !GraftBridge.hiddenPathName(n)))
-    catch {
-      case _: java.io.FileNotFoundException =>
-        throw GraftBridge.pathNotFound(root.toString)
-    }
-  }
-
-  /** The log as `spark.read.options(options).parquet(dir)` reads it,
-    * from its [[listing]]. The listing seeds the [[InMemoryFileIndex]]
-    * in place of its own, so partition inference stays Spark's. The
-    * data schema is memoized on the listing's signature: any append,
-    * compaction, forget or expiry changes it and re-infers once. An
-    * empty log raises the `AnalysisException` `spark.read` raises.
-    *
-    * Scale posture: every call lists from the driver, one metadata call
-    * per directory. The leaf statuses carry no block locations, so the
-    * scan asks for no locality (object stores have none to give). */
-  private def load(listed: (Path, Array[FileStatus]),
-      options: Map[String, String]): DataFrame = {
-    val (root, files) = listed
-    val listing: FileStatusCache = new FileStatusCache {
-      @volatile private var seed = Option(files)
-      override def getLeafFiles(p: Path): Option[Array[FileStatus]] =
-        if (p == root) seed else None
-      override def putLeafFiles(p: Path, leaves: Array[FileStatus]): Unit = ()
-      override def invalidateAll(): Unit = seed = None
-    }
-    val index = new InMemoryFileIndex(spark, Seq(root), options, None, listing)
-    val format = new ParquetFileFormat
-    val dataSchema = PathSigCache.cachedAt(root.toString,
-        s"schema:${options.mkString(",")}", PathSigCache.signature(files)) {
-      format.inferSchema(spark, options, index.allFiles())
-        .getOrElse(throw GraftBridge.schemaNotInferred(format.toString))
-    }
-    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
-      GraftBridge.asNullable(dataSchema), None, format, options)(spark))
-  }
 
   /** Compact the log's files: every append to a date the log already
     * holds leaves one more file in it, so a daily-written group would
@@ -214,13 +167,13 @@ final class RecordLog(val spark: SparkSession, val root: String) {
     * rewrote any. */
   private def compactDirty(group: FeatureGroup): Boolean = {
     recoverCompact(group); recoverForget(group) // see read()
-    val listed = listing(group)
+    val listed = ParquetDir.listing(spark, dir(group))
     val (root, files) = listed
-    val merged = load(listed, MergeSchema)
+    val merged = ParquetDir.load(spark, listed, MergeSchema)
     // each file's path below the log dir: (p_date=<d>, …, part-…)
     val byDate = files.map(f => root.toUri.relativize(f.getPath.toUri).getPath.split('/'))
       .filter(_.head.startsWith("p_date=")).groupBy(_.head)
-    val evolved = load(listed, Map.empty).schema != merged.schema
+    val evolved = ParquetDir.load(spark, listed, Map.empty).schema != merged.schema
     val dirty =
       if (evolved) byDate.keySet
       else byDate.collect { case (d, fs) if fs.length > 1 || fs.head.length > 2 => d }.toSet

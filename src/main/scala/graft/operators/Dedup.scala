@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.fs.ParquetDir
 import graft.functions.TextFns
 import graft.plans.{MinHashBands, SimHash64}
 
@@ -297,7 +298,7 @@ object Dedup {
     // #1): the re-read was one scheduled job per append/gate call
     val m = graft.fs.PathSigCache.cached(spark, s"$indexDir/meta",
         "minhash_meta") {
-      spark.read.parquet(s"$indexDir/meta")
+      ParquetDir.read(spark, s"$indexDir/meta")
         .select(col("shingle_n"), col("bands"), col("rows"))
         .limit(2).collect() // bounded: meta is one pinned-params row
     }
@@ -328,7 +329,7 @@ object Dedup {
     // excludeBatchId: a REPLAYED ingest batch must not band against
     // its own previous attempt's rows (the span-gate replay
     // contract); partition-pruning predicate on the batch_id layout
-    val idx0 = spark.read.parquet(s"$indexDir/bands")
+    val idx0 = ParquetDir.read(spark, s"$indexDir/bands")
     val c = Guards.capBuckets(
       excludeBatchId.fold(idx0)(id =>
           idx0.filter(col("batch_id") =!= lit(id)))
@@ -807,7 +808,7 @@ object Dedup {
     // dup_ratio 1.0 — the ADVICE r11 replay hole); the filter is a
     // partition-pruning predicate on the batch_id layout, so the
     // excluded delta files are never even listed
-    val idx0 = spark.read.parquet(s"$indexDir/spans")
+    val idx0 = ParquetDir.read(spark, s"$indexDir/spans")
     val idx = excludeBatchId.fold(idx0)(id =>
         idx0.filter(col("batch_id") =!= lit(id)))
       .select(col("h"), col("n_docs")) // shed batch_id

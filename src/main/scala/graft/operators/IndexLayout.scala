@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 
+import graft.fs.ParquetDir
+
 /** Shared filesystem plumbing for the persisted-index family's
   * hive-partitioned delta layout (`<table>/batch_id=<id>` — see
   * [[Dedup.buildSpanIndex]] for the write contract it carries).
@@ -61,7 +63,7 @@ private[graft] object IndexLayout {
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
     recoverCompact(spark, tableDir)
     val stage = new org.apache.hadoop.fs.Path(tableDir + StageSuffix)
-    val all = spark.read.parquet(tableDir)
+    val all = ParquetDir.read(spark, tableDir)
     val foldIn = excludeBatchId match {
       case Some(b) if all.columns.contains("batch_id") =>
         all.filter(org.apache.spark.sql.functions.col("batch_id") =!= b)
@@ -76,7 +78,7 @@ private[graft] object IndexLayout {
     excludeBatchId.foreach { b =>
       val part = new org.apache.hadoop.fs.Path(live, s"batch_id=$b")
       if (fs.exists(part)) {
-        val pw = spark.read.parquet(part.toString).write.mode("overwrite")
+        val pw = ParquetDir.read(spark, part.toString).write.mode("overwrite")
         (if (partitionByCols.nonEmpty) pw.partitionBy(partitionByCols: _*)
          else pw).parquet(s"$stage/batch_id=$b")
       }
@@ -186,8 +188,10 @@ private[graft] object IndexLayout {
     * them (and backfilling the big assigned write's straggler tail)
     * removes dead driver time without changing any result: every task
     * writes to a DISTINCT path. Failures propagate: the first
-    * exception rethrows after all tasks settle (no half-observed
-    * build). Sequential when given 0/1 tasks. */
+    * non-fatal exception rethrows after all tasks settle (no
+    * half-observed build); a fatal error, or an interrupt of the
+    * waiting thread, propagates at once. Sequential when given 0/1
+    * tasks. */
   def runParallel(tasks: (() => Unit)*): Unit = {
     if (tasks.length <= 1) { tasks.foreach(_()); return }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -207,8 +211,9 @@ private[graft] object IndexLayout {
         try f.get()
         catch {
           case e: java.util.concurrent.ExecutionException =>
-            if (first == null) first = e.getCause
-          case e: Throwable => if (first == null) first = e
+            val cause = e.getCause
+            if (!scala.util.control.NonFatal(cause)) throw cause
+            if (first == null) first = cause
         }
       }
       if (first != null) throw first
@@ -216,19 +221,15 @@ private[graft] object IndexLayout {
   }
 
   /** Number of data files under a table directory (recursive,
-    * `_`-prefixed metadata excluded) — the compaction specs'
+    * `_`- and `.`-prefixed names excluded) — the compaction specs'
     * file-count-collapse evidence. */
   def dataFileCount(spark: SparkSession, path: String): Int = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return 0
-    val it = fs.listFiles(p, true)
-    var n = 0
-    while (it.hasNext) {
-      val f = it.next()
+    graft.fs.PathSigCache.walk(fs, p).count { f =>
       val name = f.getPath.getName
-      if (!name.startsWith("_") && !name.startsWith(".")) n += 1
+      !name.startsWith("_") && !name.startsWith(".")
     }
-    n
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
+import graft.fs.ParquetDir
+
 /** Rank-fusion for hybrid retrieval: combine rankings produced by
   * different scorers (BM25-ish keyword rank, embedding cosine rank,
   * freshness…) without comparing their incommensurable scores.
@@ -162,7 +164,7 @@ object Retrieval {
     // #1): the re-read was one scheduled job per append/search call
     val m = graft.fs.PathSigCache.cached(spark, s"$indexDir/meta",
         "kw_max_df") {
-      spark.read.parquet(s"$indexDir/meta")
+      ParquetDir.read(spark, s"$indexDir/meta")
         .select(col("max_df").cast("long"))
         .limit(2).collect() // bounded: meta is one pinned-params row
     }
@@ -201,7 +203,7 @@ object Retrieval {
   private def indexCapState(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, batchId: Long, batchVocab: DataFrame)
       : (DataFrame, DataFrame) = {
-    val idxDf = spark.read.parquet(s"$indexDir/postings")
+    val idxDf = ParquetDir.read(spark, s"$indexDir/postings")
       .filter(col("batch_id") =!= lit(batchId))
       .join(broadcast(batchVocab), Seq("term"), "left_semi")
       .groupBy(col("term")).agg(count(lit(1)).as("__idx_df"))
@@ -209,7 +211,7 @@ object Retrieval {
     val fs = prunedPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tombstones =
       if (fs.exists(prunedPath))
-        spark.read.parquet(s"$indexDir/pruned")
+        ParquetDir.read(spark, s"$indexDir/pruned")
           .filter(col("batch_id") =!= lit(batchId))
           .select(col("term"))
       else spark.emptyDataFrame
@@ -341,7 +343,7 @@ object Retrieval {
         spark.emptyDataFrame.select(lit("").as("term")).limit(0)
       val prunedAll =
         if (fs.exists(prunedPath))
-          Some(minusBatch(spark.read.parquet(s"$indexDir/pruned")))
+          Some(minusBatch(ParquetDir.read(spark, s"$indexDir/pruned")))
         else None
       val standing = prunedAll.fold(emptyTerms)(_.select(col("term")))
       // carry any EXISTING batch_id=-2 terms into the new write: the
@@ -355,7 +357,7 @@ object Retrieval {
         .filter(_.columns.contains("batch_id"))
         .fold(emptyTerms)(_.filter(col("batch_id") === lit(-2L))
           .select(col("term")))
-      minusBatch(spark.read.parquet(s"$indexDir/postings"))
+      minusBatch(ParquetDir.read(spark, s"$indexDir/postings"))
         .groupBy(col("term"))
         .agg(countDistinct(col(idCol)).as("__df")) // folded TOTAL df
         .filter(col("__df") > c)
@@ -396,7 +398,7 @@ object Retrieval {
         val keep = p0.groupBy(col("term"))
           .agg(count(lit(1)).as("__df"))
           .filter(col("__df") <= c).select(col("term"))
-          .join(minusBatch(spark.read.parquet(s"$indexDir/pruned"))
+          .join(minusBatch(ParquetDir.read(spark, s"$indexDir/pruned"))
             .select(col("term")), Seq("term"), "left_anti")
         p0.join(keep, Seq("term"), "left_semi")
       }
@@ -441,7 +443,7 @@ object Retrieval {
       maxBroadcastCandidates: Long = 4000000L): DataFrame = {
     require(queryTerms.nonEmpty, "bm25SearchFromIndex: need at least one term")
     import spark.implicits._
-    val tfq = spark.read.parquet(s"$indexDir/postings")
+    val tfq = ParquetDir.read(spark, s"$indexDir/postings")
       .filter(col("term").isin(queryTerms.distinct: _*))
       .select(col(idCol), col("term"), col("tf")) // shed batch_id
     // df per query term, collected — decides the doclens join plan
@@ -453,10 +455,10 @@ object Retrieval {
     val dfreq = dfRows.map(r => (r.getString(0), r.getLong(1))).toSeq
       .toDF("term", "df")
     val candBound = dfRows.map(_.getLong(1)).sum
-    val dl = spark.read.parquet(s"$indexDir/doclens")
+    val dl = ParquetDir.read(spark, s"$indexDir/doclens")
       .select(col(idCol), col("dl")) // shed batch_id
     // totals are DELTA rows (one per build/append) — sum to fold
-    val totals = spark.read.parquet(s"$indexDir/totals")
+    val totals = ParquetDir.read(spark, s"$indexDir/totals")
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
     val idf = round(log(lit(1.0) +
       (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))), 6)
@@ -497,11 +499,11 @@ object Retrieval {
       indexDir: String, idCol: String,
       queryTerms: Seq[String], k: Int): DataFrame = {
     require(queryTerms.nonEmpty, "tfidfSearchFromIndex: need at least one term")
-    val tfq = spark.read.parquet(s"$indexDir/postings")
+    val tfq = ParquetDir.read(spark, s"$indexDir/postings")
       .filter(col("term").isin(queryTerms.distinct: _*))
       .select(col(idCol), col("term"), col("tf")) // shed batch_id
     val dfreq = tfq.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val n = spark.read.parquet(s"$indexDir/totals")
+    val n = ParquetDir.read(spark, s"$indexDir/totals")
       .agg(sum(col("n_docs")).as("n_docs"))
     tfq.join(broadcast(dfreq), Seq("term"))
       .crossJoin(broadcast(n))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.fs.ParquetDir
 import graft.functions.VectorFns
 import graft.plans.BoundedTopK
 
@@ -1100,7 +1101,7 @@ object Similarity {
   private def writeKnnGraphBase(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, k: Int, maxCell: Int): Unit = {
     val members = Guards.capBuckets(
-      spark.read.parquet(s"$indexDir/assigned")
+      ParquetDir.read(spark, s"$indexDir/assigned")
         .select(col("neighbor_id").as("id"), col("cv").as("v"),
           col("cell")),
       Seq("cell"), maxCell, Some("knn_graph_cells"))
@@ -1130,7 +1131,7 @@ object Similarity {
       : (Array[String], Array[org.apache.spark.sql.Row]) = {
     val dir = s"$indexDir/meta"
     val t = graft.fs.PathSigCache.cached(spark, dir, "meta") {
-      val df = spark.read.parquet(dir)
+      val df = ParquetDir.read(spark, dir)
       (df.columns, df.limit(2).collect()) // bounded: one pinned-params row
     }
     require(t._2.length == 1, s"$who $indexDir: malformed meta")
@@ -1267,7 +1268,7 @@ object Similarity {
     // append/probe/micro-batch on files only a rebuild rewrites
     val coarse = graft.fs.PathSigCache.cached(spark,
         s"$indexDir/centroids", "coarse") {
-      spark.read.parquet(s"$indexDir/centroids")
+      ParquetDir.read(spark, s"$indexDir/centroids")
         .collect() // bounded: √nCells (hier) / branch (tree) / nCells (flat) rows
         .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq))
         .sortBy(_._1).toSeq
@@ -1287,7 +1288,7 @@ object Similarity {
         val dial = fineBroadcastMaxRows
         val capProbe = math.max(1L,
           math.min(dial, Int.MaxValue.toLong - 1)).toInt
-        val lvl = spark.read.parquet(p)
+        val lvl = ParquetDir.read(spark, p)
           .select(col("ccell"), col("cell_id"), col("cv"))
         val nLvl = cachedLevelCount(spark, p, lvl, capProbe)
         val arr = persistedFineArr(spark, p, lvl)
@@ -1325,7 +1326,7 @@ object Similarity {
       val hp = new org.apache.hadoop.fs.Path(arrPath, "_SUCCESS")
       hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
     } catch { case _: java.io.IOException => false }
-    if (ok) spark.read.parquet(arrPath).select(col("ccell"), col("fines"))
+    if (ok) ParquetDir.read(spark, arrPath).select(col("ccell"), col("fines"))
     else fineArrOf(lvl)
   }
 
@@ -1462,7 +1463,7 @@ object Similarity {
       .localCheckpoint(false)
     val touched = b.select(col("cell")).distinct()
       .collect().map(_.getLong(0)).sorted // bounded: ≤ nCells cells
-    val idx0 = spark.read.parquet(s"$indexDir/assigned")
+    val idx0 = ParquetDir.read(spark, s"$indexDir/assigned")
       .filter(col("cell").isin(touched: _*)) // partition pruning
     val idx = excludeBatchId.fold(idx0)(id =>
       idx0.filter(col("batch_id") =!= lit(id)))
@@ -1486,7 +1487,7 @@ object Similarity {
       indexDir: String): DataFrame = {
     val (k, _) = knnGraphIndexMeta(spark, indexDir)
     topKPerQuery(
-      spark.read.parquet(s"$indexDir/graph")
+      ParquetDir.read(spark, s"$indexDir/graph")
         .select(col("query_id"), col("neighbor_id"), col("sim"))
         .dropDuplicates("query_id", "neighbor_id"),
       k)
@@ -1564,7 +1565,7 @@ object Similarity {
     // in-flight batch's prior attempt into the base would duplicate
     // its members after the replay's own append
     def stored(): DataFrame = {
-      val a = spark.read.parquet(s"$indexDir/assigned")
+      val a = ParquetDir.read(spark, s"$indexDir/assigned")
       excludeBatchId.fold(a)(id => a.filter(col("batch_id") =!= lit(id)))
     }
     val oversized = Guards.oversizedBuckets(
@@ -1793,7 +1794,7 @@ object Similarity {
     // the probe's own excludeBatchId could no longer hide it (the
     // batch would dedup against itself and silently vanish)
     def stored(): DataFrame = {
-      val a = spark.read.parquet(s"$indexDir/assigned")
+      val a = ParquetDir.read(spark, s"$indexDir/assigned")
       excludeBatchId.fold(a)(id => a.filter(col("batch_id") =!= lit(id)))
     }
     val oversized = Guards.oversizedBuckets(
@@ -1848,7 +1849,7 @@ object Similarity {
   def ivfOccupancyReport(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): DataFrame = {
     val (maxCell, _) = ivfIndexMeta(spark, indexDir)
-    spark.read.parquet(s"$indexDir/assigned")
+    ParquetDir.read(spark, s"$indexDir/assigned")
       .groupBy(col("cell"))
       .agg(count(lit(1)).as("n_vecs"))
       .withColumn("oversized", col("n_vecs") > lit(maxCell.toLong))
@@ -1936,7 +1937,7 @@ object Similarity {
       s"ivfProbesHier: $indexDir has no persisted fine level — flat " +
         "indexes probe through ivfProbes")
     var probes = rankKeep(
-      q.crossJoin(broadcast(spark.read.parquet(s"$indexDir/centroids"))),
+      q.crossJoin(broadcast(ParquetDir.read(spark, s"$indexDir/centroids"))),
       round(VectorFns.cosineFast(col("qv"), col("cv0")), 6),
       col("cell_id"), nProbeCoarse, "ccell")
     levels.zipWithIndex.foreach { case (p, i) =>
@@ -1945,7 +1946,7 @@ object Similarity {
       // below the fineBroadcastMaxRows dial, parent-keyed shuffle
       // above (the joinFineSide regime, but the probe needs the
       // per-centroid rows, not the struct-array fold)
-      val lvl = spark.read.parquet(p)
+      val lvl = ParquetDir.read(spark, p)
         .select(col("ccell"), col("cell_id"), col("cv"))
       val dial = fineBroadcastMaxRows
       val capProbe = math.max(1L,
@@ -1983,12 +1984,12 @@ object Similarity {
         ivfProbesHier(queries, indexDir, idCol, vecCol, nProbe,
           if (nProbeCoarse > 0) nProbeCoarse else nProbe)
       else ivfProbes(queries,
-        spark.read.parquet(s"$indexDir/centroids"), idCol, vecCol,
+        ParquetDir.read(spark, s"$indexDir/centroids"), idCol, vecCol,
         nProbe))
       .localCheckpoint(false)
     val probeCells = probes.select(col("cell")).distinct()
       .collect().map(_.getLong(0)).sorted // bounded: ≤ nCells distinct cells
-    val assigned = spark.read.parquet(s"$indexDir/assigned")
+    val assigned = ParquetDir.read(spark, s"$indexDir/assigned")
       .filter(col("cell").isin(probeCells: _*))
       .select(col("neighbor_id"), col("cv"), col("cell")) // shed batch_id
     val scored = assigned.join(broadcast(probes), Seq("cell"))
@@ -2069,7 +2070,7 @@ object Similarity {
       .localCheckpoint(false)
     val touched = b.select(col("cell")).distinct()
       .collect().map(_.getLong(0)).sorted // bounded: ≤ nCells cells
-    val idx0 = spark.read.parquet(s"$indexDir/assigned")
+    val idx0 = ParquetDir.read(spark, s"$indexDir/assigned")
       .filter(col("cell").isin(touched: _*)) // partition pruning
     val idx = excludeBatchId.fold(idx0)(id =>
       idx0.filter(col("batch_id") =!= lit(id)))
@@ -2427,7 +2428,7 @@ object Similarity {
     // on content that changes only when a rebuild rewrites the files
     val cb = graft.fs.PathSigCache.cached(spark,
         s"$indexDir/codebooks", "codebooks") {
-      spark.read.parquet(s"$indexDir/codebooks")
+      ParquetDir.read(spark, s"$indexDir/codebooks")
         .select(col("j").cast("int"), col("cid").cast("long"),
           col("cv").cast("array<double>"))
         .collect() // bounded: m·nCents persisted codebook rows
@@ -2473,8 +2474,8 @@ object Similarity {
       idOrFail(col(idCol), "appendToPqIndex"))
     // delta layout follows the EXISTING table (wide r18 / legacy long)
     // so a pre-r18 index keeps a uniform schema across its partitions
-    val legacy = batch.sparkSession.read
-      .parquet(s"$indexDir/codes").columns.contains("j")
+    val legacy = ParquetDir.read(batch.sparkSession,
+      s"$indexDir/codes").columns.contains("j")
     (if (legacy) pqEncodeLong(clean, cb, m, idCol, vecCol)
      else pqEncode(clean, cb, m, idCol, vecCol))
       .write.mode("overwrite").parquet(s"$indexDir/codes/batch_id=$batchId")
@@ -2490,7 +2491,7 @@ object Similarity {
     val spark = queries.sparkSession
     val cb = loadCodebooks(spark, indexDir, "pqTopKFromIndex")
     val m = cb.map(_._1).distinct.length
-    val all = spark.read.parquet(s"$indexDir/codes")
+    val all = ParquetDir.read(spark, s"$indexDir/codes")
     val codes = // shed batch_id; keep the table's own layout
       if (all.columns.contains("codes"))
         all.select(col("neighbor_id"), col("codes"))

@@ -7,6 +7,8 @@ import org.apache.spark.sql.types.StructType
 
 import org.apache.spark.sql.Row
 
+import graft.fs.ParquetDir
+
 /** Running per-user feature row emitted by
   * [[StreamingFeatures.runningUserFeatures]]. */
 final case class RunningFeature(
@@ -728,7 +730,7 @@ object StreamingFeatures {
     val base = new org.apache.hadoop.fs.Path(outDir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val prev = currentVersion(spark, outDir).map(v =>
-      spark.read.parquet(s"$outDir/v_$v"))
+      ParquetDir.read(spark, s"$outDir/v_$v"))
     val folded = prev match {
       case Some(p) => graft.fs.Serving.refreshLatest(
         p, batch, entityKey, tsCol, tieBreak.map(col))
@@ -780,7 +782,7 @@ object StreamingFeatures {
   /** Read the serving table [[maintainLatest]] maintains (resolves the
     * `_CURRENT` pointer). Empty option = no complete epoch yet. */
   def readLatestTable(spark: SparkSession, outDir: String): Option[DataFrame] =
-    currentVersion(spark, outDir).map(v => spark.read.parquet(s"$outDir/v_$v"))
+    currentVersion(spark, outDir).map(v => ParquetDir.read(spark, s"$outDir/v_$v"))
 
   /** The idempotent per-epoch write, exposed for direct testing (a
     * foreachBatch body re-running with the same epochId must leave the

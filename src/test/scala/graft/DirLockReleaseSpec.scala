@@ -136,6 +136,55 @@ class DirLockReleaseSpec extends AnyFunSuite {
     assert(read(fs, lock).isEmpty)
   }
 
+  /** The steal race: two contenders both observe the same orphan. A
+    * steals it and creates its fresh lock; B, still acting on what it
+    * saw, must leave A's live lock where it is — moving it aside, even
+    * to rename it back, opens a gap for a third contender's lock. */
+  test("a stealer acting on a stale observation leaves the fresh lock alone") {
+    val (fs, dirPath, lock) = mkDir()
+    write(fs, lock, "orphan")
+    val old = System.currentTimeMillis() - DirLock.StealAfterMs - 1000
+    fs.setTimes(lock, old, -1)
+    val mtime = fs.getFileStatus(lock).getModificationTime
+    // A and B both observed ("orphan", mtime); A steals first
+    assert(DirLock.stealOrphan(fs, dirPath, lock, "orphan", mtime))
+    write(fs, lock, "A-fresh")
+    assert(!DirLock.stealOrphan(fs, dirPath, lock, "orphan", mtime),
+      "the stale stealer must not remove A's live lock")
+    assert(read(fs, lock).contains("A-fresh"))
+    assert(fs.getFileStatus(lock).getModificationTime != mtime)
+    // a heartbeat refresh of a live owner after the observation: same
+    // token, newer mtime — not an orphan any more
+    fs.setTimes(lock, old, -1)
+    val seen = fs.getFileStatus(lock).getModificationTime
+    fs.setTimes(lock, System.currentTimeMillis(), -1)
+    assert(!DirLock.stealOrphan(fs, dirPath, lock, "A-fresh", seen))
+    assert(read(fs, lock).contains("A-fresh"))
+    val debris = fs.listStatus(dirPath).map(_.getPath.getName)
+      .filter(_.startsWith("_LOCK."))
+    assert(debris.isEmpty, s"the steals left debris: ${debris.toSeq}")
+  }
+
+  test("one stealer per orphan: a held claim turns the others away, an " +
+      "abandoned one ages out") {
+    val (fs, dirPath, lock) = mkDir()
+    write(fs, lock, "orphan")
+    val old = System.currentTimeMillis() - DirLock.StealAfterMs - 1000
+    fs.setTimes(lock, old, -1)
+    val mtime = fs.getFileStatus(lock).getModificationTime
+    val claim = DirLock.stealClaim(dirPath, "orphan", mtime)
+    write(fs, claim, "B-mid-steal")
+    assert(!DirLock.stealOrphan(fs, dirPath, lock, "orphan", mtime),
+      "a second stealer acted while the claim was held")
+    assert(read(fs, lock).contains("orphan") && fs.exists(claim))
+    // the claimant died mid-steal: its claim ages out, then the steal goes through
+    fs.setTimes(claim, old, -1)
+    assert(!DirLock.stealOrphan(fs, dirPath, lock, "orphan", mtime))
+    assert(!fs.exists(claim))
+    assert(DirLock.stealOrphan(fs, dirPath, lock, "orphan", mtime))
+    assert(read(fs, lock).isEmpty)
+  }
+
   /** ADVICE r13: a release-time read hiccup must neither report a
     * spurious steal nor abandon the still-owned lock. Driven through
     * the real release against a lock whose first read succeeds —

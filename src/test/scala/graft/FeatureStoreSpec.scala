@@ -787,40 +787,6 @@ class FeatureStoreSpec extends SparkSpec {
 
   // ---- serves without metadata jobs: catalog memo + driver-listed log ----
 
-  /** The Spark jobs `body` schedules, counted by a listener between two
-    * marker jobs: events reach a listener in posting order, so once the
-    * closing marker is seen every job `body` started has been counted. */
-  private def jobsDuring[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val tag = s"jobs-during-${java.util.UUID.randomUUID()}"
-    val markers = new java.util.concurrent.atomic.AtomicInteger
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(
-            _.getProperty("spark.job.description") == tag))
-          markers.incrementAndGet()
-        else if (markers.get() == 1) jobs.incrementAndGet()
-    }
-    def marker(seen: Int): Unit = {
-      sc.setJobDescription(tag)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setJobDescription(null)
-      val deadline = System.currentTimeMillis() + 30000
-      while (markers.get() < seen && System.currentTimeMillis() < deadline)
-        Thread.sleep(5)
-      assert(markers.get() == seen, "listener bus did not drain")
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker(1)
-      val out = body
-      marker(2)
-      (out, jobs.get())
-    } finally sc.removeSparkListener(listener)
-  }
-
   private def dailyRows(days: Int, users: Int) = {
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 06:00:00").getTime
     (0 until days).flatMap(d => (0 until users).map(u =>
@@ -835,10 +801,15 @@ class FeatureStoreSpec extends SparkSpec {
     // 40 date dirs: past the 32 at which spark.read lists in a job
     log.write(g, dailyRows(40, 3))
     // cold: the first lookup reads the catalog version, the first read
-    // infers the schema — each once
+    // infers the schema from one footer on the driver, and the first
+    // merged read of 40 files (past the 32-file threshold) keeps
+    // Spark's one footer-merge job
     assert(c.getGroup("warm").contains(g))
-    val cold = log.read(g)
-    val coldMerged = log.readMerged(g)
+    val (cold, coldJobs) = jobsDuring(log.read(g))
+    assert(coldJobs == 0, s"a cold read scheduled $coldJobs job(s)")
+    val (coldMerged, coldMergedJobs) = jobsDuring(log.readMerged(g))
+    assert(coldMergedJobs == 1,
+      s"a cold merged read past the threshold scheduled $coldMergedJobs job(s)")
     val ((warmG, warm, warmMerged), jobs) = jobsDuring {
       (c.getGroup("warm"), log.read(g), log.readMerged(g))
     }
@@ -960,6 +931,135 @@ class FeatureStoreSpec extends SparkSpec {
     val (hit, jobs) = jobsDuring(c.getFeature("f7"))
     assert(hit.exists(_.name == "f7"))
     assert(jobs > 0, "an oversized version must not be served from the memo")
+  }
+
+  // ---- ParquetDir: spark.read.parquet without metadata jobs ----
+
+  /** `body` with the session settings `kv`, restored afterwards. */
+  private def withConf[A](kv: (String, String)*)(body: => A): A = {
+    val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.map {
+      case b: Array[Byte] => java.util.Arrays.toString(b)
+      case v              => String.valueOf(v)
+    }.mkString("|")).toSeq.sorted
+
+  /** `ParquetDir.read(dir, options)` equals `spark.read.options(options)
+    * .parquet(dir)` in schema, column order included, and in rows. */
+  private def readsAsSpark(dir: String,
+      options: Map[String, String] = Map.empty): org.apache.spark.sql.DataFrame = {
+    val got = ParquetDir.read(spark, dir, options)
+    val ref = spark.read.options(options).parquet(dir)
+    assert(got.schema == ref.schema, s"${got.schema} vs ${ref.schema}")
+    assert(sortedRows(got) == sortedRows(ref))
+    got
+  }
+
+  test("ParquetDir.read equals spark.read.parquet: one schema, an evolved " +
+      "table with and without mergeSchema, int/date/string partitions") {
+    val one = tmpDir("pd_one") + "/t"
+    Seq((1L, "a", 0.5), (2L, "b", 1.5)).toDF("id", "s", "x").write.parquet(one)
+    readsAsSpark(one)
+
+    // k=1 is written second but sorts first: its footer leads both reads
+    val evolved = tmpDir("pd_evolved") + "/t"
+    Seq((1L, 0.5)).toDF("id", "c").write.parquet(s"$evolved/k=2")
+    Seq((2L, "x", 7)).toDF("id", "b", "n").write.parquet(s"$evolved/k=1")
+    assert(readsAsSpark(evolved).columns.toSeq == Seq("id", "b", "n", "k"))
+    assert(readsAsSpark(evolved, Map("mergeSchema" -> "true")).columns.toSeq ==
+      Seq("id", "b", "n", "c", "k"))
+
+    val parts = tmpDir("pd_parts") + "/t"
+    Seq[(Long, Option[Int], Option[java.sql.Date], Option[String])](
+      (1L, Some(3), Some(java.sql.Date.valueOf("2024-01-02")), Some("x")),
+      (2L, Some(-1), Some(java.sql.Date.valueOf("2024-01-02")), None),
+      (3L, None, None, Some("y y")),
+      (4L, Some(3), Some(java.sql.Date.valueOf("2024-02-29")), Some("x")))
+      .toDF("id", "pi", "pd", "ps").write.partitionBy("pi", "pd", "ps").parquet(parts)
+    assert(new java.io.File(s"$parts/pi=__HIVE_DEFAULT_PARTITION__").isDirectory)
+    val got = readsAsSpark(parts)
+    assert(got.schema.map(_.dataType.typeName) == Seq("long", "integer", "date", "string"))
+    assert(got.filter($"ps".isNull).count() == 1)
+  }
+
+  test("ParquetDir.read skips _SUCCESS, .crc and _temporary, and honours " +
+      "spark.sql.parquet.binaryAsString") {
+    val dir = tmpDir("pd_hidden") + "/t"
+    Seq((1L, "a".getBytes), (2L, "b".getBytes)).toDF("id", "bin")
+      .write.partitionBy("id").parquet(dir)
+    val part = new java.io.File(s"$dir/id=1").listFiles().find(_.getName.endsWith(".parquet")).get
+    assert(new java.io.File(dir, "_SUCCESS").exists())
+    assert(part.getParentFile.listFiles().exists(_.getName.endsWith(".crc")))
+    val tmp = new java.io.File(dir, "_temporary/0/id=3")
+    tmp.mkdirs()
+    java.nio.file.Files.copy(part.toPath, new java.io.File(tmp, part.getName).toPath)
+    val got = readsAsSpark(dir)
+    assert(got.inputFiles.length == 2 && got.count() == 2)
+
+    // binaryAsString types only footers without Spark's own schema: a
+    // file written by a plain parquet writer
+    val raw = tmpDir("pd_binary") + "/t"
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message m { required int64 id; required binary bin; }")
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$raw/part-0.parquet")).withType(schema).build()
+    val rows = new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
+    try {
+      w.write(rows.newGroup().append("id", 1L).append("bin", "a"))
+      w.write(rows.newGroup().append("id", 2L).append("bin", "b"))
+    } finally w.close()
+    assert(readsAsSpark(raw).schema("bin").dataType == org.apache.spark.sql.types.BinaryType)
+    // the same listing under another setting is inferred again, not
+    // served the memoized binary schema
+    withConf("spark.sql.parquet.binaryAsString" -> "true") {
+      val asString = readsAsSpark(raw)
+      assert(asString.schema("bin").dataType == org.apache.spark.sql.types.StringType)
+      assert(asString.filter($"id" === 1L).select("bin").as[String].collect().toSeq == Seq("a"))
+    }
+  }
+
+  test("ParquetDir.read of a missing path or an empty dir raises spark.read's error") {
+    val dir = tmpDir("pd_missing") + "/t"
+    def condition(f: => Any) =
+      intercept[org.apache.spark.sql.AnalysisException](f).getCondition
+    val merge = Map("mergeSchema" -> "true")
+    assert(condition(ParquetDir.read(spark, dir)) == condition(spark.read.parquet(dir)))
+    assert(condition(ParquetDir.read(spark, dir, merge)) == "PATH_NOT_FOUND")
+    new java.io.File(dir).mkdirs()
+    new java.io.File(dir, "_SUCCESS").createNewFile()
+    assert(condition(ParquetDir.read(spark, dir)) == condition(spark.read.parquet(dir)))
+    assert(condition(ParquetDir.read(spark, dir, merge)) ==
+      condition(spark.read.options(merge).parquet(dir)))
+  }
+
+  test("a cold ParquetDir.read of a just-written 40-partition table schedules " +
+      "no job; a merged read does so only past the discovery threshold") {
+    val dir = tmpDir("pd_cold") + "/t"
+    dailyRows(40, 2).withColumn("p_date", to_date($"ts"))
+      .repartition($"p_date").write.partitionBy("p_date").parquet(dir)
+    val (plain, jobs) = jobsDuring(ParquetDir.read(spark, dir))
+    assert(jobs == 0, s"a cold read scheduled $jobs job(s)")
+    assert(plain.count() == 80)
+    val threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    val merge = Map("mergeSchema" -> "true")
+    val (merged, mergedJobs) = withConf(threshold -> "40") {
+      jobsDuring(ParquetDir.read(spark, dir, merge))
+    }
+    assert(mergedJobs == 0, s"a merged read of 40 files at threshold 40 scheduled $mergedJobs job(s)")
+    assert(merged.schema == spark.read.options(merge).parquet(dir).schema)
+    PathSigCache.clear() // the memoized merged schema would serve it
+    val (_, pastJobs) = withConf(threshold -> "39") {
+      jobsDuring(ParquetDir.read(spark, dir, merge))
+    }
+    assert(pastJobs == 1, s"a merged read past the threshold scheduled $pastJobs job(s)")
   }
 
   // ---- incremental compaction: only dates holding more than one file ----

@@ -43,6 +43,25 @@ class IndexCacheSpec extends SparkSpec {
       "rebuild at the same path served a stale cached meta row")
   }
 
+  test("after an append to an IVF index, building the next " +
+      "ivfTopKFromIndex frame schedules no listing or footer job") {
+    val dir = tmpDir("ivf_append_read") + "/idx"
+    val all = annFixture
+    Similarity.buildIvfIndex(all.filter($"id" < 40), "id", "v", dir,
+      nCells = 2, trainIters = 1, maxCell = 40)
+    Similarity.appendToIvfIndex(all.filter($"id" >= 40), "id", "v", dir, batchId = 1)
+    val queries = all.filter($"id" % 7 === 0).collect().toSeq
+      .map(r => (r.getLong(0), r.getSeq[Double](1))).toDF("id", "v")
+    // the control: spark.read's inference of the same table is a job
+    // outside any SQL execution
+    val (_, readJobs) = jobsDuring(spark.read.parquet(s"$dir/assigned"), outsideSql = true)
+    assert(readJobs >= 1, "the detector must see spark.read's footer job")
+    val (top, metaJobs) = jobsDuring(
+      Similarity.ivfTopKFromIndex(queries, dir, "id", "v", k = 3), outsideSql = true)
+    assert(metaJobs == 0, s"the probe frame scheduled $metaJobs metadata job(s)")
+    assert(top.select("query_id").distinct().count() == queries.count())
+  }
+
   test("PathSigCache is BOUNDED: LRU-evicts past its cap (r18, " +
       "VERDICT r17 #7 — the r17 level-count map grew one entry per " +
       "path forever)") {
