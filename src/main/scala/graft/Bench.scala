@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.lang.management.ManagementFactory
 import java.util.Locale
 import scala.jdk.CollectionConverters._
@@ -106,6 +105,36 @@ object Bench {
       } catch { case _: Throwable => None }
     }
 
+  /** SPARK_GRAFT_ONLY=q1,q2: the declared queries a Bench or Verify
+    * run restricts itself to; None runs all. Unknown names abort: a
+    * typo'd ONLY must not masquerade as an ultra-fast green run
+    * (ADVICE r2). */
+  private[graft] def onlyQueries(tool: String): Option[Set[String]] = {
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    only.foreach { o =>
+      val unknown = o.diff(SparkEntry.queries.keySet)
+      if (unknown.nonEmpty) {
+        System.err.println(s"[$tool] unknown SPARK_GRAFT_ONLY names: ${unknown.mkString(",")}")
+        sys.exit(2)
+      }
+    }
+    only
+  }
+
+  /** A JSON string literal: backslash, quote and ALL control chars
+    * (< 0x20) escaped — a tab or CR in hand-written oracle SQL would
+    * otherwise make the oracle checker's json.load fail. */
+  private[graft] def jstr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   private final case class Snap(
       compileMs: Long, gcMs: Long, loadedClasses: Long,
       codeCacheUsedMb: Long, metaspaceUsedMb: Long, heapUsedMb: Long,
@@ -168,7 +197,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", DefaultSfDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_AQE=off benches with adaptive execution disabled —
     // the plan-shape sensitivity probe (VERDICT r9 #8): a suite whose
     // total collapses without AQE was leaning on runtime re-planning
@@ -182,24 +210,10 @@ object Bench {
         System.err.println(s"[bench] SPARK_GRAFT_AQE must be on|off, got: $other")
         sys.exit(2); false
     }
-    // Recommended dials (hash-agg fallback threshold DERIVED from this
-    // JVM's heap and the session's task slots, page size, map-key
-    // policy) come from the ONE shared helper — r17, VERDICT r16
-    // missing #1: Bench/Verify and production users get the same
-    // measured plans from the same call.
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.adaptive.enabled", aqe.toString)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // the tool mains' one session (GraftConf.localSession), with
     // RAM-backed shuffle dirs at driver-testdata scale (see localDirFor)
-    val builder = localDirFor(sfDir)
-      .fold(builder0)(d => builder0.config("spark.local.dir", d))
-    val spark = GraftConf.recommended(builder, taskSlots = cpus.toInt)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftConf.localSession(localDirFor(sfDir),
+      "spark.sql.adaptive.enabled" -> aqe.toString)
     // Per-query SCHEDULED-JOB counter (r18, VERDICT r17 #1 done-bar:
     // per-lifecycle job counts land in the evidence sidecar). Listener
     // events are async but job-start is enqueued synchronously at
@@ -214,17 +228,7 @@ object Bench {
           jobCount.incrementAndGet(); ()
         }
       })
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // Unknown names abort: a typo'd ONLY must not masquerade as an
-    // ultra-fast green run (ADVICE r2).
-    only.foreach { o =>
-      val unknown = o.diff(SparkEntry.queries.keySet)
-      if (unknown.nonEmpty) {
-        System.err.println(s"[bench] unknown SPARK_GRAFT_ONLY names: ${unknown.mkString(",")}")
-        sys.exit(2)
-      }
-    }
+    val only = onlyQueries("bench")
     val ordered = sys.env.getOrElse("SPARK_GRAFT_ORDER", "declared") match {
       case "reverse" => SparkEntry.queryOrder.reverse
       case "name"    => SparkEntry.queryOrder.sorted
@@ -344,13 +348,6 @@ object Bench {
       System.err.println(s"[bench] passQuality ${passQuality.last}")
       if (contaminated && planned < maxPasses) planned += 1
     }
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"'  => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
     val qs = best.map { case (k, v) => jstr(k) + ":" + fmt(v) }
       .mkString("{", ",", "}")
     val cpuQs = bestCpu.map { case (k, v) => jstr(k) + ":" + fmt(v) }

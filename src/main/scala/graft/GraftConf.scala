@@ -110,6 +110,30 @@ object GraftConf {
       // measured as seconds of SYSTEM time per window query (r3)
       .config("spark.buffer.pageSize", "4m")
 
+  /** The local session every tool main (Bench, Verify, JobCensus,
+    * ScaleUp) runs in: `local[SPARK_GRAFT_CPUS]` (default 4) with as
+    * many shuffle partitions, UTC, no UI, the [[recommended]] dials,
+    * log level WARN, and `spark.local.dir` at `localDir` when given.
+    * `extra` confs apply last. */
+  def localSession(localDir: Option[String],
+      extra: (String, String)*): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val base = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      // Defensive: older testdata wrote events.ts as timestamp[ns];
+      // keep the legacy flag so Tables.events' Long-nanos branch still
+      // works if the generator flips back (current data is timestamp[us]).
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val builder = (localDir.map("spark.local.dir" -> _) ++ extra)
+      .foldLeft(base) { case (b, (k, v)) => b.config(k, v) }
+    val spark = recommended(builder, taskSlots = cpus.toInt).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Apply the RUNTIME-settable recommended dials to a LIVE session
     * (the fallback threshold is a session SQL conf). Heap and slots
     * are derived from the session itself. Returns the session. */

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import java.util.Locale
 import scala.collection.mutable
 
@@ -12,7 +11,7 @@ import scala.collection.mutable
   * attributable line by line. Measurement tooling only: never touches
   * query code, never used by Bench/Verify.
   *
-  * Usage: SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
+  * Usage: SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=4 \
   *   sbt "runMain graft.JobCensus q_knn_index [q_more ...]"
   */
 object JobCensus {
@@ -22,19 +21,7 @@ object JobCensus {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: JobCensus <queryName> [more...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/graft-bench-local"))
-    val spark = GraftConf.recommended(builder, taskSlots = cpus.toInt)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftConf.localSession(Bench.localDirFor(sfDir))
     val rows = mutable.ArrayBuffer.empty[JobRow]
     val byId = mutable.HashMap.empty[Int, JobRow]
     val lock = new Object

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-calibration data generator (VERDICT r6 item 6).
@@ -25,15 +25,8 @@ object ScaleUp {
     val Array(inDir, outDir, factorStr) = args
     val factor = factorStr.toInt
     require(factor >= 2, "factor must be >= 2")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // shuffle stays on disk: a scaled copy's shuffle is GBs
+    val spark = GraftConf.localSession(localDir = None)
 
     def in(name: String) = spark.read.parquet(s"$inDir/$name.parquet")
     def out(df: DataFrame, name: String, parts: Int): Unit =

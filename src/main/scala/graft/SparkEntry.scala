@@ -50,7 +50,8 @@ object SparkEntry {
     * Blocking=false: the async block drop never gates the caller. */
   def releasePins(): Unit = pinned.synchronized {
     pinned.foreach { df =>
-      try df.unpersist(false) catch { case _: Throwable => () }
+      try df.unpersist(false)
+      catch { case scala.util.control.NonFatal(_) => () }
     }
     pinned.clear()
   }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,38 +11,14 @@ object Verify {
     // runs at an sf whose dial implies another depth. Bench and
     // production runs never set this.
     sys.props("graft.verifyContext") = "1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // shared recommended dials (derived hash-agg threshold, page size,
-    // map-key policy) — see GraftConf (r17, VERDICT r16 missing #1)
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Defensive: older testdata wrote events.ts as timestamp[ns];
-      // keep the legacy flag so Tables.events' Long-nanos branch still
-      // works if the generator flips back (current data is timestamp[us]).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     // RAM-backed shuffle dirs at driver-testdata scale (r17; see
     // Bench.localDirFor — drops ~16 s/query of shuffle-file kernel time)
-    val builder = Bench.localDirFor(sfDir)
-      .fold(builder0)(d => builder0.config("spark.local.dir", d))
-    val spark = GraftConf.recommended(builder, taskSlots = cpus.toInt)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftConf.localSession(Bench.localDirFor(sfDir))
     new java.io.File(outDir).mkdirs()
     // Iteration aid, mirroring Bench: restrict to named queries (both
     // the parquet dumps and the oracle manifest, so check_oracle.py
-    // sees a consistent subset). Unknown names abort.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { o =>
-      val unknown = o.diff(SparkEntry.queries.keySet)
-      if (unknown.nonEmpty) {
-        System.err.println(s"[verify] unknown SPARK_GRAFT_ONLY names: ${unknown.mkString(",")}")
-        sys.exit(2)
-      }
-    }
+    // sees a consistent subset).
+    val only = Bench.onlyQueries("verify")
     def selected(name: String): Boolean = only.forall(_.contains(name))
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -55,20 +30,9 @@ object Verify {
       // VERDICT r17 #5): blocks must not linger across queries
       finally SparkEntry.releasePins()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Bench.jstr(k)}: ${Bench.jstr(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -1,6 +1,5 @@
 package graft.fs
 
-import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths, StandardCopyOption}
 import java.sql.Timestamp
 import java.util.UUID
 
@@ -12,8 +11,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * transforms over a versioned catalog directory.
   *
   * Storage: `root/features/v_<n>/` + `root/groups/v_<n>/` parquet dirs;
-  * every mutation writes a fresh versioned dir and flips a `_CURRENT`
-  * pointer file (atomic move). No Delta/Iceberg on the offline classpath,
+  * every mutation writes a fresh versioned dir and flips the
+  * [[VersionPointer]]. No Delta/Iceberg on the offline classpath,
   * so versioning is hand-rolled; a `_LOCK` file serializes the
   * read-modify-write across processes on a shared filesystem (the
   * reference's SQLite writer lock, feature_store.py:147-150, played the
@@ -95,13 +94,8 @@ final class FeatureCatalog(val spark: SparkSession, val root: String,
 
   // ---- versioned-dir plumbing -------------------------------------------
 
-  private def currentPtr(dir: String): Path = Paths.get(dir, "_CURRENT")
-
-  private def currentVersion(dir: String): Option[Int] = {
-    val p = currentPtr(dir)
-    if (Files.exists(p)) Some(new String(Files.readAllBytes(p)).trim.toInt)
-    else None
-  }
+  private def currentVersion(dir: String): Option[Int] =
+    VersionPointer.current(spark, dir)
 
   /** Read the current table version, forward-migrating old on-disk
     * schemas: columns added to the model since the catalog was written
@@ -141,27 +135,13 @@ final class FeatureCatalog(val spark: SparkSession, val root: String,
 
   /** Catalog versions still readable under `dir` (every mutation leaves
     * its predecessor's `v_<n>` directory in place). */
-  private def versionsOf(dir: String): Seq[Int] = {
-    val d = Paths.get(dir)
-    if (!Files.isDirectory(d)) Seq.empty
-    else {
-      val it = Files.list(d).iterator()
-      val vs = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-        .map(_.getFileName.toString)
-        .collect { case s if s.startsWith("v_") => s.stripPrefix("v_").toInt }
-        .toSeq
-      vs.sorted
-    }
-  }
+  private def versionsOf(dir: String): Seq[Int] =
+    VersionPointer.versions(spark, dir)
 
   private def writeTable[T](dir: String, ds: Dataset[T]): Unit = {
     val next = currentVersion(dir).getOrElse(-1) + 1
     ds.coalesce(1).write.mode("overwrite").parquet(s"$dir/v_$next")
-    val tmp = Paths.get(dir, s"_CURRENT.tmp$next")
-    Files.createDirectories(Paths.get(dir))
-    Files.write(tmp, next.toString.getBytes)
-    Files.move(tmp, currentPtr(dir), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    VersionPointer.publish(spark, dir, next)
   }
 
   /** Serialize a catalog read-modify-write: without it two writers can

@@ -257,21 +257,15 @@ object Dedup {
     * band join + candidate verify); the corpus TEXT is touched only
     * for candidate ids.
     *
-    * WRITE CONTRACT (upgraded r12): band rows land under
-    * `bands/batch_id=<id>` (build = `batch_id=-1`) and an append
-    * OVERWRITES its own partition — IDEMPOTENT per batchId, the
-    * span/keyword-index contract (a duplicate would anyway only
-    * duplicate CANDIDATES — the verify dedups pairs — but the replay
-    * now wastes no work either). Distinct batchIds are the caller's
-    * exactly-once sequencing. */
+    * Band rows land under `bands/batch_id=<id>` per the
+    * [[IndexLayout]] write contract. */
   def buildMinhashIndex(corpus: DataFrame, textCol: String, idCol: String,
       indexDir: String, shingleN: Int = 3, bands: Int = 4,
       rows: Int = 4): Unit = {
     val spark = corpus.sparkSession
-    import spark.implicits._
     IndexLayout.clear(spark, s"$indexDir/bands")
-    Seq((shingleN, bands, rows)).toDF("shingle_n", "bands", "rows")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/meta")
+    IndexLayout.writeMeta(spark, indexDir,
+      Seq("shingle_n" -> shingleN, "bands" -> bands, "rows" -> rows))
     bandRows(corpus, textCol, idCol, shingleN, bands, rows)
       .write.mode("overwrite").parquet(s"$indexDir/bands/batch_id=-1")
   }
@@ -282,11 +276,8 @@ object Dedup {
     * idempotent per `batchId`. */
   def appendToMinhashIndex(batch: DataFrame, textCol: String,
       idCol: String, indexDir: String, batchId: Long): Unit = {
-    require(batchId >= 0, s"appendToMinhashIndex: batchId=$batchId " +
-      "(negative ids are reserved for the build/compact base)")
-    // recover-before-write: see appendToSpanIndex
-    IndexLayout.recoverCompact(batch.sparkSession, indexDir)
-    IndexLayout.recoverCompact(batch.sparkSession, s"$indexDir/bands")
+    IndexLayout.beginAppend(batch.sparkSession, indexDir, Seq("bands"),
+      batchId, "appendToMinhashIndex")
     val (shingleN, bands, rows) = minhashIndexMeta(batch.sparkSession, indexDir)
     bandRows(batch, textCol, idCol, shingleN, bands, rows)
       .write.mode("overwrite").parquet(s"$indexDir/bands/batch_id=$batchId")
@@ -294,16 +285,10 @@ object Dedup {
 
   private[graft] def minhashIndexMeta(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): (Int, Int, Int) = {
-    // cached on the meta files' listing signature (r18, VERDICT r17
-    // #1): the re-read was one scheduled job per append/gate call
-    val m = graft.fs.PathSigCache.cached(spark, s"$indexDir/meta",
-        "minhash_meta") {
-      ParquetDir.read(spark, s"$indexDir/meta")
-        .select(col("shingle_n"), col("bands"), col("rows"))
-        .limit(2).collect() // bounded: meta is one pinned-params row
-    }
-    require(m.length == 1, s"minhash index $indexDir: malformed meta")
-    (m(0).getInt(0), m(0).getInt(1), m(0).getInt(2))
+    val m = IndexLayout.readMeta(spark, indexDir, "minhash index")
+      .getOrElse(throw new IllegalArgumentException(
+        s"minhash index $indexDir: no meta table"))
+    (m.required("shingle_n"), m.required("bands"), m.required("rows"))
   }
 
   /** Ingest-time near-dup gate against a PERSISTED band index — the
@@ -688,22 +673,7 @@ object Dedup {
     * in [[spanDupStats]]. Probes sum the deltas per hash
     * ([[spanDupStatsAgainst]]), so append never needs
     * read-modify-write; [[compactSpanIndex]] folds the deltas.
-    *
-    * WRITE CONTRACT (upgraded r12, closing the ADVICE r11 replay
-    * hole): an append OVERWRITES its own `batch_id` partition, so a
-    * replayed batch (at-least-once foreachBatch delivery) replaces
-    * its previous deltas instead of double-counting them — append is
-    * IDEMPOTENT per batchId. Distinct batchIds remain the caller's
-    * exactly-once sequencing (two writers sharing an id lose one
-    * write); concurrent appends under DIFFERENT ids are safe by
-    * partition isolation AGAINST EACH OTHER — but never against a
-    * live compact/rebuild (ADVICE r12): every append runs
-    * recover-before-write, which DELETES an unmarked in-flight stage,
-    * so an append racing a compactor destroys the compactor's staged
-    * fold. Quiescence between appends and maintenance is therefore
-    * part of the append contract too, not only the compact side's;
-    * [[IndexLayout.locked]] is the opt-in cross-process guard — wrap
-    * BOTH paths in it. */
+    * Writes follow the [[IndexLayout]] write contract. */
   def buildSpanIndex(corpus: DataFrame, textCol: String, idCol: String,
       k: Int, indexDir: String): Unit = {
     IndexLayout.clear(corpus.sparkSession, s"$indexDir/spans")
@@ -715,17 +685,11 @@ object Dedup {
     * [[buildSpanIndex]] index — O(batch spans), never a corpus
     * re-hash, idempotent per `batchId` (the write lands in — and a
     * replay overwrites — `spans/batch_id=<batchId>`). See
-    * [[buildSpanIndex]] for the delta/compaction/write contracts. */
+    * [[buildSpanIndex]] for the delta/compaction contracts. */
   def appendToSpanIndex(batch: DataFrame, textCol: String, idCol: String,
       k: Int, indexDir: String, batchId: Long): Unit = {
-    require(batchId >= 0, s"appendToSpanIndex: batchId=$batchId " +
-      "(negative ids are reserved for the build/compact base)")
-    // every write op recovers first (the RecordLog discipline): after
-    // a MID-SWAP compact crash the live table is missing, and an
-    // append that recreated it would doom the staged corpus to the
-    // stale-stage discard on the next maintenance run
-    IndexLayout.recoverCompact(batch.sparkSession, indexDir)
-    IndexLayout.recoverCompact(batch.sparkSession, s"$indexDir/spans")
+    IndexLayout.beginAppend(batch.sparkSession, indexDir, Seq("spans"),
+      batchId, "appendToSpanIndex")
     spanIndexDelta(batch, textCol, idCol, k)
       .write.mode("overwrite").parquet(s"$indexDir/spans/batch_id=$batchId")
   }

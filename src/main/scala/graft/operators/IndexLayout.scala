@@ -1,14 +1,36 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.fs.ParquetDir
 
-/** Shared filesystem plumbing for the persisted-index family's
-  * hive-partitioned delta layout (`<table>/batch_id=<id>` — see
-  * [[Dedup.buildSpanIndex]] for the write contract it carries).
-  * Centralized so every index clears/lists through one audited path
-  * rather than five hand-rolled Hadoop snippets. */
+/** The persisted-index families' delta layout, owned here: every
+  * span, MinHash, keyword, IVF, PQ and k-NN graph table is a
+  * hive-partitioned `<indexDir>/<table>/batch_id=<id>` dir, and every
+  * family clears, appends, compacts, rebuilds and pins its parameters
+  * through this one object.
+  *
+  * WRITE CONTRACT: a build writes the base under `batch_id=-1`
+  * (negative ids are the build/compact base's), and an append
+  * OVERWRITES its own `batch_id=<batchId>` partition, so a replayed
+  * batch (at-least-once foreachBatch delivery) replaces its previous
+  * rows instead of double-counting them — append is IDEMPOTENT per
+  * batchId. Distinct batchIds remain the caller's exactly-once
+  * sequencing (two writers sharing an id lose one write); concurrent
+  * appends under DIFFERENT ids are safe by partition isolation
+  * against each other — but never against a live compact/rebuild:
+  * every append runs [[beginAppend]]'s recover-before-write, which
+  * DELETES an unmarked in-flight stage, so an append racing a
+  * compactor destroys the compactor's staged fold. Quiescence between
+  * appends and maintenance is therefore part of the append contract
+  * too, not only the compact side's; [[locked]] is the opt-in
+  * cross-process guard — wrap BOTH paths in it.
+  *
+  * Pinned parameters (hash family, dials, caps) live in a one-row
+  * `<indexDir>/meta` table ([[writeMeta]] / [[readMeta]]), so appends,
+  * probes and maintenance run under the INDEX's parameters, never a
+  * caller's. */
 private[graft] object IndexLayout {
 
   /** Recursively delete a table directory (no-op when absent) — the
@@ -19,6 +41,70 @@ private[graft] object IndexLayout {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) fs.delete(p, true)
+  }
+
+  /** The preamble every family's append runs before it writes:
+    * reject a reserved batchId, then recover the index-level stage
+    * and each of `tables`' stages, in that order. Recover-before-write
+    * is the [[graft.fs.RecordLog]] discipline: after a MID-SWAP
+    * compact crash the live table is missing, and an append that
+    * recreated it would doom the staged corpus to the stale-stage
+    * discard on the next maintenance run ([[recoverCompact]]). */
+  def beginAppend(spark: SparkSession, indexDir: String,
+      tables: Seq[String], batchId: Long, caller: String): Unit = {
+    require(batchId >= 0, s"$caller: batchId=$batchId " +
+      "(negative ids are reserved for the build/compact base)")
+    recoverCompact(spark, indexDir)
+    tables.foreach(t => recoverCompact(spark, s"$indexDir/$t"))
+  }
+
+  /** Write an index's one-row pinned-params `meta` table, columns in
+    * order: an `Int` value is an int column, a `Long` a long one. */
+  def writeMeta(spark: SparkSession, indexDir: String,
+      cols: Seq[(String, Any)]): Unit = {
+    val schema = StructType(cols.map {
+      case (name, _: Int)  => StructField(name, IntegerType, nullable = false)
+      case (name, _: Long) => StructField(name, LongType, nullable = false)
+      case (name, v) => throw new IllegalArgumentException(
+        s"meta column $name: unsupported value $v")
+    })
+    spark.createDataFrame(java.util.List.of(Row.fromSeq(cols.map(_._2))), schema)
+      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/meta")
+  }
+
+  /** An index's pinned-params row, by column name; None when the
+    * index has no `meta` dir (an uncapped keyword index, or an index
+    * older than its family's meta). One bounded read, memoized in
+    * [[graft.fs.PathSigCache]] on the meta dir's listing signature: a
+    * rebuild rewrites the meta files and forces one fresh read. A
+    * `meta` that is not exactly one row fails loudly, naming `who`. */
+  def readMeta(spark: SparkSession, indexDir: String,
+      who: String): Option[Meta] = {
+    val dir = s"$indexDir/meta"
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files =
+      try graft.fs.PathSigCache.walk(fs, p)
+      catch { case _: java.io.FileNotFoundException => return None }
+    val (cols, rows) = graft.fs.PathSigCache.cachedAt(dir, "meta",
+        graft.fs.PathSigCache.signature(files)) {
+      val df = ParquetDir.read(spark, dir)
+      (df.columns, df.limit(2).collect()) // bounded: one pinned-params row
+    }
+    require(rows.length == 1, s"$who $indexDir: malformed meta")
+    Some(Meta(who, indexDir, cols.zipWithIndex.collect {
+      case (c, i) if !rows(0).isNullAt(i) => c -> rows(0).get(i)
+    }.toMap))
+  }
+
+  /** A [[readMeta]] row; absent and null columns read as None. */
+  final case class Meta(who: String, indexDir: String, values: Map[String, Any]) {
+    def long(name: String): Option[Long] =
+      values.get(name).map(_.asInstanceOf[java.lang.Number].longValue)
+    def int(name: String): Option[Int] = long(name).map(_.toInt)
+    /** A column the family always pins; its absence fails loudly. */
+    def required(name: String): Int = int(name).getOrElse(
+      throw new IllegalArgumentException(s"$who $indexDir: meta missing $name"))
   }
 
   /** Compact one delta table: fold all `batch_id` partitions through

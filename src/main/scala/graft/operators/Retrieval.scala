@@ -122,19 +122,13 @@ object Retrieval {
     * paths (length normalization must not shift because boilerplate
     * terms were pruned).
     *
-    * WRITE CONTRACT (upgraded r12): each build/append lands under its
-    * own `batch_id=<id>` hive partition of all three tables (build =
-    * `batch_id=-1`), and an append OVERWRITES its own partition — so
-    * a retried batch replaces rather than double-counts its
-    * tf/dl/totals deltas: IDEMPOTENT per batchId (the
-    * [[graft.streaming.StreamingFeatures.keywordIndexBatch]]
-    * foreachBatch contract). Distinct batchIds remain the caller's
-    * exactly-once sequencing; [[compactKeywordIndex]] folds the
-    * deltas. */
+    * Each build/append lands under its own `batch_id=<id>` partition
+    * of all three tables per the [[IndexLayout]] write contract, so a
+    * retried batch replaces rather than double-counts its
+    * tf/dl/totals deltas; [[compactKeywordIndex]] folds the deltas. */
   def buildKeywordIndex(docs: DataFrame, idCol: String, textCol: String,
       indexDir: String, maxDf: Option[Long] = None): Unit = {
     val spark = docs.sparkSession
-    import spark.implicits._
     for (t <- Seq("postings", "doclens", "totals", "pruned", "meta"))
       IndexLayout.clear(spark, s"$indexDir/$t")
     // pin the cap: appends and compaction re-apply the INDEX's
@@ -142,9 +136,7 @@ object Retrieval {
     // UNCAPPED index writes no meta at all — absence IS the contract
     // (df is derivable, nothing to re-apply), and the common uncapped
     // build/append path stays free of the meta write/read jobs.
-    maxDf.foreach(cap =>
-      Seq(cap).toDF("max_df")
-        .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/meta"))
+    maxDf.foreach(cap => IndexLayout.writeMeta(spark, indexDir, Seq("max_df" -> cap)))
     writeKeywordIndex(docs, idCol, textCol, indexDir, batchId = -1L,
       maxDf, indexSide = None)
   }
@@ -152,25 +144,11 @@ object Retrieval {
   /** The pinned `maxDf` contract of a [[buildKeywordIndex]] index;
     * None for uncapped indexes (which write no meta — absence is the
     * contract) and for pre-r13 indexes (their build accepted no cap,
-    * so none can be owed). The existence probe is one driver-side FS
-    * call; only a CAPPED index pays the meta read job. */
+    * so none can be owed). Only a CAPPED index pays the meta read job. */
   private[graft] def keywordIndexMaxDf(
       spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Option[Long] = {
-    val metaPath = new org.apache.hadoop.fs.Path(s"$indexDir/meta")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(metaPath)) return None
-    // cached on the meta files' listing signature (r18, VERDICT r17
-    // #1): the re-read was one scheduled job per append/search call
-    val m = graft.fs.PathSigCache.cached(spark, s"$indexDir/meta",
-        "kw_max_df") {
-      ParquetDir.read(spark, s"$indexDir/meta")
-        .select(col("max_df").cast("long"))
-        .limit(2).collect() // bounded: meta is one pinned-params row
-    }
-    require(m.length == 1, s"keyword index $indexDir: malformed meta")
-    if (m(0).isNullAt(0)) None else Some(m(0).getLong(0))
-  }
+      indexDir: String): Option[Long] =
+    IndexLayout.readMeta(spark, indexDir, "keyword index").flatMap(_.long("max_df"))
 
   /** Append a NEW batch to a persisted [[buildKeywordIndex]] index —
     * O(batch tokens + the batch vocab's pruned index postings), never
@@ -181,15 +159,10 @@ object Retrieval {
     * [[buildKeywordIndex]]). */
   def appendToKeywordIndex(batch: DataFrame, idCol: String,
       textCol: String, indexDir: String, batchId: Long): Unit = {
-    require(batchId >= 0, s"appendToKeywordIndex: batchId=$batchId " +
-      "(negative ids are reserved for the build/compact base)")
-    // recover-before-write (the Dedup.appendToSpanIndex rationale):
-    // an append after a mid-swap compact crash must finish the swap,
-    // not recreate a live table that dooms the staged corpus
     val spark = batch.sparkSession
-    IndexLayout.recoverCompact(spark, indexDir)
-    Seq("postings", "doclens", "totals", "pruned").foreach(t =>
-      IndexLayout.recoverCompact(spark, s"$indexDir/$t"))
+    IndexLayout.beginAppend(spark, indexDir,
+      Seq("postings", "doclens", "totals", "pruned"), batchId,
+      "appendToKeywordIndex")
     writeKeywordIndex(batch, idCol, textCol, indexDir, batchId,
       keywordIndexMaxDf(spark, indexDir), indexSide = Some(batchId))
   }

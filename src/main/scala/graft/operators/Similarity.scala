@@ -1050,24 +1050,12 @@ object Similarity {
     // independent writes overlap (r18, guide §2.6): distinct paths,
     // the tiny bounded tables backfill the big assigned write's tail
     IndexLayout.runParallel(
-      () => writeMeta(spark, indexDir,
+      () => IndexLayout.writeMeta(spark, indexDir,
         Seq("k" -> k, "max_cell" -> maxCell) ++ sizing.pins),
       () => writeQuantizer(spark, indexDir, cent),
       () => IndexLayout.clear(spark, s"$indexDir/graph"),
       () => writeAssigned(spark, indexDir, assigned))
     writeKnnGraphBase(spark, indexDir, k, maxCell)
-  }
-
-  /** The one-row pinned-params `meta` table, columns in order. */
-  private def writeMeta(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, cols: Seq[(String, Int)]): Unit = {
-    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
-    val schema = StructType(cols.map { case (name, _) =>
-      StructField(name, IntegerType, nullable = false) })
-    spark.createDataFrame(
-        java.util.List.of(org.apache.spark.sql.Row.fromSeq(cols.map(_._2))),
-        schema)
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/meta")
   }
 
   /** Persist a trained quantizer: the coarse level at `centroids`
@@ -1118,38 +1106,6 @@ object Similarity {
       .write.mode("overwrite").parquet(s"$indexDir/graph/batch_id=-1")
   }
 
-  /** One CACHED bounded read of a persisted index's one-row meta
-    * table — (columns, rows) keyed on the meta dir's listing
-    * signature (r18, VERDICT r17 #1: every meta accessor was a
-    * scheduled Spark job per append/probe/serve/maintain call — a
-    * lifecycle re-read the pinned params up to 7 times; driver
-    * round-trips do not shrink with cluster size). A rebuild rewrites
-    * the meta files and forces one fresh read
-    * ([[graft.fs.PathSigCache]]). */
-  private def metaTable(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, who: String)
-      : (Array[String], Array[org.apache.spark.sql.Row]) = {
-    val dir = s"$indexDir/meta"
-    val t = graft.fs.PathSigCache.cached(spark, dir, "meta") {
-      val df = ParquetDir.read(spark, dir)
-      (df.columns, df.limit(2).collect()) // bounded: one pinned-params row
-    }
-    require(t._2.length == 1, s"$who $indexDir: malformed meta")
-    t
-  }
-
-  /** Named int column of a [[metaTable]] row; None when the column is
-    * absent (absence marks the family) or null. */
-  private def metaInt(t: (Array[String], Array[org.apache.spark.sql.Row]),
-      name: String): Option[Int] = {
-    val i = t._1.indexOf(name)
-    if (i < 0 || t._2(0).isNullAt(i)) None
-    else Some(t._2(0).get(i) match {
-      case n: java.lang.Number => n.intValue()
-      case other => other.toString.toInt
-    })
-  }
-
   /** The sizing policy a persisted IVF / k-NN graph index pins — the
     * one reader of its meta's family marker columns: `occupancy` +
     * `branch` pin a [[Sizing.Tree]], `occupancy` alone a
@@ -1158,8 +1114,9 @@ object Similarity {
     * `minOccupancy`. */
   private def indexSizing(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, who: String, minOccupancy: Int): Sizing = {
-    val t = metaTable(spark, indexDir, who)
-    (metaInt(t, "occupancy"), metaInt(t, "branch")) match {
+    val m = IndexLayout.readMeta(spark, indexDir, who).getOrElse(
+      throw new IllegalArgumentException(s"$who $indexDir: no meta table"))
+    (m.int("occupancy"), m.int("branch")) match {
       case (Some(occ), Some(branch)) => Sizing.Tree(occ, branch)
       case (Some(occ), None) => Sizing.TwoLevel(occ)
       case _ => Sizing.Balanced(minOccupancy)
@@ -1331,15 +1288,14 @@ object Similarity {
   }
 
   /** (k, maxCell) pinned at [[buildKnnGraphIndex]] time — appends and
-    * serves fold under the INDEX's dials, never the caller's. Cached
-    * on the meta files' listing signature ([[metaTable]]). */
+    * serves fold under the INDEX's dials, never the caller's
+    * ([[IndexLayout.readMeta]]). */
   private def knnGraphIndexMeta(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): (Int, Int) = {
-    val t = metaTable(spark, indexDir, "knn graph index")
-    def req(name: String): Int = metaInt(t, name).getOrElse(
-      throw new IllegalArgumentException(
-        s"knn graph index $indexDir: meta missing $name"))
-    (req("k"), req("max_cell"))
+    val m = IndexLayout.readMeta(spark, indexDir, "knn graph index")
+      .getOrElse(throw new IllegalArgumentException(
+        s"knn graph index $indexDir: no meta table"))
+    (m.required("k"), m.required("max_cell"))
   }
 
   /** Incremental k-NN graph refresh against the PERSISTED index (r13,
@@ -1371,13 +1327,9 @@ object Similarity {
     * occupancy, retrain offline ([[rebuildKnnGraphIndex]]). */
   def appendToKnnGraphIndex(batch: DataFrame, idCol: String,
       vecCol: String, indexDir: String, batchId: Long): Unit = {
-    require(batchId >= 0, s"appendToKnnGraphIndex: batchId=$batchId " +
-      "(negative ids are reserved for the build/compact base)")
     val spark = batch.sparkSession
-    // recover-before-write: see Dedup.appendToSpanIndex
-    IndexLayout.recoverCompact(spark, indexDir)
-    Seq("assigned", "graph").foreach(t =>
-      IndexLayout.recoverCompact(spark, s"$indexDir/$t"))
+    IndexLayout.beginAppend(spark, indexDir, Seq("assigned", "graph"),
+      batchId, "appendToKnnGraphIndex")
     val (k, _) = knnGraphIndexMeta(spark, indexDir)
     val (b, members0) = knnGraphIndexParts(batch, indexDir, idCol,
       vecCol, excludeBatchId = Some(batchId))
@@ -1666,7 +1618,7 @@ object Similarity {
     // thresholds or rebuild it under different dials
     // independent writes overlap (r18, guide §2.6): distinct paths
     IndexLayout.runParallel(
-      () => writeMeta(spark, indexDir, Seq("max_cell" -> maxCell,
+      () => IndexLayout.writeMeta(spark, indexDir, Seq("max_cell" -> maxCell,
         "min_occupancy" -> sizing.minOccupancy) ++ sizing.pins),
       () => writeQuantizer(spark, indexDir, cent),
       () => writeAssigned(spark, indexDir, assigned))
@@ -1689,22 +1641,15 @@ object Similarity {
     * (watch cell occupancy; `Guards.oversizedBuckets` over the
     * assigned table is the monitor) until the next offline retrain.
     *
-    * WRITE CONTRACT (upgraded r12, was ADVICE r9's named remedy): the
-    * batch's rows land under `assigned/batch_id=<id>/cell=<c>` and a
-    * replay OVERWRITES its own `batch_id` subtree — IDEMPOTENT per
-    * batchId, no double-inserted neighbors; a mid-write failure is
-    * healed by the replay's overwrite. Distinct batchIds remain the
-    * caller's exactly-once sequencing. Probes discover (batch_id,
-    * cell) as nested partition columns, so cell partition PRUNING is
-    * unchanged. */
+    * The batch's rows land under `assigned/batch_id=<id>/cell=<c>`
+    * per the [[IndexLayout]] write contract; probes discover
+    * (batch_id, cell) as nested partition columns, so cell partition
+    * PRUNING is unchanged. */
   def appendToIvfIndex(batch: DataFrame, idCol: String, vecCol: String,
       indexDir: String, batchId: Long): Unit = {
-    require(batchId >= 0, s"appendToIvfIndex: batchId=$batchId " +
-      "(negative ids are reserved for the build/compact base)")
     val spark = batch.sparkSession
-    // recover-before-write: see Dedup.appendToSpanIndex
-    IndexLayout.recoverCompact(spark, indexDir)
-    IndexLayout.recoverCompact(spark, s"$indexDir/assigned")
+    IndexLayout.beginAppend(spark, indexDir, Seq("assigned"), batchId,
+      "appendToIvfIndex")
     // family-blind assignment (r15, VERDICT r14 #1): the batch's cell
     // comes from the index's OWN frozen quantizer — flat literal
     // argmax, or the persisted level walk for a `Levels` index — via
@@ -1825,20 +1770,14 @@ object Similarity {
   private[graft] def ivfIndexMeta(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): (Int, Int) = {
     // NAMED error for a pre-r14 index (r15, ADVICE r14): an index
-    // persisted before meta existed would otherwise die in a raw
-    // path-not-found from the parquet reader — name the cause and the
-    // remedy instead
-    val metaPath = new org.apache.hadoop.fs.Path(s"$indexDir/meta")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(metaPath),
-      s"ivf index $indexDir: no meta table — a pre-r14 index pins no " +
-        "maintenance contract; rebuild it (rebuildIvfIndex) to pin " +
-        "(max_cell, min_occupancy)")
-    val t = metaTable(spark, indexDir, "ivf index")
-    def req(name: String): Int = metaInt(t, name).getOrElse(
+    // persisted before meta existed pins no contract — name the cause
+    // and the remedy
+    val m = IndexLayout.readMeta(spark, indexDir, "ivf index").getOrElse(
       throw new IllegalArgumentException(
-        s"ivf index $indexDir: meta missing $name"))
-    (req("max_cell"), req("min_occupancy"))
+        s"ivf index $indexDir: no meta table — a pre-r14 index pins no " +
+          "maintenance contract; rebuild it (rebuildIvfIndex) to pin " +
+          "(max_cell, min_occupancy)"))
+    (m.required("max_cell"), m.required("min_occupancy"))
   }
 
   /** Per-cell occupancy report over a persisted [[buildIvfIndex]]
@@ -2456,18 +2395,12 @@ object Similarity {
     * under the frozen codebooks until the next offline retrain
     * ([[buildPqIndex]] rebuild).
     *
-    * WRITE CONTRACT (r12, the family contract): the batch's codes
-    * land under `codes/batch_id=<id>` and a replay OVERWRITES its own
-    * partition — IDEMPOTENT per batchId, no double-inserted
-    * neighbors. Distinct batchIds remain the caller's exactly-once
-    * sequencing. */
+    * The batch's codes land under `codes/batch_id=<id>` per the
+    * [[IndexLayout]] write contract. */
   def appendToPqIndex(batch: DataFrame, idCol: String, vecCol: String,
       indexDir: String, batchId: Long): Unit = {
-    require(batchId >= 0, s"appendToPqIndex: batchId=$batchId " +
-      "(negative ids are reserved for the build/compact base)")
-    // recover-before-write: see Dedup.appendToSpanIndex
-    IndexLayout.recoverCompact(batch.sparkSession, indexDir)
-    IndexLayout.recoverCompact(batch.sparkSession, s"$indexDir/codes")
+    IndexLayout.beginAppend(batch.sparkSession, indexDir, Seq("codes"),
+      batchId, "appendToPqIndex")
     val cb = loadCodebooks(batch.sparkSession, indexDir, "appendToPqIndex")
     val m = cb.map(_._1).distinct.length
     val clean = batch.withColumn(idCol,

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.StructType
 
 import org.apache.spark.sql.Row
 
-import graft.fs.ParquetDir
+import graft.fs.{ParquetDir, VersionPointer}
 
 /** Running per-user feature row emitted by
   * [[StreamingFeatures.runningUserFeatures]]. */
@@ -280,6 +280,58 @@ object StreamingFeatures {
     batch.join(dups, col(idCol) === col("__dup_id"), "left_anti")
   }
 
+  /** Whether micro-batch `batchId` closes an `every`-batch cadence
+    * (0 = off): the boundary on which a gate's maintain and compact
+    * hooks run. */
+  private def onCadence(batchId: Long, every: Long): Boolean =
+    every > 0L && batchId >= 0L && (batchId + 1L) % every == 0L
+
+  /** The one body of every persisted-index `foreachBatch` gate below.
+    *
+    *  1. MAINTENANCE: each `(every, hook)` runs when the batch closes
+    *     its cadence ([[onCadence]]), in order — maintain (occupancy
+    *     monitor, locked staged retrain when drifted) before compact
+    *     (fold the per-batch delta partitions into the base before
+    *     the probe's scan becomes a metadata storm), so a
+    *     same-boundary rebuild leaves nothing to fold.
+    *  2. PROBE: `dups` (ids as `__dup_id`, None for a gate without a
+    *     probe) is built after the hooks, and the batch rows it names
+    *     drop by a left-anti join.
+    *  3. APPEND: the survivors are pinned once — the caller's sink
+    *     write and the index append must see the SAME rows (diamond
+    *     DAGs recompute) — then appended under the batch's own
+    *     `batch_id`.
+    * `updateIndex = false` skips steps 1 and 3: the gate only filters.
+    *
+    * REPLAY: foreachBatch is at-least-once — if the sink write fails
+    * after the index append committed, the micro-batch replays
+    * against an index that already holds its own rows, every
+    * previously-kept doc self-matches, and the batch's novel docs are
+    * silently dropped. So every step is keyed by the stable
+    * `batchId`: each hook and probe EXCLUDES the batch's own
+    * `batch_id` partition (a replay sees exactly the index the first
+    * attempt saw; a fold or retrain never moves the prior attempt's
+    * rows into the `batch_id=-1` base, where that exclusion could no
+    * longer hide them), and the append OVERWRITES that partition (no
+    * double-count). Replay is therefore idempotent end to end — same
+    * gate decisions, same survivors, same deltas. Probe results are
+    * invariant under each family's fold, so compaction never changes
+    * a gate decision. */
+  private def gateBatch(batch: DataFrame, idCol: String, batchId: Long,
+      updateIndex: Boolean, hooks: Seq[(Long, () => Any)],
+      dups: => Option[DataFrame])(append: DataFrame => Unit): DataFrame = {
+    if (updateIndex)
+      hooks.foreach { case (every, hook) => if (onCadence(batchId, every)) hook() }
+    val kept = dups.fold(batch)(d =>
+      batch.join(d, col(idCol) === col("__dup_id"), "left_anti"))
+    if (!updateIndex) kept
+    else {
+      val pinned = kept.localCheckpoint(false)
+      append(pinned)
+      pinned
+    }
+  }
+
   /** Streaming ingest SPAN-dup gate (r11) — the `foreachBatch` body
     * that puts the persisted span-hash index
     * ([[graft.operators.Dedup.spanDupStatsAgainst]]) on the ingest
@@ -292,20 +344,9 @@ object StreamingFeatures {
     * whole-doc near-dup, this = substring-level (Lee et al.).
     *
     * Scale contract: the batch pays its own explode+md5; the corpus
-    * rides the probe as stored hashes+counts.
-    *
-    * DELIVERY (r12, closing the ADVICE r11 replay hole): foreachBatch
-    * is at-least-once — if the sink write fails after the index
-    * append committed, the micro-batch REPLAYS against an index that
-    * already holds its own spans, every previously-kept doc
-    * self-matches at dup_ratio 1.0, and the batch's novel docs are
-    * silently dropped. So the gate is keyed by the foreachBatch
-    * `batchId`: the probe EXCLUDES the batch's own `batch_id`
-    * partition (a replay sees exactly the index the first attempt
-    * saw), and the append OVERWRITES that partition (no
-    * double-count). Replay is therefore idempotent end to end —
-    * same gate decisions, same survivors, same deltas — under
-    * foreachBatch's stable-batchId contract. Usage:
+    * rides the probe as stored hashes+counts. Every `compactEvery`
+    * batches the span deltas fold into the base (0 = off). Replay and
+    * cadence: see [[gateBatch]]. Usage:
     * {{{
     * stream.writeStream.foreachBatch { (b, id) =>
     *   StreamingFeatures.spanGateBatch(b, "text", "doc_id", dir, id)
@@ -322,41 +363,21 @@ object StreamingFeatures {
       maxDupRatio: Double = 0.5,
       updateIndex: Boolean = true,
       compactEvery: Long = 0L): DataFrame = {
-    // COMPACTION CADENCE (r15, VERDICT r14 #7): the gate appends one
-    // file set per micro-batch forever — every `compactEvery` batches
-    // fold the accumulated deltas into the batch_id=-1 base before the
-    // probe's scan becomes a metadata storm. Runs BEFORE the batch's
-    // probe/append and EXCLUDES the batch's own batch_id (the
-    // maintainEvery placement, ADVICE r14): a replayed boundary
-    // batch's prior-attempt partition is preserved verbatim — never
-    // folded into the base where the probe's excludeBatchId could no
-    // longer hide it (the batch would self-match at dup_ratio 1.0 and
-    // silently vanish from the sink). Probe sums are associative, so
-    // gate decisions are unchanged by the fold. 0 = off.
-    if (updateIndex && compactEvery > 0L && batchId >= 0L &&
-        (batchId + 1L) % compactEvery == 0L)
-      graft.operators.Dedup.compactSpanIndex(batch.sparkSession,
-        indexDir, excludeBatchId = Some(batchId))
-    val dups = graft.operators.Dedup
-      .spanDupStatsAgainst(batch, textCol, idCol, k, indexDir,
-        excludeBatchId = Some(batchId),
-        // within-batch copies must not ride in together: a span owned
-        // by a LOWER-id batch doc counts as duplicated for the later
-        // doc (keep-first; r12 review fix — the index probe alone
-        // cannot see same-batch duplicates)
-        includeBatchSelf = true)
-      .filter(col("dup_ratio") >= maxDupRatio)
-      .select(col(idCol).as("__dup_id"))
-    val kept = batch.join(dups, col(idCol) === col("__dup_id"), "left_anti")
-    if (!updateIndex) kept
-    else {
-      // pin the survivors once: the caller's sink write and the index
-      // append must see the SAME rows (diamond DAGs recompute)
-      val pinned = kept.localCheckpoint(false)
-      graft.operators.Dedup
-        .appendToSpanIndex(pinned, textCol, idCol, k, indexDir, batchId)
-      pinned
-    }
+    import graft.operators.Dedup
+    gateBatch(batch, idCol, batchId, updateIndex,
+      Seq(compactEvery -> (() => Dedup.compactSpanIndex(batch.sparkSession,
+        indexDir, excludeBatchId = Some(batchId)))),
+      Some(Dedup
+        .spanDupStatsAgainst(batch, textCol, idCol, k, indexDir,
+          excludeBatchId = Some(batchId),
+          // within-batch copies must not ride in together: a span owned
+          // by a LOWER-id batch doc counts as duplicated for the later
+          // doc (keep-first; the index probe alone cannot see
+          // same-batch duplicates)
+          includeBatchSelf = true)
+        .filter(col("dup_ratio") >= maxDupRatio)
+        .select(col(idCol).as("__dup_id"))))(
+      Dedup.appendToSpanIndex(_, textCol, idCol, k, indexDir, batchId))
   }
 
   /** Streaming ingest near-dup gate against the PERSISTED band index
@@ -368,10 +389,7 @@ object StreamingFeatures {
     * batch's own partition so the NEXT micro-batch near-dups against
     * them too. This gives the MinHash family the same closed ingest
     * triangle the span family has (probe → gate → append), with the
-    * same replay contract: the probe EXCLUDES the batch's own
-    * `batch_id` (a replay sees the index the first attempt saw) and
-    * the append OVERWRITES it — idempotent under foreachBatch's
-    * stable-batchId delivery.
+    * same replay and cadence contract ([[gateBatch]]).
     *
     * WITHIN-BATCH duplicates (r12 review fix): the index probe alone
     * cannot see two near-copies arriving in the SAME micro-batch (the
@@ -416,40 +434,26 @@ object StreamingFeatures {
       updateIndex: Boolean = true,
       compactEvery: Long = 0L): DataFrame = {
     import graft.operators.Dedup
-    // compaction cadence (r15, VERDICT r14 #7) — the spanGateBatch
-    // hook: fold the per-batch band partitions into the base every
-    // `compactEvery` micro-batches, BEFORE the probe and EXCLUDING the
-    // batch's own batch_id (a replay's prior-attempt bands stay in
-    // their own partition, visible to neither the fold nor the probe).
-    // Band rows are distinct-preserving under the fold, so candidates
-    // — and gate decisions — are unchanged. 0 = off.
-    if (updateIndex && compactEvery > 0L && batchId >= 0L &&
-        (batchId + 1L) % compactEvery == 0L)
-      Dedup.compactMinhashIndex(batch.sparkSession, indexDir,
-        excludeBatchId = Some(batchId))
-    val idxDups = Dedup
-      .minhashNearDupsAgainstIndex(batch, corpus, textCol, idCol,
-        indexDir, threshold = threshold, excludeBatchId = Some(batchId))
-      .select(col("id_a").as("__dup_id"))
-    // within-batch near-dups under the SAME pinned hash family:
-    // (id_a < id_b) pairs → drop the later id (keep-first)
-    val (shingleN, bands, rows) =
-      Dedup.minhashIndexMeta(batch.sparkSession, indexDir)
-    val selfDups = Dedup
-      .minhashNearDups(batch, textCol, idCol, shingleN, bands, rows,
-        threshold = threshold)
-      .select(col("id_b").as("__dup_id"))
-    val dups = idxDups.unionByName(selfDups).distinct()
-    val kept = batch.join(dups, col(idCol) === col("__dup_id"), "left_anti")
-    if (!updateIndex) kept
-    else {
-      // pin the survivors once: the caller's sink write and the index
-      // append must see the SAME rows (diamond DAGs recompute)
-      val pinned = kept.localCheckpoint(false)
-      graft.operators.Dedup
-        .appendToMinhashIndex(pinned, textCol, idCol, indexDir, batchId)
-      pinned
+    def dups: DataFrame = {
+      val idxDups = Dedup
+        .minhashNearDupsAgainstIndex(batch, corpus, textCol, idCol,
+          indexDir, threshold = threshold, excludeBatchId = Some(batchId))
+        .select(col("id_a").as("__dup_id"))
+      // within-batch near-dups under the SAME pinned hash family:
+      // (id_a < id_b) pairs → drop the later id (keep-first)
+      val (shingleN, bands, rows) =
+        Dedup.minhashIndexMeta(batch.sparkSession, indexDir)
+      val selfDups = Dedup
+        .minhashNearDups(batch, textCol, idCol, shingleN, bands, rows,
+          threshold = threshold)
+        .select(col("id_b").as("__dup_id"))
+      idxDups.unionByName(selfDups).distinct()
     }
+    gateBatch(batch, idCol, batchId, updateIndex,
+      Seq(compactEvery -> (() => Dedup.compactMinhashIndex(
+        batch.sparkSession, indexDir, excludeBatchId = Some(batchId)))),
+      Some(dups))(
+      Dedup.appendToMinhashIndex(_, textCol, idCol, indexDir, batchId))
   }
 
   /** Streaming SEMANTIC ingest gate (r12) — the `foreachBatch` body
@@ -466,16 +470,15 @@ object StreamingFeatures {
     *
     * Scale contract rides [[Similarity.semDedupAgainstIndex]]: the
     * index scan is partition-pruned to the batch's touched cells, the
-    * batch side broadcasts, the corpus never re-clusters. Same replay
-    * contract as the other gates: the probe EXCLUDES the batch's own
-    * `batch_id` partition and the append OVERWRITES it — idempotent
-    * under foreachBatch's stable-batchId delivery. Quantizer drift
-    * (batches far from the training distribution) is the IVF append's
-    * documented trade — and no longer only a doc-comment promise:
-    * pass `maintainEvery = N` and every N micro-batches the gate runs
+    * batch side broadcasts, the corpus never re-clusters. Quantizer
+    * drift (batches far from the training distribution) is the IVF
+    * append's documented trade: pass `maintainEvery = N` and every N
+    * micro-batches the gate runs
     * [[graft.operators.Similarity.maintainIvfIndex]] against the
-    * index's pinned contract (r14, VERDICT r13 #7) — a bounded
-    * monitor job when healthy, a locked staged retrain when drifted.
+    * index's pinned contract — a bounded monitor job when healthy, a
+    * locked staged retrain when drifted. `compactEvery` folds the
+    * assigned partitions (0 = off, both). Replay and cadence: see
+    * [[gateBatch]].
     *
     * BACKING INDEX at scale (r18, VERDICT r17 #9 — posture only,
     * semantics identical through the family-blind dispatch): build
@@ -506,54 +509,20 @@ object StreamingFeatures {
       updateIndex: Boolean = true,
       maintainEvery: Long = 0L,
       compactEvery: Long = 0L): DataFrame = {
-    // MAINTENANCE CADENCE (r14, VERDICT r13 #7; ORDER fixed r15,
-    // ADVICE r14): every `maintainEvery` micro-batches the gate runs
-    // the occupancy monitor against the index's own PINNED contract —
-    // a bounded keyed count when healthy, a locked staged retrain
-    // when the streamed distribution has drifted the frozen quantizer
-    // past its cap. The hook runs BEFORE the batch's probe/append,
-    // and the monitor AND rebuild EXCLUDE the batch's own batch_id:
-    // the r14 after-append placement folded the boundary batch into
-    // the batch_id=-1 base, where a crash before the checkpoint
-    // commit left the REPLAY dedup'ing the batch against its own rows
-    // (sim = 1 ≥ threshold → kept = ∅, the batch silently lost from
-    // the sink). Run first-and-excluding, a replayed boundary batch's
-    // retrain sees exactly what its first attempt saw, the prior
-    // attempt's partition stays hidden from the probe, and the append
-    // overwrite stays idempotent. 0 = off (the caller owns
-    // maintenance).
-    if (updateIndex && maintainEvery > 0L && batchId >= 0L &&
-        (batchId + 1L) % maintainEvery == 0L)
-      graft.operators.Similarity
-        .maintainIvfIndex(batch.sparkSession, indexDir,
-          excludeBatchId = Some(batchId))
-    // compaction cadence (r15, VERDICT r14 #7 extended to this family):
-    // fold the per-batch assigned partitions into the base every
-    // `compactEvery` micro-batches, AFTER a same-boundary maintain (a
-    // rebuild leaves nothing to fold) and BEFORE the probe/append,
-    // EXCLUDING the batch's own batch_id — the preserved prior-attempt
-    // partition keeps the probe exclusion and the overwrite idempotent
-    // on replay. Probe results are fold-invariant (partition pruning
-    // rides the cell layout, which the fold preserves). 0 = off.
-    if (updateIndex && compactEvery > 0L && batchId >= 0L &&
-        (batchId + 1L) % compactEvery == 0L)
-      graft.operators.Similarity.compactIvfIndex(batch.sparkSession,
-        indexDir, excludeBatchId = Some(batchId))
-    val dups = graft.operators.Similarity
-      .semDedupAgainstIndex(batch, indexDir, idCol, vecCol, threshold,
-        maxCell = maxCell, excludeBatchId = Some(batchId))
-      .select(col("id_b").as("__dup_id"))
-      .distinct()
-    val kept = batch.join(dups, col(idCol) === col("__dup_id"), "left_anti")
-    if (!updateIndex) kept
-    else {
-      // pin the survivors once: the caller's sink write and the index
-      // append must see the SAME rows (diamond DAGs recompute)
-      val pinned = kept.localCheckpoint(false)
-      graft.operators.Similarity
-        .appendToIvfIndex(pinned, idCol, vecCol, indexDir, batchId)
-      pinned
-    }
+    import graft.operators.Similarity
+    val spark = batch.sparkSession
+    gateBatch(batch, idCol, batchId, updateIndex,
+      Seq(
+        maintainEvery -> (() => Similarity.maintainIvfIndex(spark, indexDir,
+          excludeBatchId = Some(batchId))),
+        compactEvery -> (() => Similarity.compactIvfIndex(spark, indexDir,
+          excludeBatchId = Some(batchId)))),
+      Some(Similarity
+        .semDedupAgainstIndex(batch, indexDir, idCol, vecCol, threshold,
+          maxCell = maxCell, excludeBatchId = Some(batchId))
+        .select(col("id_b").as("__dup_id"))
+        .distinct()))(
+      Similarity.appendToIvfIndex(_, idCol, vecCol, indexDir, batchId))
   }
 
   /** Streaming keyword-index maintenance (r12, VERDICT r11 #6) — the
@@ -565,14 +534,9 @@ object StreamingFeatures {
     * ([[graft.operators.Retrieval.bm25SearchFromIndex]]) see the new
     * docs from the next read on — df and totals fold from the deltas,
     * so ranking stays consistent with a full rebuild over everything
-    * ingested (the q_bm25_index oracle's invariant).
-    *
-    * DELIVERY: the append OVERWRITES its `batch_id` partition, so an
-    * at-least-once replay replaces — never double-counts — its own
-    * tf/dl/totals deltas: idempotent under foreachBatch's
-    * stable-batchId contract. Unlike [[spanGateBatch]] there is no
-    * probe-before-write here, so no self-match exclusion is needed.
-    * Usage:
+    * ingested (the q_bm25_index oracle's invariant). No probe runs
+    * before the write; replay and the `compactEvery` cadence follow
+    * [[gateBatch]]. Usage:
     * {{{
     * stream.writeStream.foreachBatch { (b, id) =>
     *   StreamingFeatures.keywordIndexBatch(b, "text", "doc_id", dir, id)
@@ -586,24 +550,12 @@ object StreamingFeatures {
       indexDir: String,
       batchId: Long,
       compactEvery: Long = 0L): DataFrame = {
-    // compaction cadence (r15, VERDICT r14 #7): fold the per-batch
-    // postings/doclens/totals deltas into the base every
-    // `compactEvery` micro-batches, BEFORE the batch's append and
-    // EXCLUDING its batch_id — a replay's prior-attempt deltas stay
-    // in their own partition, which the replay's overwrite replaces
-    // (folded into the base they would double-count). df/dl/totals
-    // folds are sum-associative, so probe scores are unchanged.
-    // 0 = off.
-    if (compactEvery > 0L && batchId >= 0L &&
-        (batchId + 1L) % compactEvery == 0L)
-      graft.operators.Retrieval.compactKeywordIndex(batch.sparkSession,
-        indexDir, idCol, excludeBatchId = Some(batchId))
-    // pin once: the index append and the caller's sink write must see
-    // the same rows (diamond DAGs recompute)
-    val pinned = batch.localCheckpoint(false)
-    graft.operators.Retrieval
-      .appendToKeywordIndex(pinned, idCol, textCol, indexDir, batchId)
-    pinned
+    import graft.operators.Retrieval
+    gateBatch(batch, idCol, batchId, updateIndex = true,
+      Seq(compactEvery -> (() => Retrieval.compactKeywordIndex(
+        batch.sparkSession, indexDir, idCol, excludeBatchId = Some(batchId)))),
+      None)(
+      Retrieval.appendToKeywordIndex(_, idCol, textCol, indexDir, batchId))
   }
 
   /** Streaming PQ-index maintenance (r12) — the `foreachBatch` body
@@ -615,11 +567,9 @@ object StreamingFeatures {
     * a corpus re-encode), while the SAME pinned rows return for the
     * caller's sink write. With [[semanticGateBatch]] (IVF),
     * [[keywordIndexBatch]], [[spanGateBatch]] and
-    * [[minhashGateBatch]], every persisted index family now has its
-    * streaming-maintenance member. Replay: the append OVERWRITES its
-    * `batch_id` partition — idempotent under foreachBatch's
-    * stable-batchId delivery; no probe-before-write here, so no
-    * self-match exclusion is needed. */
+    * [[minhashGateBatch]], every persisted index family has its
+    * streaming-maintenance member. No probe runs before the write;
+    * replay and the `compactEvery` cadence follow [[gateBatch]]. */
   def pqIndexBatch(
       batch: DataFrame,
       idCol: String,
@@ -627,22 +577,12 @@ object StreamingFeatures {
       indexDir: String,
       batchId: Long,
       compactEvery: Long = 0L): DataFrame = {
-    // compaction cadence (r15, VERDICT r14 #7): fold the per-batch
-    // code partitions into the base every `compactEvery` micro-batches,
-    // BEFORE the batch's append and EXCLUDING its batch_id (the
-    // keywordIndexBatch rationale — a base-folded prior attempt would
-    // double-count under the replay's overwrite). Codes ride the fold
-    // verbatim, so probes are unchanged. 0 = off.
-    if (compactEvery > 0L && batchId >= 0L &&
-        (batchId + 1L) % compactEvery == 0L)
-      graft.operators.Similarity.compactPqIndex(batch.sparkSession,
-        indexDir, excludeBatchId = Some(batchId))
-    // pin once: the index append and the caller's sink write must see
-    // the same rows (diamond DAGs recompute)
-    val pinned = batch.localCheckpoint(false)
-    graft.operators.Similarity
-      .appendToPqIndex(pinned, idCol, vecCol, indexDir, batchId)
-    pinned
+    import graft.operators.Similarity
+    gateBatch(batch, idCol, batchId, updateIndex = true,
+      Seq(compactEvery -> (() => Similarity.compactPqIndex(
+        batch.sparkSession, indexDir, excludeBatchId = Some(batchId)))),
+      None)(
+      Similarity.appendToPqIndex(_, idCol, vecCol, indexDir, batchId))
   }
 
   /** Streaming k-NN-graph-index maintenance (r13) — the `foreachBatch`
@@ -655,10 +595,10 @@ object StreamingFeatures {
     * #1), and the SAME pinned rows return for the caller's sink
     * write. Serves ([[graft.operators.Similarity.knnGraphFromIndex]])
     * see the new nodes — and existing nodes' updated heaps — from the
-    * next read on. Replay: the append reads the index MINUS its own
-    * `batch_id` and OVERWRITES both its partitions — idempotent under
-    * foreachBatch's stable-batchId delivery; no probe-before-write
-    * gate here, so no self-match exclusion is needed beyond that. */
+    * next read on. `maintainEvery` monitors occupancy against the
+    * index's pinned (k, maxCell) and retrains when drifted;
+    * `compactEvery` folds assigned + graph deltas (0 = off, both).
+    * Replay and cadence: see [[gateBatch]]. */
   def knnGraphIndexBatch(
       batch: DataFrame,
       idCol: String,
@@ -667,37 +607,16 @@ object StreamingFeatures {
       batchId: Long,
       maintainEvery: Long = 0L,
       compactEvery: Long = 0L): DataFrame = {
-    // maintenance cadence (r14, VERDICT r13 #7) — the semanticGateBatch
-    // hook for the graph family: every `maintainEvery` micro-batches,
-    // monitor occupancy against the index's pinned (k, maxCell) and
-    // staged-retrain under the lock when drifted; monitor-only when
-    // healthy, 0 = off. Runs BEFORE the batch's append and EXCLUDES
-    // the batch's own batch_id (r15, ADVICE r14): the r14 after-append
-    // placement folded the boundary batch into the batch_id=-1 base,
-    // so a replay's own append DUPLICATED its members (the append
-    // reads the index minus its batch_id — a base-folded copy is
-    // invisible to that exclusion).
-    if (maintainEvery > 0L && batchId >= 0L &&
-        (batchId + 1L) % maintainEvery == 0L)
-      graft.operators.Similarity
-        .maintainKnnGraphIndex(batch.sparkSession, indexDir,
-          excludeBatchId = Some(batchId))
-    // compaction cadence (r15, VERDICT r14 #7 extended to this
-    // family): fold assigned + graph delta partitions into their
-    // bases every `compactEvery` micro-batches, after a
-    // same-boundary maintain and before the append, excluding the
-    // batch's own batch_id — serve results are fold-invariant by the
-    // heap associativity the fold itself rides. 0 = off.
-    if (compactEvery > 0L && batchId >= 0L &&
-        (batchId + 1L) % compactEvery == 0L)
-      graft.operators.Similarity.compactKnnGraphIndex(
-        batch.sparkSession, indexDir, excludeBatchId = Some(batchId))
-    // pin once: the index append and the caller's sink write must see
-    // the same rows (diamond DAGs recompute)
-    val pinned = batch.localCheckpoint(false)
-    graft.operators.Similarity
-      .appendToKnnGraphIndex(pinned, idCol, vecCol, indexDir, batchId)
-    pinned
+    import graft.operators.Similarity
+    val spark = batch.sparkSession
+    gateBatch(batch, idCol, batchId, updateIndex = true,
+      Seq(
+        maintainEvery -> (() => Similarity.maintainKnnGraphIndex(spark,
+          indexDir, excludeBatchId = Some(batchId))),
+        compactEvery -> (() => Similarity.compactKnnGraphIndex(spark,
+          indexDir, excludeBatchId = Some(batchId)))),
+      None)(
+      Similarity.appendToKnnGraphIndex(_, idCol, vecCol, indexDir, batchId))
   }
 
   def maintainLatest(features: DataFrame, outDir: String,
@@ -718,9 +637,9 @@ object StreamingFeatures {
     * new write commits — a crash in that window would silently reset
     * the serving table to just the replayed batch. So versions are
     * immutable: each epoch writes a fresh `v_<n>` subdirectory and
-    * then atomically swaps the `_CURRENT` pointer file (temp +
-    * ATOMIC_MOVE, the catalog's protocol); readers resolve the pointer
-    * via [[readLatestTable]]. A crash mid-epoch leaves the pointer on
+    * then flips the `_CURRENT` pointer ([[graft.fs.VersionPointer]],
+    * the catalog's protocol); readers resolve the pointer via
+    * [[readLatestTable]]. A crash mid-epoch leaves the pointer on
     * the previous complete version. The predecessor version is kept
     * for in-flight readers; older ones are pruned. */
   def maintainLatestEpoch(batch: DataFrame, outDir: String,
@@ -729,30 +648,21 @@ object StreamingFeatures {
     val spark = batch.sparkSession
     val base = new org.apache.hadoop.fs.Path(outDir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prev = currentVersion(spark, outDir).map(v =>
-      ParquetDir.read(spark, s"$outDir/v_$v"))
+    val cur = VersionPointer.current(spark, outDir)
+    val prev = cur.map(v => ParquetDir.read(spark, s"$outDir/v_$v"))
     val folded = prev match {
       case Some(p) => graft.fs.Serving.refreshLatest(
         p, batch, entityKey, tsCol, tieBreak.map(col))
       case None => graft.fs.Serving.latestAsOf(
         batch, entityKey, tsCol, None, tieBreak.map(col))
     }
-    val next = currentVersion(spark, outDir).getOrElse(-1) + 1
+    val next = cur.getOrElse(-1) + 1
     folded.localCheckpoint(true)
       .write.mode("overwrite").parquet(s"$outDir/v_$next")
-    // atomic pointer swap: readers never see a half-written version,
-    // and the swap itself is ONE overwriting rename — a delete-then-
-    // rename pair would leave a window with no _CURRENT at all, after
-    // which the next epoch would silently reset the table to just its
-    // own batch (ADVICE r6). FileContext.rename(OVERWRITE) throws on
-    // failure instead of returning an ignorable boolean.
-    val tmp = new org.apache.hadoop.fs.Path(base, s"_CURRENT.tmp$next")
-    val out = fs.create(tmp, true)
-    try out.write(next.toString.getBytes("UTF-8")) finally out.close()
-    val cur = new org.apache.hadoop.fs.Path(base, "_CURRENT")
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      base.toUri, spark.sparkContext.hadoopConfiguration)
-    fc.rename(tmp, cur, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    // one overwriting rename: a delete-then-rename pair would leave a
+    // window with no _CURRENT at all, after which the next epoch would
+    // silently reset the table to just its own batch (ADVICE r6)
+    VersionPointer.publish(spark, outDir, next)
     // prune all but the current + predecessor versions, plus any stale
     // pointer temp files a crashed epoch left behind
     fs.listStatus(base).foreach { st =>
@@ -765,24 +675,10 @@ object StreamingFeatures {
     }
   }
 
-  /** The version the `_CURRENT` pointer names, if a complete one exists. */
-  private def currentVersion(spark: SparkSession, outDir: String): Option[Int] = {
-    val cur = new org.apache.hadoop.fs.Path(outDir, "_CURRENT")
-    val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(cur)) None
-    else {
-      val len = fs.getFileStatus(cur).getLen.toInt
-      val buf = new Array[Byte](len)
-      val in = fs.open(cur)
-      try { in.readFully(buf); new String(buf, "UTF-8").trim.toIntOption }
-      finally in.close()
-    }
-  }
-
   /** Read the serving table [[maintainLatest]] maintains (resolves the
     * `_CURRENT` pointer). Empty option = no complete epoch yet. */
   def readLatestTable(spark: SparkSession, outDir: String): Option[DataFrame] =
-    currentVersion(spark, outDir).map(v => ParquetDir.read(spark, s"$outDir/v_$v"))
+    VersionPointer.current(spark, outDir).map(v => ParquetDir.read(spark, s"$outDir/v_$v"))
 
   /** The idempotent per-epoch write, exposed for direct testing (a
     * foreachBatch body re-running with the same epochId must leave the

@@ -620,6 +620,17 @@ class FeatureStoreSpec extends SparkSpec {
     assert(c.features.count() == 2)
   }
 
+  test("a catalog rooted at a file:// URI keeps its _CURRENT pointer under the root") {
+    val dir = tmpDir("uricatalog")
+    val c = new FeatureCatalog(spark, s"file://$dir")
+    c.registerFeature(FeatureDef("age", "user", "int"))
+    c.registerFeature(FeatureDef("income", "user", "float"))
+    assert(c.featureVersions == Seq(0, 1))
+    assert(new java.io.File(s"$dir/features/_CURRENT").isFile)
+    assert(!new java.io.File(s"$dir/features/._CURRENT.crc").exists)
+    assert(c.listFeatures().map(_.name) == Seq("age", "income"))
+  }
+
   test("catalog time travel: every mutation's predecessor stays readable") {
     val c = registered() // three sequential registers → versions 0,1,2
     assert(c.featureVersions == Seq(0, 1, 2))
